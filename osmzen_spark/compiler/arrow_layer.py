@@ -1,8 +1,7 @@
-"""Layer evaluation via the Arrow-batch vectorized compiler
-(compiler/vectorized.py) — ONE mapInArrow stage per layer instead of a
-megabyte Catalyst expression tree.
-
-Pipeline inside the mapper (all NumPy, no per-row Python):
+"""Per-layer compilation for the Arrow-batch vectorized evaluator
+(compiler/vectorized.py): a layer's rules become NumPy batch closures
+that compiler/arrow_multilayer.py runs for every layer inside one
+mapInArrow pass (all NumPy, no per-row Python):
   1. geometry-type gate (np.isin)
   2. first-match: per-rule predicate over still-unmatched rows
      (vectorized; early-exits when every row is matched)
@@ -13,8 +12,8 @@ Pipeline inside the mapper (all NumPy, no per-row Python):
      into typed output arrays
 
 Array-typed emits (mz_networks passthrough) can't be built in NumPy;
-they are added by a tiny Catalyst `when(match_idx.isin(...))` after the
-Arrow stage.
+they are projected from the membership column by a Catalyst
+`CASE WHEN match_idx IN (...)` after the Arrow stage.
 """
 
 from __future__ import annotations
@@ -22,12 +21,9 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osmzen_spark.compiler.vectorized import (
-    BatchContext,
     compile_condition_np,
     compile_num_np,
     compile_value_np,
@@ -115,12 +111,6 @@ _SPARK_TYPES = {
     "boolean": T.BooleanType(),
     "string": T.StringType(),
     "null": T.StringType(),
-}
-_ARROW_TYPES = {
-    "double": pa.float64(),
-    "boolean": pa.bool_(),
-    "string": pa.string(),
-    "null": pa.string(),
 }
 
 
@@ -226,121 +216,3 @@ class ArrowLayerPlan:
             self.emit_plan[key] = m
         self.needed_keys = sorted(keys)
         self.geometry_types = list(layer.geometry_types)
-
-
-def evaluate_layer_arrow(layer, df: DataFrame, zoom: int) -> DataFrame:
-    """Arrow-path equivalent of CompiledLayer.evaluate(); returns the
-    same column shape (id/type/zen_layer/min_zoom/match_idx + emits +
-    passthrough input columns)."""
-    plan = getattr(layer, "_arrow_plan", None)
-    if plan is None:
-        plan = ArrowLayerPlan(layer)
-        layer._arrow_plan = plan
-
-    in_fields = list(df.schema.fields)
-    out_schema = T.StructType(
-        in_fields
-        + [T.StructField("match_idx", T.IntegerType())]
-        + [T.StructField("__emit_min_zoom", T.DoubleType())]
-        + [T.StructField(f"__emit_{k}", _SPARK_TYPES[t]) for k, t in plan.emit_keys]
-    )
-    zoom_gate = float(zoom + 1)
-    geometry_types = plan.geometry_types
-    n_rules = len(plan.preds)
-
-    def mapper(batches):
-        for batch in batches:
-            b = BatchContext(batch, plan.needed_keys, zoom)
-            n = b.n
-            if n == 0:
-                continue
-            gmask = np.isin(b.geom_type(), geometry_types)
-            match = np.full(n, -1, dtype=np.int64)
-            un = gmask.copy()
-            for i, pred in enumerate(plan.preds):
-                if not un.any():
-                    break
-                hit = un & pred(b)
-                if hit.any():
-                    match[hit] = i
-                    un &= ~hit
-            matched = match >= 0
-
-            # min_zoom selection by hoisted node id
-            mz = np.full(n, np.nan)
-            mz_ok = np.zeros(n, bool)
-            gids = plan.mz_of_rule[np.clip(match, 0, n_rules - 1)]
-            gids = np.where(matched, gids, -1)
-            for g in np.unique(gids):
-                if g < 0:
-                    continue
-                rows = gids == g
-                vals, ok = plan.mz_fns[g](b)
-                mz[rows] = vals[rows]
-                mz_ok[rows] = ok[rows]
-            keep = matched & mz_ok & (zoom_gate >= mz)
-            if not keep.any():
-                continue
-            mz = np.floor(mz * 100) / 100.0  # (ref:process.go:207)
-
-            kept = np.nonzero(keep)[0]
-            filtered = batch.filter(pa.array(keep))
-            arrays = list(filtered.columns)
-            names = list(batch.schema.names)
-            arrays.append(pa.array(match[kept].astype(np.int32)))
-            names.append("match_idx")
-            arrays.append(pa.array(mz[kept], type=pa.float64()))
-            names.append("__emit_min_zoom")
-
-            for key, typ in plan.emit_keys:
-                rule_map = plan.emit_plan[key]
-                nids = rule_map[match[kept]]
-                out = np.empty(len(kept), dtype=object)
-                out[:] = None
-                for g in np.unique(nids):
-                    if g < 0:
-                        continue
-                    rows_local = nids == g
-                    vals = plan.emit_fns[key][g](b)
-                    out[rows_local] = vals[kept[rows_local]]
-                arrays.append(_coerce_to_arrow(out, typ))
-                names.append(f"__emit_{key}")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    out = df.mapInArrow(mapper, schema=out_schema)
-
-    # final shape identical to CompiledLayer.evaluate()
-    out = out.withColumn(
-        "id",
-        F.when(F.col("element_type") == "relation", -F.col("element_id")).otherwise(
-            F.col("element_id")
-        ),
-    )
-    out = out.withColumn("type", F.col("element_type"))
-    out = out.withColumn("zen_layer", F.lit(layer.name))
-
-    emit_cols = {k for k, _ in plan.emit_keys}
-    select = [
-        F.col("id"), F.col("type"), F.col("zen_layer"),
-        F.col("__emit_min_zoom").alias("min_zoom"), F.col("match_idx"),
-    ]
-    for k, _t in plan.emit_keys:
-        select.append(F.col(f"__emit_{k}").alias(k))
-    # array-typed passthrough emits (mz_networks)
-    for k, rule_idxs in plan.network_keys.items():
-        src = k if k in df.columns else None
-        if src is None:
-            # emitted from the membership column of the same name only
-            select.append(F.lit(None).alias(k))
-        else:
-            cond = F.col("match_idx").isin(*rule_idxs)
-            select.append(F.when(cond, F.col(src)).alias(f"__net_{k}"))
-    meta = {"id", "type", "zen_layer", "min_zoom", "match_idx"}
-    for c in df.columns:
-        if c not in emit_cols and c not in meta and c not in plan.network_keys:
-            select.append(F.col(c))
-    out = out.select(*select)
-    for k in plan.network_keys:
-        if f"__net_{k}" in out.columns:
-            out = out.withColumnRenamed(f"__net_{k}", k)
-    return out

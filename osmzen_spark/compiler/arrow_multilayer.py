@@ -1,20 +1,23 @@
-"""ALL-layers-in-one-pass Arrow evaluation.
+"""ALL-layers-in-one-pass Arrow evaluation — the engine's rule evaluator.
 
-The per-layer Arrow path (arrow_layer.py) runs one Spark job per layer:
-nine scans of the derived table, nine Arrow IPC round trips, nine tag
-matrices built from the same tags column — and a ~3 s per-job floor
-(scheduling + exchange latency) that dwarfs the actual rule compute
-(measured: water 25 rules = 3.6 s, pois 279 rules = 7.0 s at local[32],
-1.65M rows — the floor, not the rules, dominates).
+Every layer is evaluated inside ONE mapInArrow pass over the raw
+elements table:
 
-This module evaluates EVERY layer inside one mapInArrow pass:
-
-  * one scan of the derived table, one Arrow exchange;
+  * one scan, one Arrow exchange: the geometry stats
+    (geom.derive.append_geometry_stats — area/length/clon/clat) are
+    computed on each batch inside the pass, so the wide rows (tags map,
+    geometry arrays, any payload) cross the Python boundary once;
+  * a tile bound drops out-of-bound Points right after the stats, before
+    any rule runs;
   * one BatchContext per RecordBatch — the tag matrix and derived
     column decodes are shared by all ~556 predicates of all 9 layers;
   * one output RecordBatch per (input batch, matching layer), rows
     tagged with zen_layer — the union that the pipeline checkpoints
     ONCE (a single stage cut instead of nine).
+
+A per-layer pass would pay one Spark job per layer, each with a ~3 s
+scheduling/exchange floor that dwarfs the rule compute (measured: water
+25 rules = 3.6 s, pois 279 rules = 7.0 s at local[32], 1.65M rows).
 
 Per-layer frames come back as `split_layer_views` — cheap filters +
 projections over the materialized union, with per-layer emit columns
@@ -47,6 +50,7 @@ from osmzen_spark.compiler.arrow_layer import (
     _coerce_to_arrow,
 )
 from osmzen_spark.compiler.vectorized import BatchContext
+from osmzen_spark.geom.derive import STATS_COLS, append_geometry_stats
 
 _PA_TYPES = {"string": pa.string(), "double": pa.float64(), "boolean": pa.bool_()}
 
@@ -178,33 +182,24 @@ def evaluate_all_layers_arrow(
     layers: dict,
     zoom: int,
     layer_names: list[str] | None = None,
-    derive_geometry: bool = False,
+    bound: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """One mapInArrow pass over ``df`` evaluating every layer; returns
-    the layer-tagged union with variant emit columns (see module doc).
+    """One mapInArrow pass over the raw elements ``df`` evaluating every
+    layer; returns the layer-tagged union with the geometry stats
+    (area/length/clon/clat) and variant emit columns (see module doc).
     Use ``split_layer_views`` for per-layer frames.
 
-    ``derive_geometry=True`` fuses the geometry-stats derivation
-    (geom.derive.with_geometry_stats — area/length/clon/clat) INTO this
-    pass: the kernels run on each batch before rule evaluation and the
-    four columns are appended to the output. The separate derive
-    mapInArrow stage round-trips the entire wide elements table (tags
-    map + geometry arrays + any payload) through Arrow a second time
-    just to add four doubles; fusing removes that whole JVM->Python->JVM
-    cycle (guide §4.1: you control how many times the columns cross).
-    Identical values by construction — the same geometry_stats kernel
-    on the same inputs."""
+    ``layers`` should be a long-lived dict (the config's): the compiled
+    plan and its pickled payload are cached on its identity.
+
+    With a ``bound`` (minx, miny, maxx, maxy), Point rows whose centroid
+    lies outside it are dropped before rule evaluation
+    (ref:process.go:146-167)."""
     mplan, payload = _cached_plan(layers, layer_names)
 
-    in_fields = list(df.schema.fields)
-    geom_fields = (
-        [T.StructField(c, T.DoubleType()) for c in ("area", "length", "clon", "clat")]
-        if derive_geometry
-        else []
-    )
     out_schema = T.StructType(
-        in_fields
-        + geom_fields
+        list(df.schema.fields)
+        + [T.StructField(c, T.DoubleType()) for c in STATS_COLS]
         + [
             T.StructField("zen_layer", T.StringType()),
             T.StructField("match_idx", T.IntegerType()),
@@ -213,30 +208,20 @@ def evaluate_all_layers_arrow(
         + [T.StructField(f, _SPARK_TYPES[t]) for f, t in mplan.fields]
     )
     zoom_gate = float(zoom + 1)
+    if bound is not None:
+        minx, miny, maxx, maxy = bound
 
     def mapper(batches):
         names_order, plans, union_fields, field_of, needed_keys = payload.get()
-        if derive_geometry:
-            from osmzen_spark.geom.derive import compute_batch_stats
         for batch in batches:
-            if derive_geometry:
-                names0 = batch.schema.names
-                gtype0 = np.asarray(
-                    batch.column(names0.index("geom_type")).to_pylist(), dtype=object
-                )
-                g_area, g_len, g_clon, g_clat = compute_batch_stats(
-                    batch.column(names0.index("geometry")), gtype0
-                )
-                batch = pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [
-                        pa.array(g_area, type=pa.float64()),
-                        pa.array(g_len, type=pa.float64()),
-                        pa.array(g_clon, type=pa.float64()),
-                        pa.array(g_clat, type=pa.float64()),
-                    ],
-                    names=names0 + ["area", "length", "clon", "clat"],
-                )
+            batch = append_geometry_stats(batch)
+            if bound is not None:
+                cols = batch.schema.names
+                gtype = np.asarray(batch.column(cols.index("geom_type")).to_pylist(), dtype=object)
+                clon = batch.column(cols.index("clon")).to_numpy()
+                clat = batch.column(cols.index("clat")).to_numpy()
+                inside = (clon >= minx) & (clon <= maxx) & (clat >= miny) & (clat <= maxy)
+                batch = batch.filter(pa.array((gtype != "Point") | inside))
             b = BatchContext(batch, needed_keys, zoom)
             n = b.n
             if n == 0:
@@ -325,9 +310,14 @@ def _bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def split_layer_views(union: DataFrame, layers: dict, df_input_cols: list[str]) -> dict:
-    """Per-layer frames over the (checkpointed) union — filter +
-    projection, shaped identically to evaluate_layer_arrow output.
+def split_layer_views(
+    union: DataFrame, layers: dict, df_input_cols: list[str], layer_names: list[str] | None = None
+) -> dict:
+    """Per-layer frames over the (checkpointed) union of
+    ``evaluate_all_layers_arrow(df, layers, zoom, layer_names)`` —
+    filter + projection, shaped like CompiledLayer.evaluate output
+    (id/type/zen_layer/min_zoom/match_idx + emits + the
+    ``df_input_cols`` passthrough). Reuses that call's cached plan.
 
     Built as ONE selectExpr of SQL strings per layer: the old
     per-column F.col/alias/when chain cost ~150 py4j round-trips per
@@ -335,7 +325,7 @@ def split_layer_views(union: DataFrame, layers: dict, df_input_cols: list[str]) 
     (measured 7.7 s of driver time across 9 layers); string
     expressions are marshalled in a single call and parsed JVM-side,
     producing the identical plan."""
-    mplan = MultiLayerArrowPlan(layers)
+    mplan, _ = _cached_plan(layers, layer_names)
     views = {}
     for lname in mplan.layer_names:
         plan = mplan.plans[lname]
@@ -358,8 +348,8 @@ def split_layer_views(union: DataFrame, layers: dict, df_input_cols: list[str]) 
             else:
                 # typed, not void: NullType columns cannot reach a
                 # parquet writer (normalize._stage_cut casts voids, but
-                # the default multilayer branch stage-cuts BEFORE these
-                # views are built), and the type must match what the
+                # the eval union is stage-cut BEFORE these views are
+                # built), and the type must match what the
                 # membership join would have produced so downstream
                 # coalesce()/array ops still resolve
                 exprs.append(

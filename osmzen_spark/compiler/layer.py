@@ -12,6 +12,9 @@ key is then a cheap `when(match_idx == i, expr_i)` chain. Derived
 values (area, height, ...) are plain columns computed once per batch
 — never recomputed per rule (ref caches them per-feature,
 ref:filter/context.go:109-181; Catalyst CSE does the same per-batch).
+
+The engine itself evaluates rules with the Arrow-batch evaluator
+(compiler/arrow_multilayer.py); this Column path is its test oracle.
 """
 
 from __future__ import annotations
@@ -104,40 +107,17 @@ class CompiledLayer:
         ]
         return self._grouped_chain(pairs, match_idx)
 
-    def evaluate(
-        self,
-        df: DataFrame,
-        zoom: int,
-        derived: dict[str, Column] | None = None,
-        keep_cols: list[str] | None = None,
-        use_arrow: bool | None = None,
-    ) -> DataFrame:
-        """Run the layer over an elements DataFrame.
+    def evaluate(self, df: DataFrame, zoom: int) -> DataFrame:
+        """Run the layer over an elements DataFrame as Catalyst Column
+        chains — the reference oracle the production evaluator
+        (compiler/arrow_multilayer.py) is parity-tested against
+        (tests/test_arrow_parity.py).
 
-        Two physical strategies producing identical results:
-
-        * Arrow-batch vectorized evaluator (default; compiler/
-          arrow_layer.py) — rules compiled once to NumPy closures, one
-          mapInArrow node. Plan construction and Catalyst analysis are
-          O(1) in rule count (the 279-rule pois layer costs ~110 s of
-          py4j + ~70 s of analysis on the Column path).
-        * Catalyst Column chains (use_arrow=False or
-          OSMZEN_COLUMN_EVAL=1) — kept for A/B verification and for
-          callers passing custom ``derived`` columns.
+        Expects element_id, element_type, tags, geom_type + the derived
+        area/length/clon/clat columns (geom.derive.with_geometry_stats);
+        returns one row per matching feature with id/type/zen_layer/
+        min_zoom/match_idx + emits + every input column passed through.
         """
-        import os
-
-        if use_arrow is None:
-            use_arrow = os.environ.get("OSMZEN_COLUMN_EVAL", "0") != "1"
-        if use_arrow and derived is None and keep_cols is None:
-            from osmzen_spark.compiler.arrow_layer import evaluate_layer_arrow
-
-            return evaluate_layer_arrow(self, df, zoom)
-
-        # --- Catalyst Column path (expects element_id, element_type,
-        # tags, geom_type + derived area/length/clon/clat columns;
-        # returns one row per matching feature with id/type/zen_layer/
-        # min_zoom + emits + passthrough keep_cols) ---------------------
         base_derived = {"area": F.col("area"), "length": F.col("length")}
         # membership-join derived columns (pipeline.membership) are
         # picked up automatically when the pre-join stage has run
@@ -146,7 +126,6 @@ class CompiledLayer:
         for mc in MEMBERSHIP_COLS:
             if mc in df.columns:
                 base_derived[mc] = F.col(mc)
-        base_derived.update(derived or {})
         ctx = EvalContext(tags="tags", geom_type="geom_type", derived=base_derived, zoom=zoom)
 
         out = df.filter(F.col("geom_type").isin(*self.geometry_types))
@@ -209,11 +188,10 @@ class CompiledLayer:
         # OSM tag/output property (buildings emit it)
         out = out.withColumn("zen_layer", F.lit(self.name))
 
-        keep = keep_cols if keep_cols is not None else [c for c in df.columns]
         cols = (
             [F.col(c) for c in ("id", "type", "zen_layer", "min_zoom", "match_idx")]
             + [F.col(f"__emit_{k}").alias(k) for k in emit_keys]
-            + [F.col(c) for c in keep if c not in emit_keys and c not in META_COLS]
+            + [F.col(c) for c in df.columns if c not in emit_keys and c not in META_COLS]
         )
         return out.select(*cols)
 

@@ -21,7 +21,6 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osmzen_spark.geom.kernels import geometry_stats
@@ -35,7 +34,7 @@ GEOMETRY_TYPE = T.StructType(
     ]
 )
 
-_DERIVED = [("area", pa.float64()), ("length", pa.float64()), ("clon", pa.float64()), ("clat", pa.float64())]
+STATS_COLS = ("area", "length", "clon", "clat")
 
 
 def _flat(list_array: pa.Array):
@@ -65,30 +64,27 @@ def compute_batch_stats(geom_col: pa.Array, geom_type: np.ndarray):
     return geometry_stats(geom_type, xs, ys, pt_off, ring_lens, ring_off, ring_roles)
 
 
+def append_geometry_stats(
+    batch: pa.RecordBatch, geometry_col: str = "geometry", type_col: str = "geom_type"
+) -> pa.RecordBatch:
+    """``batch`` with the STATS_COLS doubles appended; every input
+    column passes through untouched."""
+    names = batch.schema.names
+    gtype = np.asarray(batch.column(names.index(type_col)).to_pylist(), dtype=object)
+    stats = compute_batch_stats(batch.column(names.index(geometry_col)), gtype)
+    return pa.RecordBatch.from_arrays(
+        list(batch.columns) + [pa.array(s, type=pa.float64()) for s in stats],
+        names=names + list(STATS_COLS),
+    )
+
+
 def with_geometry_stats(df: DataFrame, geometry_col: str = "geometry", type_col: str = "geom_type") -> DataFrame:
     """Append area/length/clon/clat, computed Arrow-batch-vectorized."""
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("area", T.DoubleType()),
-            T.StructField("length", T.DoubleType()),
-            T.StructField("clon", T.DoubleType()),
-            T.StructField("clat", T.DoubleType()),
-        ]
-    )
+    out_schema = T.StructType(df.schema.fields + [T.StructField(c, T.DoubleType()) for c in STATS_COLS])
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            names = batch.schema.names
-            gtype = np.asarray(batch.column(names.index(type_col)).to_pylist(), dtype=object)
-            area, length, clon, clat = compute_batch_stats(batch.column(names.index(geometry_col)), gtype)
-            arrays = list(batch.columns) + [
-                pa.array(area, type=pa.float64()),
-                pa.array(length, type=pa.float64()),
-                pa.array(clon, type=pa.float64()),
-                pa.array(clat, type=pa.float64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names + ["area", "length", "clon", "clat"])
+            yield append_geometry_stats(batch, geometry_col, type_col)
 
     return df.mapInArrow(mapper, schema=out_schema)
 

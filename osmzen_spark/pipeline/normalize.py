@@ -3,8 +3,9 @@
 Lifecycle mirrors ref:process.go Process() (SURVEY.md §3) with Spark
 stage boundaries:
 
-  1. derive geometry columns once (Arrow-vectorized mapInArrow)
-  2. per-layer first-match rule eval (codegen'd when-chains)
+  1. membership joins on the raw elements (pipeline.membership)
+  2. ONE mapInArrow pass (compiler.arrow_multilayer): geometry stats,
+     tile-bound Point filter, first-match rule eval of every layer
   3. per-feature transforms (narrow withColumn stages)
   4. SetConditionalNames (broadcast id-joins) + configured
      post-processors in config order
@@ -18,11 +19,14 @@ zoom=20, ref:process.go:28-69).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmzen_spark.compiler.arrow_multilayer import evaluate_all_layers_arrow, split_layer_views
 from osmzen_spark.compiler.loader import CompiledConfig, load_config
-from osmzen_spark.geom.derive import with_geometry_stats
+from osmzen_spark.geom.derive import STATS_COLS
 from osmzen_spark.pipeline.postprocess import POSTPROCESSORS, set_conditional_names
 from osmzen_spark.pipeline.transforms import apply_transforms
 from osmzen_spark.tiling.cells import with_tile
@@ -34,25 +38,12 @@ class NormalizeEngine:
         self._ckpt_dir: str | None = None
         self._ckpt_dir_owned = False
         self._ckpt_seq = 0
-        self._local_ckpts: list[DataFrame] = []
 
     def release(self) -> None:
-        """Free every stage-checkpoint this engine materialized.
-
-        local mode: unpersist the checkpointed RDD blocks (they pin
-        executor memory for the engine's lifetime otherwise — a warm
-        re-run needs them, a finished batch does not). parquet mode:
-        delete engine-created temp checkpoint dirs (an explicit
-        OSMZEN_CHECKPOINT_DIR is the caller's to manage). Idempotent."""
-        for df in self._local_ckpts:
-            try:
-                # the checkpointed blocks belong to the LogicalRDD the
-                # localCheckpoint produced, not to DataFrame.rdd (which
-                # derives a fresh python-row RDD)
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
-        self._local_ckpts.clear()
+        """Delete the engine-owned temp checkpoint dir and every stage
+        in it (a finished run no longer needs them). Stages under an
+        explicit OSMZEN_CHECKPOINT_DIR are kept: they are the caller's,
+        and a later run resumes from them. Idempotent."""
         if self._ckpt_dir_owned and self._ckpt_dir is not None:
             import shutil
 
@@ -61,136 +52,83 @@ class NormalizeEngine:
             self._ckpt_dir_owned = False
             self._ckpt_seq = 0
 
-    def derive(
-        self,
-        elements: DataFrame,
-        relation_members: DataFrame | None = None,
-        way_nodes: DataFrame | None = None,
-    ) -> DataFrame:
-        """Stage 1: geometry-derived columns (area/length/clon/clat),
-        plus membership-join columns when the membership tables are
-        supplied (pipeline.membership)."""
-        out = with_geometry_stats(elements)
-        if relation_members is not None or way_nodes is not None:
-            from osmzen_spark.pipeline.membership import with_membership_columns
+    def _stage_cut(self, df: DataFrame, name: str, partition_by: str | None = None) -> DataFrame:
+        """Materialize a stage boundary as a parquet write + read and
+        truncate the plan there.
 
-            out = with_membership_columns(out, relation_members, way_nodes)
-        return out
+        Data leaves the JVM heap (the OS page cache holds snappy
+        parquet at ~5-10x compression) and scans come back vectorized;
+        heap-held wide rows (an in-memory checkpoint) put the single
+        local-mode JVM into GC collapse during the multi-scan
+        post-process phase (measured 2.7x slower for the 9-layer
+        flagship at sf0.1). This is the cluster design: the Iceberg
+        stage checkpoint (lineage.py).
 
-    def _stage_cut(
-        self,
-        df: DataFrame,
-        name: str,
-        eager: bool,
-        default_mode: str = "local",
-        partition_by: str | None = None,
-    ) -> DataFrame:
-        """Materialize a stage boundary and truncate the plan.
+        Where the stages go:
 
-        Two modes (env OSMZEN_STAGE_CHECKPOINT):
-
-        * ``local``: DataFrame.localCheckpoint — blocks live
-          in executor memory (spill to disk). Lowest latency for small
-          frames, but at full-pipeline scale every cached stage
-          competes for the single local-mode heap, and GC pressure
-          makes byte-heavy downstream phases ANTI-scale with core
-          count (measured: post-process execute 174 s at local[32] vs
-          55 s at local[8], sf0.1 x4; and at plain sf0.1 the 9-layer
-          flagship ran 94.7 s with local vs 35.1 s with parquet,
-          interleaved same-session trials — the 1M heap-held wide rows
-          put the JVM into GC collapse during the 13-scan post-process
-          phase).
-        With no env override, ``process`` picks the default per run:
-        ``parquet`` for full-config (>=5 layer) runs, ``local`` for
-        small layer slices — the checkpointed union's heap bytes scale
-        with layer count, and the measured crossover sits between the
-        2-layer ops queries (local ~1s faster: no write+read round
-        trip) and the 9-layer flagship (parquet 2.7x faster: heap
-        relief).
-
-        * ``parquet``: write+read a compressed columnar checkpoint
-          under OSMZEN_CHECKPOINT_DIR (or a temp dir) — data leaves the
-          JVM heap (OS page cache holds snappy parquet at ~5-10x
-          compression), scans come back vectorized. This IS the
-          cluster design (the Iceberg stage checkpoint, lineage.py),
-          so the bench runs it.
-        * ``lineage``: parquet checkpoint THROUGH lineage.run_stage —
-          each stage directory additionally gets per-bucket lineage
-          rows (row count, order-independent xor checksum, cell range)
-          and an atomic manifest, and a re-run with the same
-          OSMZEN_CHECKPOINT_DIR validates each stage and RESUMES from
-          it without recompute (the north rule's kill-resume
-          semantics; on a real cluster the sink is an Iceberg table
-          and the manifest is its snapshot commit). Costs one extra
-          map-side-combinable aggregation per stage.
+        * OSMZEN_CHECKPOINT_DIR unset: an engine-owned temp dir, deleted
+          by ``release()`` (and at interpreter exit).
+        * OSMZEN_CHECKPOINT_DIR set: that dir, through lineage.run_stage.
+          Each stage directory also gets per-bucket lineage rows (row
+          count, order-independent xor checksum, cell range) and an
+          atomic manifest. Stage paths are (seq, name)-deterministic, so
+          a run that reuses the dir validates each stage and RESUMES
+          from it without recompute (kill-resume; on a real cluster the
+          manifest is the Iceberg snapshot commit). Costs one extra
+          map-side-combinable aggregation per stage;
+          OSMZEN_CHECKPOINT_DEEP=1 re-derives the checksums on resume.
         """
-        import os
-        import tempfile
-
-        mode = os.environ.get("OSMZEN_STAGE_CHECKPOINT", default_mode)
-        # void (all-NULL) emit columns: parquet cannot store NullType;
-        # cast to string in every mode so downstream semantics are
-        # identical (a string NULL behaves exactly like an invisible
-        # void column in PropertiesContext: absent -> ''/False)
+        # void (all-NULL) emit columns: parquet cannot store NullType; a
+        # string NULL behaves exactly like an invisible void column in
+        # PropertiesContext (absent -> ''/False)
         void_cols = [f.name for f in df.schema.fields if f.dataType.typeName() == "void"]
         if void_cols:
             df = df.withColumns({c: F.col(c).cast("string") for c in void_cols})
-        if mode in ("parquet", "lineage"):
-            # always eager by construction: the write IS the
-            # materialization (eager=False has no lazy analog here)
-            if self._ckpt_dir is None:
-                explicit = os.environ.get("OSMZEN_CHECKPOINT_DIR")
-                if explicit:
-                    self._ckpt_dir = explicit
-                else:
-                    import atexit
-                    import shutil
+        if self._ckpt_dir is None:
+            explicit = os.environ.get("OSMZEN_CHECKPOINT_DIR")
+            if explicit:
+                self._ckpt_dir = explicit
+            else:
+                import atexit
+                import shutil
+                import tempfile
 
-                    self._ckpt_dir = tempfile.mkdtemp(prefix="osmzen_ckpt_")
-                    self._ckpt_dir_owned = True
-                    atexit.register(shutil.rmtree, self._ckpt_dir, ignore_errors=True)
-            self._ckpt_seq += 1
-            path = f"{self._ckpt_dir}/{self._ckpt_seq:03d}_{name}"
-            if mode == "lineage":
-                from osmzen_spark.lineage import run_stage
+                self._ckpt_dir = tempfile.mkdtemp(prefix="osmzen_ckpt_")
+                self._ckpt_dir_owned = True
+                atexit.register(shutil.rmtree, self._ckpt_dir, ignore_errors=True)
+        self._ckpt_seq += 1
+        path = f"{self._ckpt_dir}/{self._ckpt_seq:03d}_{name}"
+        if not self._ckpt_dir_owned:
+            from osmzen_spark.lineage import run_stage
 
-                # deterministic 64-way bucket over the element id: the
-                # lineage key a resume validates against. Stage paths
-                # are (seq, name)-deterministic, so a re-run with the
-                # same OSMZEN_CHECKPOINT_DIR lands on the same
-                # directories and reloads every validated stage.
-                key = "element_id" if "element_id" in df.columns else df.columns[0]
-                bucketed = df.withColumn(
-                    "__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(64))
-                )
-                out = run_stage(
-                    df.sparkSession,
-                    path,
-                    stage=name,
-                    bucket_col="__bucket",
-                    compute=lambda: bucketed,
-                    cell_col="cell" if "cell" in df.columns else None,
-                    # deep: resume re-derives per-bucket checksums and
-                    # cell ranges (catches corruption that preserves
-                    # row counts — object stores have no CRC sidecar)
-                    deep=os.environ.get("OSMZEN_CHECKPOINT_DEEP", "") == "1",
-                )
-                return out.drop("__bucket")
-            writer = df.write.mode("overwrite")
-            if partition_by is not None and partition_by in df.columns:
-                # partition the checkpoint on the downstream branch key:
-                # every consumer filters `partition_by = <value>` (the
-                # per-layer views + postprocess join sides — 13 scans
-                # for the full config), so directory partition pruning
-                # turns 13 full-table reads into 13 single-partition
-                # reads. This is exactly the Iceberg partition-pruned
-                # stage table of the cluster design (guide §6).
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(path)
-            return df.sparkSession.read.parquet(path)
-        out = df.localCheckpoint(eager=eager)
-        self._local_ckpts.append(out)
-        return out
+            # deterministic 64-way bucket over the element id: the
+            # lineage key a resume validates against
+            key = "element_id" if "element_id" in df.columns else df.columns[0]
+            bucketed = df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(64)))
+            out = run_stage(
+                df.sparkSession,
+                path,
+                stage=name,
+                bucket_col="__bucket",
+                compute=lambda: bucketed,
+                cell_col="cell" if "cell" in df.columns else None,
+                # deep: resume re-derives per-bucket checksums and
+                # cell ranges (catches corruption that preserves
+                # row counts — object stores have no CRC sidecar)
+                deep=os.environ.get("OSMZEN_CHECKPOINT_DEEP", "") == "1",
+            )
+            return out.drop("__bucket")
+        writer = df.write.mode("overwrite")
+        if partition_by is not None and partition_by in df.columns:
+            # partition the checkpoint on the downstream branch key:
+            # every consumer filters `partition_by = <value>` (the
+            # per-layer views + postprocess join sides — 13 scans for
+            # the full config), so directory partition pruning turns 13
+            # full-table reads into 13 single-partition reads — the
+            # Iceberg partition-pruned stage table of the cluster design
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(path)
+        return df.sparkSession.read.parquet(path)
 
     @staticmethod
     def _point_in_bound(bound, lon_col: str = "clon", lat_col: str = "clat"):
@@ -201,34 +139,6 @@ class NormalizeEngine:
             & (F.col(lat_col) >= miny)
             & (F.col(lat_col) <= maxy)
         )
-
-    def eval_layers(
-        self,
-        derived: DataFrame,
-        zoom: int,
-        layer_names: list[str] | None = None,
-        bound=None,
-    ) -> dict[str, DataFrame]:
-        """Stages 2+3: rule eval + transforms per layer.
-
-        The derived input is evaluated once per layer; an element can
-        match in multiple layers (ref:README.md:229). With a bound,
-        Point features outside it are skipped before eval AND Point
-        outputs (e.g. representative points of big polygons) outside it
-        are dropped after (ref:process.go:146-167)."""
-        if bound is not None:
-            derived = derived.filter(
-                (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-            )
-        out: dict[str, DataFrame] = {}
-        for name in layer_names or list(self.config.layers):
-            layer = self.config.layers[name]
-            df = layer.evaluate(derived, zoom)
-            df = apply_transforms(df, layer.transforms, zoom)
-            if bound is not None:
-                df = df.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
-            out[name] = df
-        return out
 
     def postprocess(
         self, layers: dict[str, DataFrame], zoom: int, bound=None
@@ -255,7 +165,6 @@ class NormalizeEngine:
         tile_zoom: int | None = None,
         layer_names: list[str] | None = None,
         cache: bool = False,
-        single_pass: bool = False,
         bound: tuple[float, float, float, float] | None = None,
         relation_members: DataFrame | None = None,
         way_nodes: DataFrame | None = None,
@@ -264,149 +173,45 @@ class NormalizeEngine:
         """Full pipeline; returns {layer_name: DataFrame} with tile
         columns (tile_z/tile_x/tile_y/cell) appended.
 
-        (Stage-checkpoint mode note: full-config runs default to
-        ``parquet`` checkpoints — see ``_stage_cut``; measured 2.7x
-        faster end-to-end than ``local`` for the 9-layer pipeline at
-        sf0.1 because the heap-held wide union rows put the single
-        local-mode JVM into GC collapse during the 13-scan
-        post-process phase.)
+        One straight-line path:
 
-        Two physical strategies (both produce identical results —
-        the fixture suite runs on both):
+        1. membership joins on the raw elements (they key on
+           element_type/element_id only);
+        2. ONE mapInArrow pass (``evaluate_all_layers_arrow``): geometry
+           stats, the ``bound`` Point filter, every layer's rules — the
+           wide rows cross the Python boundary once;
+        3. ``cache=True``: the layer-tagged union is stage-cut, a parquet
+           checkpoint partitioned by ``zen_layer`` (see ``_stage_cut``);
+           ``cache=False`` with membership tables cuts the joined input
+           instead, so the join subtree is not duplicated into every
+           layer branch and post-process self-join;
+        4. per-layer views, transforms, post-processors, clip to the
+           padded ``bound`` (``clip=True``), tile assignment at
+           ``tile_zoom`` (default ``min(zoom, 16)``).
 
-        * single_pass=False (default): one branch per layer; each
-          branch re-derives from source. Measured fastest in the
-          compute-light local regime (sf0.1: ~27s vs ~60s), because
-          re-computing the synthetic scan is cheaper than
-          materializing wide cached rows, and Catalyst prunes each
-          branch to exactly the columns it needs.
-
-        * single_pass=True: ALL layers' rules + transforms in one scan
-          + one projection (pipeline.singlepass), the exploded union
-          persisted (cache=True) as the only fan-out point. One source
-          scan instead of layers+2, which matters when the SCAN is the
-          cost (cold object-store reads). Measured locally it is much
-          slower than the branch shape (it matches rules through the
-          Catalyst Column chains, not the Arrow evaluator, and
-          evaluates every layer's hoisted emit expressions for every
-          row before the explode filter), so it is A/B-retained but
-          NOT the deployable default — the branch + eager
-          stage-checkpoint shape is.
+        With a bound, Point features outside it are dropped before eval
+        AND Point outputs (e.g. representative points of big polygons)
+        outside it are dropped after transforms (ref:process.go:146-167).
         """
-        from osmzen_spark.pipeline.singlepass import eval_all_layers_single_pass, split_layers
-
         names = layer_names or list(self.config.layers)
         tz = tile_zoom if tile_zoom is not None else min(zoom, 16)
-        if single_pass:
-            derived = self.derive(elements, relation_members, way_nodes)
+        derived = elements
+        if relation_members is not None or way_nodes is not None:
+            from osmzen_spark.pipeline.membership import with_membership_columns
+
+            derived = with_membership_columns(elements, relation_members, way_nodes)
+            if not cache:
+                derived = self._stage_cut(derived, "derived")
+        union = evaluate_all_layers_arrow(derived, self.config.layers, zoom, names, bound=bound)
+        if cache:
+            union = self._stage_cut(union, "eval_union", partition_by="zen_layer")
+        views = split_layer_views(union, self.config.layers, derived.columns + list(STATS_COLS), names)
+        layers = {}
+        for n in names:
+            df = apply_transforms(views[n], self.config.layers[n].transforms, zoom)
             if bound is not None:
-                derived = derived.filter(
-                    (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                )
-            union = eval_all_layers_single_pass(derived, self.config, zoom, names)
-            if bound is not None:
-                union = union.filter(
-                    (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                )
-            if cache:
-                union = union.persist()
-            layers = split_layers(union, names)
-        else:
-            import os as _os
-
-            multilayer = _os.environ.get("OSMZEN_MULTILAYER", "1") != "0"
-            # Fused-derive shape (the multilayer default): geometry
-            # stats are computed INSIDE the eval mapInArrow pass
-            # (arrow_multilayer derive_geometry=True) so the wide
-            # elements table crosses the Python boundary ONCE, not
-            # twice. The membership joins only key on element_type/
-            # element_id, so they run on the raw elements unchanged.
-            # A bound filter needs clon/clat before eval, so bounded
-            # runs keep the separate derive pass.
-            fuse = multilayer and bound is None
-            ckpt_mode = "parquet" if len(names) >= 5 else "local"
-            if fuse:
-                derived = elements
-                if relation_members is not None or way_nodes is not None:
-                    from osmzen_spark.pipeline.membership import with_membership_columns
-
-                    derived = with_membership_columns(
-                        elements, relation_members, way_nodes
-                    )
-            else:
-                derived = self.derive(elements, relation_members, way_nodes)
-            if (relation_members is not None or way_nodes is not None) and not (
-                cache and multilayer
-            ):
-                # cut the plan at the membership join: without this the
-                # join+aggregation subtree is duplicated into every layer
-                # branch (and every postprocess self-join on top), and
-                # Catalyst analysis cost multiplies accordingly. On a
-                # cluster this cut is the Iceberg stage checkpoint
-                # (lineage.py). When the eval UNION is itself cut
-                # (cache=True on the multilayer path), `derived` has
-                # exactly one consumer — the eval pass feeding that
-                # cut — so this intermediate checkpoint would be a pure
-                # extra write+read of the full elements table and is
-                # skipped.
-                derived = self._stage_cut(
-                    derived, "derived", eager=False, default_mode=ckpt_mode
-                )
-            if multilayer:
-                # DEFAULT physical shape: ALL layers evaluated in ONE
-                # mapInArrow pass (shared tag matrix, one Arrow
-                # exchange, one job) producing the layer-tagged union;
-                # one stage cut replaces nine (arrow_multilayer.py —
-                # the 9 separate jobs each paid a ~3s scheduling/
-                # exchange floor that dominated the rule compute).
-                from osmzen_spark.compiler.arrow_multilayer import (
-                    evaluate_all_layers_arrow,
-                    split_layer_views,
-                )
-
-                if bound is not None:
-                    derived = derived.filter(
-                        (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                    )
-                use = {n: self.config.layers[n] for n in names}
-                union = evaluate_all_layers_arrow(
-                    derived, use, zoom, names, derive_geometry=fuse
-                )
-                if cache:
-                    union = self._stage_cut(
-                        union,
-                        "eval_union",
-                        eager=True,
-                        default_mode=ckpt_mode,
-                        partition_by="zen_layer",
-                    )
-                input_cols = derived.columns + (
-                    ["area", "length", "clon", "clat"] if fuse else []
-                )
-                views = split_layer_views(union, use, input_cols)
-                layers = {}
-                for n in names:
-                    from osmzen_spark.pipeline.transforms import apply_transforms
-
-                    df = apply_transforms(views[n], self.config.layers[n].transforms, zoom)
-                    if bound is not None:
-                        df = df.filter(
-                            (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                        )
-                    layers[n] = df
-            else:
-                layers = self.eval_layers(derived, zoom, names, bound=bound)
-                if cache:
-                    # truncate each layer's plan before post-processing:
-                    # label-placement unions, dedup splits and backfill
-                    # joins each duplicate their input subtree, so
-                    # without a cut the optimizer re-walks (and the
-                    # driver re-holds) the full rule-evaluation tree
-                    # 4-8x per layer — enough to OOM an 8g driver at 7
-                    # layers. The cut replaces the subtree with a
-                    # materialized leaf (on a cluster: the Iceberg stage
-                    # checkpoint, lineage.py).
-                    layers = {n: self._stage_cut(df, n, eager=True) for n, df in layers.items()}
+                df = df.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
+            layers[n] = df
         layers = self.postprocess(layers, zoom, bound=bound)
         if bound is not None and clip:
             # hard-wired final step for per-tile runs: clip geometry to

@@ -1,18 +1,14 @@
 """Per-feature transforms (SURVEY.md §2.F): pure property edits
 (ref:transform/transforms.go), expressed as **expression-level**
 functions over a property dict: ``fn(props, ctx, zoom)`` mutates
-``props`` (name -> Column). No DataFrame ops — the engine folds every
-layer's transform chain into the SAME single projection as rule
-evaluation, so transforms cost zero extra passes/shuffles.
+``props`` (name -> Column). No DataFrame ops — ``apply_transforms``
+folds a layer's whole transform chain into ONE projection over the
+layer frame, so transforms cost zero extra passes/shuffles.
 
 Setting ``props[k] = None``-valued Column (F.lit(None)) == deleting the
 property; ``props.pop(k)`` removes the output column entirely (only
 safe when no other layer emits k — the engine handles unioning).
-
-``apply_transforms`` / ``apply_transforms_df`` wrap this for the
-legacy DataFrame-at-a-time path (used by per-layer evaluate()).
 """
-
 from __future__ import annotations
 
 from typing import Callable
@@ -592,16 +588,6 @@ TRANSFORMS: dict[str, Callable] = {
 }
 
 
-def apply_transforms_props(props: dict[str, Column], names: list[str], ctx: EvalContext, zoom: int) -> dict[str, Column]:
-    """Expression-level application: mutates and returns props."""
-    for name in names:
-        fn = TRANSFORMS.get(name)
-        if fn is None:
-            raise ValueError(f"unknown transform: {name}")
-        fn(props, ctx, zoom)
-    return props
-
-
 _LAZY = object()
 
 
@@ -633,8 +619,9 @@ class _LazyProps(dict):
 
 
 def apply_transforms(df: DataFrame, names: list[str], zoom: int) -> DataFrame:
-    """Legacy DataFrame-at-a-time wrapper: builds a props dict from the
-    frame's columns, applies the chain, projects the result."""
+    """Apply the named transform chain to a layer frame: builds a
+    props dict from the frame's columns, lets each transform rewrite
+    it, projects the result."""
     ctx = EvalContext(
         tags="tags",
         geom_type="geom_type",
@@ -644,7 +631,11 @@ def apply_transforms(df: DataFrame, names: list[str], zoom: int) -> DataFrame:
     props = _LazyProps()
     for c in df.columns:
         dict.__setitem__(props, c, _LAZY)
-    apply_transforms_props(props, names, ctx, zoom)
+    for name in names:
+        fn = TRANSFORMS.get(name)
+        if fn is None:
+            raise ValueError(f"unknown transform: {name}")
+        fn(props, ctx, zoom)
     cols = [
         k if v is _LAZY else v.alias(k) for k, v in dict.items(props)
     ]

@@ -252,12 +252,11 @@ def _encode_commands_batch(gx, gy, offs, gcodes, rl_l):
         # per-feature slicing truncated silently; same here)
         rlen_eff = np.minimum(rlen, np.maximum(fend[rfeat] - rstart, 0))
         close_r = gcodes[sidx][rfeat] == 3
-        nonempty = rlen_eff > 0
-        sf = np.where(nonempty, rstart, 0)
-        sl = np.where(nonempty, rstart + rlen_eff - 1, 0)
-        closed = (
-            close_r & (rlen_eff > 1) & (gx[sf] == gx[sl]) & (gy[sf] == gy[sl])
-        )
+        # endpoints are compared only for rings with >1 point: an empty
+        # ring has no valid index (gx itself is empty in a point-free batch)
+        closed = close_r & (rlen_eff > 1)
+        sf, sl = rstart[closed], (rstart + rlen_eff - 1)[closed]
+        closed[closed] = (gx[sf] == gx[sl]) & (gy[sf] == gy[sl])
         tlen = rlen_eff - closed
         keep = tlen >= 2
         klen = tlen[keep]

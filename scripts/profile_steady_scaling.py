@@ -1,5 +1,5 @@
-"""Diagnose steady-write scaling: build the flagship once (parquet
-checkpoint mode recommended), then time TWO warm noop writes with
+"""Diagnose steady-write scaling: build the flagship once, then time
+TWO warm noop writes with
 event logging on, and print a per-stage table (wall, tasks, total
 task time, max task) for the second write's job(s).
 

@@ -22,7 +22,6 @@ SF_DIR=${SF_DIR:-/root/testdata/sf0.1}
 REPLICATE=${REPLICATE:-32}
 ARMS=${ARMS:-"local-cluster[1,4,18432]:4;local-cluster[4,4,18432]:16"}
 export SPARK_LOCAL_IP=127.0.0.1
-export OSMZEN_STAGE_CHECKPOINT=parquet
 
 COMMON=(
   --conf spark.ui.enabled=false

@@ -1,0 +1,80 @@
+"""NormalizeEngine's single evaluation path and stage-cut policy: the
+cut is a parquet checkpoint in an engine-owned temp dir that release()
+deletes, the compiled rule payload is built once per engine config, and
+the package reads no environment switch beyond the documented ones."""
+
+import ast
+import os
+import re
+
+from osmzen_spark.geom.derive import geometry_from_rings
+from osmzen_spark.pipeline.normalize import NormalizeEngine
+
+from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
+
+PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "osmzen_spark")
+
+# every OSMZEN_* environment variable the package may read
+ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR", "OSMZEN_CHECKPOINT_DEEP", "OSMZEN_BROADCAST_POSTJOINS"}
+
+
+def _garage(spark):
+    geometry = geometry_from_rings([PARKING_GARAGE_RING], "Polygon")
+    return make_elements(spark, [(1, "way", PARKING_GARAGE_TAGS, "Polygon", geometry)])
+
+
+def test_stage_cut_is_parquet_in_engine_temp_dir(spark, monkeypatch):
+    monkeypatch.delenv("OSMZEN_CHECKPOINT_DIR", raising=False)
+    engine = NormalizeEngine()
+    out = engine.process(_garage(spark), zoom=16, layer_names=["buildings"], cache=True)
+    ckpt = engine._ckpt_dir
+    assert ckpt is not None and engine._ckpt_dir_owned
+    assert os.listdir(ckpt) == ["001_eval_union"]
+    part = os.path.join(ckpt, "001_eval_union", "zen_layer=buildings")
+    assert any(f.endswith(".parquet") for f in os.listdir(part))
+    assert out["buildings"].count() > 0  # reads back through the cut
+    engine.release()
+    assert not os.path.exists(ckpt)
+    assert engine._ckpt_dir is None
+
+
+def test_rule_payload_built_once_per_engine(spark, monkeypatch):
+    """Two process() calls on one engine reuse the same pickled rule
+    payload (the eval pass and the per-layer views both ask for it)."""
+    from osmzen_spark.compiler import arrow_multilayer
+
+    seen = []
+    real = arrow_multilayer._cached_plan
+
+    def spy(layers, layer_names):
+        plan, payload = real(layers, layer_names)
+        seen.append(payload)
+        return plan, payload
+
+    monkeypatch.setattr(arrow_multilayer, "_cached_plan", spy)
+    engine = NormalizeEngine()
+    elements = _garage(spark)
+    for _ in range(2):
+        engine.process(elements, zoom=16, layer_names=["buildings", "roads"])
+    assert len(seen) == 4
+    assert all(p is seen[0] for p in seen)
+
+
+def test_env_switches_are_allow_listed():
+    """No OSMZEN_* environment switch outside the allow-list: string
+    constants naming one anywhere in the package's code."""
+    found = {}
+    for root, _dirs, files in os.walk(PACKAGE):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if re.fullmatch(r"OSMZEN_\w+", node.value):
+                        found.setdefault(node.value, []).append(os.path.relpath(path, PACKAGE))
+    assert found, "scan found no environment reads at all"
+    extra = {k: v for k, v in found.items() if k not in ALLOWED_ENV}
+    assert not extra, f"environment switches outside the allow-list: {extra}"

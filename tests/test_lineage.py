@@ -104,14 +104,13 @@ def test_deep_validation_catches_cell_range_drift(spark, tmp_path):
 
 
 def test_engine_lineage_mode_resumes(spark, tmp_path, monkeypatch):
-    """OSMZEN_STAGE_CHECKPOINT=lineage: the engine's stage cuts write
+    """OSMZEN_CHECKPOINT_DIR set: the engine's stage cuts write
     per-bucket lineage + manifest, and a second pipeline run with the
     same checkpoint dir RELOADS each validated stage instead of
     recomputing it (stage data files untouched) — the north rule's
     kill-resume at stage granularity, identical output rows."""
     from tests.conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
 
-    monkeypatch.setenv("OSMZEN_STAGE_CHECKPOINT", "lineage")
     monkeypatch.setenv("OSMZEN_CHECKPOINT_DIR", str(tmp_path))
     from osmzen_spark.pipeline.normalize import NormalizeEngine
 
@@ -125,7 +124,7 @@ def test_engine_lineage_mode_resumes(spark, tmp_path, monkeypatch):
         spark,
         [(1, "way", PARKING_GARAGE_TAGS, "Polygon", geometry)],
     )
-    # a membership arg forces the "derived" stage cut; cache=True the eval one
+    # cache=True cuts the eval union; the membership arg adds its join
     from pyspark.sql import types as T
 
     rels = spark.createDataFrame(

@@ -165,6 +165,28 @@ def test_encode_commands_batch_matches_per_feature():
         assert got[i] == want, (i, gt)
 
 
+def test_encode_commands_batch_point_free_batch():
+    """Regression: a batch with no points at all whose path features
+    still declare rings (degenerate input) must encode each feature to
+    empty command bytes, as the per-feature encoder did, instead of
+    indexing into the empty point arrays (IndexError)."""
+    from osmzen_spark.sinks.mvt import _encode_commands_batch
+
+    empty = np.array([], dtype=np.int64)
+    got = _encode_commands_batch(
+        empty, empty, np.array([0, 0], dtype=np.int64), np.array([2], dtype=np.int8), [np.array([3])]
+    )
+    assert got == [b""]
+    got = _encode_commands_batch(
+        empty,
+        empty,
+        np.array([0, 0, 0], dtype=np.int64),
+        np.array([3, 2], dtype=np.int8),
+        [np.array([4]), np.array([2, 0])],
+    )
+    assert got == [b"", b""]
+
+
 def test_spark_mvt_sink_byte_parity_with_scalar(spark):
     """The vectorized mapInPandas sink must produce byte-identical
     blobs to the scalar reference (old per-point projection + interned
