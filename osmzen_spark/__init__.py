@@ -9,11 +9,14 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
 * Arrow-vectorized geometry kernels (Web-Mercator area / length /
   centroid over flat coordinate buffers)  -- :mod:`osmzen_spark.geom`
 * a z/x/y + Morton-cell tiling core (cell encoding, cell rings,
-  point-in-polygon, kNN, raster<->vector joins)  -- :mod:`osmzen_spark.tiling`
+  point-in-polygon, kNN)  -- :mod:`osmzen_spark.tiling`
 * layer pipelines + cross-layer post-processing (rank matchers,
   backfill joins, conditional names, quantize/clamp)  -- :mod:`osmzen_spark.pipeline`
-* large-scale training-data ops (dedup, similarity search, text stats)
-  -- :mod:`osmzen_spark.ops`
+* sources (OSM PBF / XML, GeoJSON) and the MVT sink  -- :mod:`osmzen_spark.sources`,
+  :mod:`osmzen_spark.sinks`
+* training-data ops (dedup, similarity search, text stats) and payload
+  codecs, which the engine does not run  -- :mod:`osmzen_spark.ops`,
+  :mod:`osmzen_spark.payload`
 
 The reference implementation (read-only, for behavior only) lives at
 /root/reference; citations in docstrings use ``ref:file:line`` form.

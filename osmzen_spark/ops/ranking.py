@@ -19,8 +19,8 @@ be luck. This scorer uses the rational idf variant
 (the same monotone ranking order as Robertson-Sparck-Jones without
 the log wrapper): every input is an exact-integer-valued double, and
 + - * / are exactly rounded by IEEE 754, so identically-parenthesized
-expressions produce bit-identical doubles in Spark and DuckDB. The
-oracle SQL in __spark_entry__ mirrors the parenthesization verbatim.
+expressions produce bit-identical doubles in Spark and DuckDB. An
+oracle SQL that mirrors the parenthesization verbatim reproduces them.
 """
 
 from __future__ import annotations

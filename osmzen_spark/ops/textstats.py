@@ -1,7 +1,7 @@
 """Text analysis operators: language ID (stopword-hit heuristic),
 quality scoring, token counting, document fingerprinting. All pure
-Column math — runs in whole-stage codegen, SQL-expressible (so each has
-a DuckDB oracle in __spark_entry__).
+Column math — runs in whole-stage codegen, SQL-expressible (so each can
+be re-derived in DuckDB SQL).
 """
 
 from __future__ import annotations

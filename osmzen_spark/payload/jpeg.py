@@ -31,7 +31,7 @@ YCbCr->RGB conversion are pure INTEGER arithmetic:
 The float forward DCT lives only in the encoder (lossy by nature; the
 PSNR>=40dB payload gate bounds it). `encode_from_coefficients` skips
 the forward transform entirely and entropy-codes caller-provided
-quantized coefficients — datagen uses it to synthesize REAL JFIF
+quantized coefficients — the synthetic image payload uses it to build REAL JFIF
 streams whose decoded pixels have a closed form.
 """
 
@@ -531,7 +531,7 @@ def encode_from_coefficients(
 ) -> bytes:
     """REAL baseline JFIF stream from caller-provided QUANTIZED zigzag-
     domain-free (natural 8x8 order) coefficient blocks — one block per
-    component, 4:4:4, w=h=8 (the datagen path: coefficients are a
+    component, 4:4:4, w=h=8 (the synthetic-payload path: coefficients are a
     closed form of the key, so decoded pixels are too; there is no
     forward DCT and no float anywhere between here and the decoded
     pixel)."""

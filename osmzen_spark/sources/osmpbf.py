@@ -21,7 +21,7 @@ and delta coding undoes with cumsum. Output is the same raw-table
 bundle as the XML source (`OsmTables`), so everything downstream —
 assembly, membership, the 556-rule chain — is shared.
 
-A writer (`encode_pbf`) exists so tests and datagen can synthesize
+A writer (`encode_pbf`) exists so tests and generators can synthesize
 valid PBF without external data; it is a driver-side test utility,
 not a sink (the engine's sinks are parquet/Iceberg-manifest/MVT/
 GeoJSON).
@@ -416,7 +416,7 @@ def full_tile(
 
 
 # ------------------------------------------------------------------
-# writer (test/datagen utility)
+# writer (test/generator utility)
 # ------------------------------------------------------------------
 
 

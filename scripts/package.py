@@ -2,8 +2,8 @@
 whole package (code + YAML configs) importable from --py-files.
 
     python scripts/package.py
-    spark-submit --py-files dist/osmzen_spark.zip scripts/submit_flagship.py \
-        --sf-dir /root/testdata/sf0.001
+    spark-submit --py-files dist/osmzen_spark.zip,tests/synthetic.py \
+        scripts/submit_flagship.py
 
 On a real cluster the same zip ships the engine to every executor; the
 YAML rule configs ride inside the zip and load through

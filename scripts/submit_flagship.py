@@ -1,16 +1,13 @@
-"""spark-submit entry point (north-rule packaging path):
+"""spark-submit entry point (packaging path):
 
-    spark-submit --py-files dist/osmzen_spark.zip scripts/submit_flagship.py \
-        [--sf-dir DIR] [--out DIR] [--zoom 20] [--tile-zoom 14] [--replicate 1]
+    spark-submit --py-files dist/osmzen_spark.zip,tests/synthetic.py \
+        scripts/submit_flagship.py [--sf-dir DIR]
 
-Runs the full normalize+tile flagship over the synthetic elements of
---sf-dir and writes the unioned per-layer output as parquet partitioned
-by (tile_z, tile_x) with a lineage manifest (kill-resume checkpoint,
-lineage.py). With no --out, measures the pipeline wall, the warm
-feature count, and a steady full-width write (min of two — the same
-protocol as bench.py --scaling), and prints one JSON line — so running
-this artifact under two --master cluster sizes yields the north rule's
-N-vs-4N throughput pair from the literal spark-submit --py-files path.
+Runs the full normalize+tile pipeline (every layer, z20 features on z14
+tiles) over the synthetic elements and road network of --sf-dir, with
+the engine imported from the zip and the generators from the shipped
+tests/synthetic.py. Writes to the noop sink and prints one JSON line:
+status, feature count and pipeline wall time.
 """
 
 from __future__ import annotations
@@ -23,16 +20,12 @@ import time
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default=None)
-    ap.add_argument("--zoom", type=int, default=20)
-    ap.add_argument("--tile-zoom", type=int, default=14)
-    ap.add_argument("--replicate", type=int, default=1)
     args = ap.parse_args()
 
     # import AFTER spark-submit has set up --py-files on sys.path
     from pyspark.sql import SparkSession
+    from synthetic import synthetic_elements, synthetic_network
 
-    from osmzen_spark.datagen import synthetic_elements, synthetic_network
     from osmzen_spark.pipeline.normalize import NormalizeEngine
 
     spark = SparkSession.builder.appName("osmzen-flagship").getOrCreate()
@@ -58,38 +51,19 @@ def main():
         if not submitted.contains(k):
             spark.conf.set(k, v)
     t0 = time.time()
-    elements = synthetic_elements(spark, args.sf_dir, replicate=args.replicate)
-    net, rels, way_nodes = synthetic_network(spark, args.sf_dir, replicate=args.replicate)
-    engine = NormalizeEngine()
-    out = engine.process_unioned(
+    elements = synthetic_elements(spark, args.sf_dir)
+    net, rels, way_nodes = synthetic_network(spark, args.sf_dir)
+    out = NormalizeEngine().process_unioned(
         elements.unionByName(net),
-        zoom=args.zoom,
-        tile_zoom=args.tile_zoom,
+        zoom=20,
+        tile_zoom=14,
         cache=True,
         relation_members=rels,
         way_nodes=way_nodes,
     )
-    if args.out:
-        from osmzen_spark.lineage import write_stage
-
-        write_stage(out, args.out, stage="flagship")
-        print(json.dumps({"status": "written", "out": args.out}))
-        return
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    _noop(out)
+    out.write.format("noop").mode("overwrite").save()
     pipeline_sec = time.time() - t0
-    n = out.count()  # warm
-    # steady full-width write: min of two warm runs (one-off GC pauses
-    # must not masquerade as throughput), same protocol as bench.py
-    t0 = time.time()
-    _noop(out)
-    steady_write_sec = time.time() - t0
-    t0 = time.time()
-    _noop(out)
-    steady_write_sec = min(steady_write_sec, time.time() - t0)
+    n = out.count()
     print(
         json.dumps(
             {
@@ -97,9 +71,7 @@ def main():
                 "master": spark.sparkContext.master,
                 "n_features": n,
                 "pipeline_sec": round(pipeline_sec, 3),
-                "steady_write_sec": round(steady_write_sec, 3),
                 "pipeline_features_per_sec": round(n / pipeline_sec, 1),
-                "steady_write_features_per_sec": round(n / steady_write_sec, 1),
             }
         )
     )

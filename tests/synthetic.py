@@ -1,21 +1,26 @@
-"""Deterministic synthetic input tables, derived from the driver's
-parquet tables (TESTDATA.md) — no external data, reproducible at any
-scale factor, pure Column math (no UDFs, no RNG).
+"""Deterministic synthetic input tables for the tests, derived from
+the sf* parquet tables (TESTDATA.md): no external data, pure Column
+math (no UDFs, no RNG), reproducible at any scale factor.
 
-* ``synthetic_elements``   — OSM-tagged elements (tags map + polygon/
-  point geometry) in the FIXTURES.md §1 shape, one per lineitem row.
-* ``synthetic_images``     — image+caption payload table in the driver
-  input_hint shape (image_id, bytes, w, h, fmt, caption, phash); bytes
-  are a deterministic raw-RGB byte string (fmt='raw'), so the
-  decoded-pixel invariant is exact (PSNR = inf) without image codecs.
+* ``synthetic_elements``      — OSM-tagged elements (tags map + polygon/
+  line/point geometry) in the FIXTURES.md §1 shape, one per lineitem row.
+* ``synthetic_raw_buildings`` — raw (nodes, way_nodes, ways) tables that
+  assemble into exactly the building slice of ``synthetic_elements``.
+* ``synthetic_network``       — road/path ways, gate nodes and route
+  relation memberships, one way per orders row.
+* ``synthetic_images``        — an 8x8 RGB image payload (raw, PNG and
+  baseline-JPEG bytes) per lineitem key, for the payload codec tests;
+  the only generator that runs a Python (Arrow) mapper.
 
-Element classes cycle deterministically (key mod 16): buildings with
+Element classes cycle deterministically (key mod 18): buildings with
 levels (polygon), parking garages, parks, schools, restaurants with
 cuisine, waterfalls with heights, hotels, supermarkets, entrances,
 address points, towns with population, beaches, woods, military areas,
-railway stations, admin-boundary relations — chosen to exercise every
-implemented layer (synthetic_network adds roads/paths/gates + route
-relations).
+railway stations, admin-boundary relations, water and subway routes —
+chosen to exercise every implemented layer.
+
+The module imports nothing from the tests, so ``spark-submit`` can ship
+it next to the engine zip (``--py-files dist.zip,tests/synthetic.py``).
 """
 
 from __future__ import annotations
@@ -23,112 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the sf* tables of TESTDATA.md
+TESTDATA_DIR = "/root/testdata"
+SF_SMALL = f"{TESTDATA_DIR}/sf0.001"
+SF_TILING = f"{TESTDATA_DIR}/sf0.01"
+
 # meters per degree latitude (approx, only used to size synthetic polygons)
 _M_PER_DEG = 111320.0
-
-# namespace prefix for the on-disk cache; invalidation is automatic via
-# the source-code + part-file fingerprint below, no manual bump needed
-_PAYLOAD_CACHE_VERSION = 2
-
-
-def _source_fingerprint(builder) -> str:
-    """sha256 over the bytes of every source file that determines the
-    synthetic payload: this module, the payload codecs, and wherever
-    the builder callable is defined. A code change to any of them
-    yields a new cache key — no manual version bump to forget."""
-    import hashlib
-    import inspect
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    files = [
-        os.path.abspath(__file__),
-        os.path.join(here, "payload", "images.py"),
-        os.path.join(here, "payload", "av.py"),
-    ]
-    try:
-        bf = inspect.getsourcefile(builder)
-        if bf:
-            files.append(os.path.abspath(bf))
-    except TypeError:
-        pass
-    h = hashlib.sha256()
-    for f in sorted(set(files)):
-        try:
-            with open(f, "rb") as fh:
-                h.update(fh.read())
-        except OSError:
-            h.update(f.encode())
-    return h.hexdigest()[:16]
-
-
-def payload_cache(spark: SparkSession, sf_dir: str, name: str, builder) -> DataFrame:
-    """Materialize a deterministic synthetic payload table to a local
-    parquet cache once per (sf, version) and read it back.
-
-    This is the deployment shape: the input_hint names an Iceberg
-    TABLE of image+caption pairs — the payload is synthesized here
-    only because the sandbox allows no external data, and the Python
-    generation cost (PNG encode etc., ~30 s for sf0.1's ~0.8M images)
-    is datagen cost, not operator cost. Reading the cache also gives
-    the operator queries a real columnar scan (column pruning: a query
-    that needs only caption+phash never deserializes the bytes
-    column). Concurrent processes race benignly: each writes a
-    pid-suffixed temp dir and the first atomic rename wins."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    # key = resolved dir + a fingerprint of the ACTUAL part files
-    # inside each dataset directory (path, size, mtime — top-level
-    # dir stats are meaningless for Spark datasets: dir mtime misses
-    # in-place part-file rewrites) + a hash of the generator source
-    # (code changes invalidate automatically): two datasets with the
-    # same leaf name, a dataset regenerated in place, or an edited
-    # generator must not share a cache entry
-    real = os.path.realpath(sf_dir)
-    stats = []
-    for fn in sorted(os.listdir(real)):
-        if not fn.endswith(".parquet"):
-            continue
-        top = os.path.join(real, fn)
-        if os.path.isdir(top):
-            for root, _dirs, files in sorted(os.walk(top)):
-                for leaf in sorted(files):
-                    p = os.path.join(root, leaf)
-                    st = os.stat(p)
-                    stats.append(
-                        f"{os.path.relpath(p, real)}:{st.st_size}:{st.st_mtime_ns}"
-                    )
-        else:
-            st = os.stat(top)
-            stats.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    fp = hashlib.sha256(
-        "|".join([real, _source_fingerprint(builder), *stats]).encode()
-    ).hexdigest()[:16]
-    label = (os.path.basename(real) or "sf") + "-" + fp
-    base_dir = os.path.join(
-        tempfile.gettempdir(), f"osmzen_payload_cache_v{_PAYLOAD_CACHE_VERSION}", label
-    )
-    path = os.path.join(base_dir, f"{name}.parquet")
-    if not os.path.isdir(path):
-        os.makedirs(base_dir, exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        builder().write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    # Return the RAW scan. Do NOT blanket-repartition here: consumers
-    # that read only metadata columns (payload_normalize_tile takes
-    # just image_id/element_id/caption/phash) rely on the file-scan
-    # size estimate to get a BROADCAST join against the million-row
-    # feature table — an unconditional round-robin exchange here was
-    # measured to flip that join to shuffle+sort and triple the query
-    # (42.0 s vs 12.9 s at sf0.1). Decode-heavy consumers fan out
-    # AFTER their column pruning instead (payload.fan_out_scan).
-    return spark.read.parquet(path)
 
 
 def _square_geometry(lon, lat, side_m):
@@ -152,26 +58,15 @@ def _point_geometry(lon, lat):
     )
 
 
-def synthetic_elements(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
-    """One element per lineitem row (x replicate); all attributes are
-    deterministic functions of (l_orderkey, l_linenumber, replica).
-    ``replicate`` scales the table without new source data (distinct
-    ids/coords per replica) — used by bench --scaling so executor work
-    dominates over fixed driver/planning cost."""
+def synthetic_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One element per lineitem row; all attributes are deterministic
+    functions of (l_orderkey, l_linenumber)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     # the sf* inputs are single small parquet files (1-3 splits); spread
     # them across the executor cores up front so the pipeline's
-    # parallelism isn't capped by the file count (a 100TB table has
-    # thousands of splits and needs no such step)
-    target = spark.sparkContext.defaultParallelism
-    li = li.repartition(target)
-    if replicate > 1:
-        li = li.withColumn("_rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
-    else:
-        li = li.withColumn("_rep", F.lit(0))
-    key = (
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")) * replicate + F.col("_rep")
-    ).cast("long")
+    # parallelism isn't capped by the file count
+    li = li.repartition(spark.sparkContext.defaultParallelism)
+    key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
 
     df = li.select(
         key.alias("element_id"),
@@ -427,10 +322,10 @@ _HIKE_NETS = ["iwn", "nwn", "rwn", "lwn"]
 
 
 def synthetic_network(
-    spark: SparkSession, sf_dir: str, replicate: int = 1
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Deterministic road/path elements + membership tables, one way per
-    orders row (x replicate). Exercises the membership-join functions
+    orders row. Exercises the membership-join functions
     (pipeline.membership): bicycle/bus/hiking route relations and gate
     nodes on ways of varying highway class.
 
@@ -448,11 +343,7 @@ def synthetic_network(
     """
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     o = o.repartition(spark.sparkContext.defaultParallelism)
-    if replicate > 1:
-        o = o.withColumn("_rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
-    else:
-        o = o.withColumn("_rep", F.lit(0))
-    key = (F.col("o_orderkey") * replicate + F.col("_rep")).cast("long")
+    key = F.col("o_orderkey").cast("long")
     base = o.select(
         key.alias("k"),
         (F.pmod(key * 6151, F.lit(360_000_000)) / 1_000_000.0 - 180.0).alias("lon"),
@@ -537,10 +428,8 @@ def _network_from_base(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame
 
 
 def synthetic_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Payload table (input_hint shape), one 8x8 RGB image per lineitem
-    row, materialized once per SF via payload_cache and read back as a
-    parquet scan. Three real formats, all with closed-form decodable
-    pixels so a SQL oracle re-derives every value without any codec:
+    """Payload table, one 8x8 RGB image per lineitem key. Three real
+    formats, all with closed-form decodable pixels:
 
     * odd keys: raw RGB bytes, pixel(x, y, c) =
       (seed + 7x + 13y + 29c) mod 256, seed = (key*2654435761) mod 2^31
@@ -550,17 +439,10 @@ def synthetic_images(spark: SparkSession, sf_dir: str) -> DataFrame:
       per channel the quantized DC + three low-frequency ACs are a
       closed form of the seed, quant tables are all-16, and the
       decoder's integer IDCT + fixed-point color convert make every
-      decoded pixel an exact integer function of the key — lossy-format
-      bytes with a lossless oracle.
+      decoded pixel an exact integer function of the key.
 
     The phash column is the REAL 64-bit luma average-hash of the
-    DECODED pixels (payload.images.luma_ahash64), not a placeholder."""
-    return payload_cache(
-        spark, sf_dir, "images", lambda: _synthetic_images_uncached(spark, sf_dir)
-    )
-
-
-def _synthetic_images_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    DECODED pixels (payload.images.luma_ahash64)."""
     import pyarrow as pa
 
     from osmzen_spark.payload.images import encode_png, luma_ahash64
@@ -569,7 +451,7 @@ def _synthetic_images_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li = li.repartition(spark.sparkContext.defaultParallelism)
     key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
-    # the driver's lineitem is not TPC-H-exact: (orderkey, linenumber)
+    # the sf* lineitem is not TPC-H-exact: (orderkey, linenumber)
     # collides, so image ids must be deduped to stay a key
     keys = li.select(key.alias("k")).distinct()
 
@@ -593,9 +475,7 @@ def _synthetic_images_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
         q16 = np.full((8, 8), 16, dtype=np.int64)
 
         def jpeg_image(seed: int):
-            """(bytes, decoded) for a coefficient-domain JFIF stream;
-            the closed forms below are mirrored verbatim by the oracle
-            SQL (_JPEG_COEF_SQL in __spark_entry__.py)."""
+            """(bytes, decoded) for a coefficient-domain JFIF stream."""
             coefs = []
             for c in range(3):
                 m = np.zeros((8, 8), dtype=np.int64)

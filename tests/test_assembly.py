@@ -12,6 +12,7 @@ from osmzen_spark.pipeline.assembly import assemble_elements
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
 from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS
+from synthetic import SF_SMALL
 
 
 def _raw_tables(spark, node_rows, way_node_rows, way_rows, rel_rows=None, rel_member_rows=None):
@@ -165,12 +166,11 @@ def test_multipolygon_missing_outer_gets_bound_patch(spark):
 
 def test_assemble_buildings_matches_element_path(spark):
     """The raw->assembled->normalized path produces exactly the same
-    buildings-layer rows as the element-path flagship slice (the
-    driver checks the same equality against the DuckDB oracle)."""
-    import __spark_entry__ as entrymod
+    buildings-layer rows as the element path (test_oracles checks both
+    against the same DuckDB oracle)."""
+    from test_oracles import q_assemble_buildings, q_normalize_buildings
 
-    sf = "/root/testdata/sf0.001"
-    a = entrymod.q_assemble_buildings(spark, sf).collect()
-    b = entrymod.q_normalize_buildings(spark, sf).collect()
+    a = q_assemble_buildings(spark, SF_SMALL).collect()
+    b = q_normalize_buildings(spark, SF_SMALL).collect()
     assert len(a) == len(b) > 0
     assert [tuple(r) for r in a] == [tuple(r) for r in b]

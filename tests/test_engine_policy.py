@@ -1,7 +1,8 @@
 """NormalizeEngine's single evaluation path and stage-cut policy: the
 cut is a parquet checkpoint in an engine-owned temp dir that release()
-deletes, the compiled rule payload is built once per engine config, and
-the package reads no environment switch beyond the documented ones."""
+deletes, the compiled rule payload is built once per engine config, the
+package reads no environment switch beyond the documented ones, and
+every module of the package is reachable from an engine entry point."""
 
 import ast
 import os
@@ -13,6 +14,35 @@ from osmzen_spark.pipeline.normalize import NormalizeEngine
 from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
 
 PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "osmzen_spark")
+
+# the modules a user or the benchmark imports; everything else in the
+# package must be reachable from them
+ENTRY_MODULES = (
+    "pipeline.normalize",
+    "pipeline.assembly",
+    "sources.osmpbf",
+    "sources.osmxml",
+    "sources.geojson",
+    "sinks.mvt",
+    "compiler.loader",
+    "lineage",
+    "session",
+    "tiling",
+)
+
+# package modules no entry point reaches: training-data ops, payload
+# codecs and line simplification the engine does not run. They stay only
+# while their own tests cover them (ROADMAP lists their deletion); the
+# list must stay exact, so nothing new joins it unnoticed.
+UNREACHED_ALLOWED = {
+    "geom/simplify.py",
+    *(f"ops/{m}.py" for m in (
+        "__init__", "bucketed", "capping", "contamination", "dedup",
+        "incremental", "packing", "ranking", "redaction", "repetition",
+        "resharding", "sampling", "similarity", "textstats",
+    )),
+    *(f"payload/{m}.py" for m in ("__init__", "images", "jpeg")),
+}
 
 # every OSMZEN_* environment variable the package may read
 ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR", "OSMZEN_CHECKPOINT_DEEP", "OSMZEN_BROADCAST_POSTJOINS"}
@@ -78,3 +108,62 @@ def test_env_switches_are_allow_listed():
     assert found, "scan found no environment reads at all"
     extra = {k: v for k, v in found.items() if k not in ALLOWED_ENV}
     assert not extra, f"environment switches outside the allow-list: {extra}"
+
+
+def _module_file(module: str) -> str | None:
+    """The .py file behind a dotted osmzen_spark module name, or None."""
+    base = os.path.join(os.path.dirname(PACKAGE), *module.split("."))
+    if os.path.isfile(os.path.join(base, "__init__.py")):
+        return os.path.join(base, "__init__.py")
+    if os.path.isfile(base + ".py"):
+        return base + ".py"
+    return None
+
+
+def _imports(module: str, path: str):
+    """Every dotted name an import statement in the file may load,
+    function-level imports included. For `from a import b` both `a` and
+    `a.b` are yielded, since b may be a submodule."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    package = module if path.endswith("__init__.py") else module.rpartition(".")[0]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = package.split(".")[: len(package.split(".")) - node.level + 1]
+                base = ".".join(parent + ([base] if base else []))
+            yield base
+            yield from (f"{base}.{a.name}" for a in node.names)
+
+
+def test_every_package_module_is_reachable():
+    """Walk the imports (with ast, no Spark) from the entry modules;
+    every .py file under osmzen_spark/ must be reached, apart from the
+    exact UNREACHED_ALLOWED list. Importing a.b.c also runs a and a.b,
+    so parent packages count as reached."""
+    reached, todo = set(), [f"osmzen_spark.{m}" for m in ENTRY_MODULES]
+    while todo:
+        parts = todo.pop().split(".")
+        if parts[0] != "osmzen_spark":
+            continue
+        for i in range(1, len(parts) + 1):
+            module = ".".join(parts[:i])
+            path = _module_file(module)
+            if path is None or path in reached:
+                continue
+            reached.add(path)
+            todo.extend(_imports(module, path))
+    every = {
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(PACKAGE)
+        for f in files
+        if f.endswith(".py")
+    }
+    unreached = sorted(os.path.relpath(p, PACKAGE) for p in every - reached)
+    unexpected = sorted(set(unreached) - UNREACHED_ALLOWED)
+    assert not unexpected, f"modules no entry point imports: {unexpected}"
+    stale = sorted(UNREACHED_ALLOWED - set(unreached))
+    assert not stale, f"UNREACHED_ALLOWED names reached or deleted modules: {stale}"

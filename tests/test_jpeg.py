@@ -1,6 +1,6 @@
 """Baseline JPEG codec (payload/jpeg.py): exact coefficient-domain
 roundtrips (the oracle contract), the PSNR>=40dB payload gate on the
-lossy float-DCT path, subsampling, grayscale, and the datagen jpeg
+lossy float-DCT path, subsampling, grayscale, and the synthetic jpeg
 rows' phash integrity."""
 
 import numpy as np
@@ -105,9 +105,9 @@ def test_datagen_jpeg_rows_phash_and_decode(spark):
     stored phash must equal the REAL average-hash of the DECODED
     pixels, and the byte stream must decode through the generic
     decoder (not the closed form)."""
-    from osmzen_spark.datagen import synthetic_images
+    from synthetic import SF_SMALL, synthetic_images
 
-    imgs = synthetic_images(spark, "/root/testdata/sf0.001")
+    imgs = synthetic_images(spark, SF_SMALL)
     rows = imgs.filter("fmt = 'jpeg'").limit(8).collect()
     assert rows, "expected jpeg rows in the synthetic payload"
     for r in rows:

@@ -11,6 +11,7 @@ from osmzen_spark.pipeline.membership import with_membership_columns
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
 from conftest import make_elements
+from synthetic import SF_SMALL, synthetic_network
 
 LINE = [[(0.0, 0.0), (0.01, 0.0)]]
 
@@ -203,9 +204,7 @@ def test_roads_layer_with_memberships(spark):
 
 
 def test_synthetic_network_datagen(spark):
-    from osmzen_spark.datagen import synthetic_network
-
-    elements, rels, wn = synthetic_network(spark, "/root/testdata/sf0.001")
+    elements, rels, wn = synthetic_network(spark, SF_SMALL)
     assert elements.filter(F.col("element_type") == "node").count() > 0
     assert rels.count() > 0 and wn.count() > 0
     derived = with_membership_columns(

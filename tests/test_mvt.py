@@ -7,6 +7,8 @@ import numpy as np
 
 from osmzen_spark.sinks.mvt import decode_tile, encode_tile
 
+from synthetic import SF_SMALL, synthetic_elements
+
 
 def test_roundtrip_point_and_properties():
     layers = {
@@ -316,11 +318,10 @@ def test_spark_mvt_sink_buildings(spark):
     inside the extent."""
     from pyspark.sql import functions as F
 
-    from osmzen_spark.datagen import synthetic_elements
     from osmzen_spark.pipeline.normalize import NormalizeEngine
     from osmzen_spark.sinks.mvt import mvt_tiles
 
-    elements = synthetic_elements(spark, "/root/testdata/sf0.001")
+    elements = synthetic_elements(spark, SF_SMALL)
     engine = NormalizeEngine()
     layers = engine.process(
         elements, zoom=20, tile_zoom=10, layer_names=["buildings", "pois"]
@@ -345,11 +346,10 @@ def test_spark_mvt_sink_buildings(spark):
 def test_spark_mvt_sink_deterministic(spark):
     from pyspark.sql import functions as F
 
-    from osmzen_spark.datagen import synthetic_elements
     from osmzen_spark.pipeline.normalize import NormalizeEngine
     from osmzen_spark.sinks.mvt import mvt_tiles
 
-    elements = synthetic_elements(spark, "/root/testdata/sf0.001")
+    elements = synthetic_elements(spark, SF_SMALL)
     engine = NormalizeEngine()
     layers = engine.process(
         elements, zoom=20, tile_zoom=10, layer_names=["buildings", "pois"]

@@ -45,8 +45,9 @@ def test_config_loads_from_zip(tmp_path):
 
 
 def test_spark_submit_py_files_smoke(tmp_path):
-    """spark-submit --py-files dist.zip scripts/submit_flagship.py runs
-    the full pipeline end-to-end importing ONLY from the artifact."""
+    """spark-submit --py-files dist.zip,tests/synthetic.py
+    scripts/submit_flagship.py runs the full pipeline end-to-end with the
+    engine imported ONLY from the artifact."""
     sys.path.insert(0, os.path.join(ROOT, "scripts"))
     import package
 
@@ -58,9 +59,7 @@ def test_spark_submit_py_files_smoke(tmp_path):
             "--master",
             "local[4]",
             # local-mode driver and executors share one heap; the 1g
-            # spark-submit default OOMs under the cached fan-out plus
-            # the steady-write throughput probes (every deployment
-            # sizes this — run_submit_scaling.sh uses 12g)
+            # spark-submit default OOMs under the cached fan-out
             "--driver-memory",
             "4g",
             "--conf",
@@ -68,7 +67,7 @@ def test_spark_submit_py_files_smoke(tmp_path):
             "--conf",
             "spark.sql.shuffle.partitions=4",
             "--py-files",
-            zip_path,
+            f"{zip_path},{os.path.join(ROOT, 'tests', 'synthetic.py')}",
             os.path.join(ROOT, "scripts", "submit_flagship.py"),
             "--sf-dir",
             "/root/testdata/sf0.001",

@@ -1,192 +1,7 @@
-"""Radius join, tile-pyramid rollup, rect-overlap join, channel stats:
-brute-force truth comparisons + the plan properties that make each
-viable at scale."""
+"""Per-pixel channel stats (payload.images) and the per-tile feature cap
+(postprocess.keep_n_features) on hand-built frames."""
 
 import numpy as np
-
-from pyspark.sql import functions as F
-
-
-def _points(spark, n=400, seed_mult=(2654435761, 2246822519)):
-    """Deterministic scatter incl. high latitudes and both sides of the
-    antimeridian."""
-    ids = spark.range(1, n + 1)
-    lon = (F.pmod(F.col("id") * seed_mult[0], F.lit(360000000)) / 1000000.0 - 180.0).alias("lon")
-    lat = (F.pmod(F.col("id") * seed_mult[1], F.lit(148000000)) / 1000000.0 - 74.0).alias("lat")
-    return ids.select("id", lon, lat)
-
-
-def test_within_distance_join_matches_bruteforce(spark):
-    from osmzen_spark.tiling.knn import haversine_m
-    from osmzen_spark.tiling.rangejoin import min_cell_extent_m, within_distance_join
-
-    left = _points(spark, 80, seed_mult=(1540483477, 3267000013)).withColumnRenamed("id", "qid")
-    right = _points(spark, 600)
-    radius = 280_000.0
-    assert min_cell_extent_m(5, 74.0) > radius  # envelope precondition
-
-    got = (
-        within_distance_join(left.withColumnRenamed("qid", "id"), right, radius, z=5, ring=1)
-        .select("l_id", "r_id")
-        .collect()
-    )
-    got_pairs = {(r.l_id, r.r_id) for r in got}
-    assert len(got) == len(got_pairs), "duplicate pairs emitted"
-
-    l = left.select(F.col("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
-    truth = (
-        l.crossJoin(right)
-        .withColumn("d", haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")))
-        .filter(F.col("d") <= radius)
-        .select("qid", "id")
-        .collect()
-    )
-    truth_pairs = {(r.qid, r.id) for r in truth}
-    assert truth_pairs, "degenerate test: no pairs within radius"
-    assert got_pairs == truth_pairs
-
-
-def test_within_distance_join_antimeridian_wrap(spark):
-    """A pair straddling lon=180 must be found (x cells wrap)."""
-    from osmzen_spark.tiling.rangejoin import within_distance_join
-
-    left = spark.createDataFrame([(1, 179.8, 10.0)], "id long, lon double, lat double")
-    right = spark.createDataFrame([(2, -179.9, 10.1)], "id long, lon double, lat double")
-    got = within_distance_join(left, right, 100_000.0, z=5, ring=1).collect()
-    assert [(r.l_id, r.r_id) for r in got] == [(1, 2)]
-
-
-def test_tile_pyramid_rollup_matches_per_level_truth(spark):
-    from osmzen_spark.tiling.cells import tile_x_col, tile_y_col
-    from osmzen_spark.tiling.pyramid import tile_pyramid_rollup
-
-    pts = _points(spark, 500)
-    got = tile_pyramid_rollup(pts, zmax=8, zmin=2, step=2, value=F.col("id")).collect()
-    by_level = {}
-    for r in got:
-        by_level.setdefault(r.z, {})[(r.tile_x, r.tile_y)] = (r.n_points, r.sum_value)
-    assert sorted(by_level) == [2, 4, 6, 8]
-    for z in (2, 4, 6, 8):
-        truth = (
-            pts.select(
-                tile_x_col(F.col("lon"), z).alias("x"), tile_y_col(F.col("lat"), z).alias("y"), "id"
-            )
-            .groupBy("x", "y")
-            .agg(F.count("*").alias("n"), F.sum("id").cast("long").alias("s"))
-            .collect()
-        )
-        assert by_level[z] == {(r.x, r.y): (r.n, r.s) for r in truth}, f"level z={z}"
-
-
-def test_tile_pyramid_reuses_base_exchange(spark):
-    """The union must not recompute the base aggregation once per level:
-    physical planning shares identical shuffles (ReusedExchange), so
-    the raw points are shuffled exactly once."""
-    from osmzen_spark.tiling.pyramid import tile_pyramid_rollup
-
-    pts = _points(spark, 100)
-    out = tile_pyramid_rollup(pts, zmax=8, zmin=2, step=2)
-    out.collect()  # AQE finalizes reuse at runtime
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # 3 coarser levels, each reusing the previous level's exchange
-    assert plan.count("ReusedExchange") == 3, plan
-
-
-def test_rect_overlap_join_matches_bruteforce(spark):
-    from osmzen_spark.tiling.overlap import rect_overlap_join
-
-    def rects(tbl_n, mult, half_div):
-        df = spark.range(1, tbl_n + 1)
-        cx = F.pmod(F.col("id") * mult, F.lit(300000000)) / 1000000.0 - 150.0
-        cy = F.pmod(F.col("id") * (mult + 2), F.lit(120000000)) / 1000000.0 - 60.0
-        hl = F.pmod(F.col("id"), F.lit(20)) / half_div + 0.5
-        hh = F.pmod(F.col("id"), F.lit(15)) / half_div + 0.5
-        return df.select(
-            "id",
-            (cx - hl).alias("x1"),
-            (cx + hl).alias("x2"),
-            (cy - hh).alias("y1"),
-            (cy + hh).alias("y2"),
-        )
-
-    a = rects(60, 2654435761, 8.0)
-    b = rects(200, 1540483477, 10.0)
-    got = rect_overlap_join(a, b, z=6).collect()
-    got_pairs = {(r.a_id, r.b_id) for r in got}
-    assert len(got) == len(got_pairs), "report-once violated: duplicate pairs"
-
-    ar = {r.id: r for r in a.collect()}
-    br = {r.id: r for r in b.collect()}
-    truth = set()
-    areas = {}
-    for ia, ra in ar.items():
-        for ib, rb in br.items():
-            x1, x2 = max(ra.x1, rb.x1), min(ra.x2, rb.x2)
-            y1, y2 = max(ra.y1, rb.y1), min(ra.y2, rb.y2)
-            if x1 < x2 and y1 < y2:
-                truth.add((ia, ib))
-                areas[(ia, ib)] = (x2 - x1) * (y2 - y1)
-    assert truth, "degenerate test: no overlapping pairs"
-    assert got_pairs == truth
-    for r in got:
-        assert abs(r.ov_area - areas[(r.a_id, r.b_id)]) < 1e-12
-
-
-def test_rect_overlap_no_distinct_in_plan(spark):
-    """Dedup comes from the report-once cell predicate, not an extra
-    aggregate: the plan must contain exactly the one join exchange
-    pair, no HashAggregate for dedup."""
-    from osmzen_spark.tiling.overlap import rect_overlap_join
-
-    a = spark.range(1, 5).selectExpr(
-        "id", "id * 1.0 AS x1", "id * 1.0 + 2 AS x2", "id * 1.0 AS y1", "id * 1.0 + 2 AS y2"
-    )
-    out = rect_overlap_join(a, a.withColumn("id", F.col("id") + 100), z=6)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" not in plan, plan
-
-
-def test_snap_to_segments_matches_bruteforce(spark):
-    from osmzen_spark.tiling.snap import point_segment_d2, snap_to_segments
-
-    pts = _points(spark, 300).filter(F.abs(F.col("lat")) < 60)
-    segs = spark.range(1, 80).select(
-        F.col("id").alias("seg_id"),
-        (F.pmod(F.col("id") * 2654435761, F.lit(300000000)) / 1000000.0 - 150.0).alias("x0"),
-        (F.pmod(F.col("id") * 2246822519, F.lit(100000000)) / 1000000.0 - 50.0).alias("y0"),
-    )
-    segs = segs.select(
-        "seg_id",
-        "x0",
-        "y0",
-        (F.col("x0") + F.pmod(F.col("seg_id"), F.lit(13)) / 6.0 - 1.0).alias("x1"),
-        (F.col("y0") + F.pmod(F.col("seg_id"), F.lit(11)) / 5.0 - 1.0).alias("y1"),
-    )
-    got = {
-        r.p_id: (r.s_seg_id, r.d2)
-        for r in snap_to_segments(pts, segs, max_dist=1.0, z=6, ring=1).collect()
-    }
-
-    truth_rows = (
-        pts.crossJoin(segs)
-        .withColumn(
-            "d2",
-            point_segment_d2(
-                F.col("lon"), F.col("lat"), F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1")
-            ),
-        )
-        .filter(F.col("d2") <= 1.0)
-        .collect()
-    )
-    # min by (d2, seg_id) per point
-    truth = {}
-    for r in truth_rows:
-        key = (r.d2, r.seg_id)
-        if r.id not in truth or key < truth[r.id]:
-            truth[r.id] = key
-    truth = {pid: (sid, d2) for pid, (d2, sid) in truth.items()}
-    assert truth, "degenerate test: no snappable points"
-    assert got == truth
 
 
 def test_channel_stats_matches_numpy(spark):

@@ -112,36 +112,6 @@ def test_knn_matches_bruteforce(spark):
     assert exact == approx
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join changes only the physical plan: result rows must be
-    identical to the unsalted join, the small side must replicate via
-    one explode, and the join keys must include the salt (so the hot
-    key spreads over n_salt shuffle partitions)."""
-    from pyspark.sql import functions as F
-
-    from osmzen_spark.tiling.skew import salted_join
-
-    # 90% of rows share one hot key
-    big = spark.range(1, 1001).select(
-        F.col("id"),
-        F.when(F.pmod("id", F.lit(10)) > 0, F.lit(7)).otherwise(F.pmod("id", F.lit(5))).alias("k"),
-    )
-    small = spark.range(0, 10).select(
-        F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id").cast("string")).alias("attr")
-    )
-    salted = salted_join(big, small, on=["k"], entropy="id", n_salt=8)
-    plain = big.join(small, on="k")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan and ("Generate explode" in plan or "explode" in plan)
-    # the join must be a SHUFFLE join with the salt in its keys — a
-    # broadcast join has no shuffle to skew, so salting it would prove
-    # nothing (the small side is shuffle_hash-hinted for exactly this)
-    assert "BroadcastHashJoin" not in plan
-    join_line = next(ln for ln in plan.splitlines() if "HashJoin" in ln or "SortMergeJoin" in ln)
-    assert "__salt" in join_line
-
-
 def test_tile_partitioned_sink_prunes_scan(spark, tmp_path):
     """The deployment sink is a tile-partitioned table (Iceberg on a
     cluster; partitioned parquet here): a tile-filtered read must show
