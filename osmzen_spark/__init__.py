@@ -4,8 +4,10 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
 (Tilezen's OSM -> vector-tile normalization) as an idiomatic Spark engine:
 
 * a YAML rule compiler that turns osmzen-style condition / min_zoom /
-  output trees into Spark ``Column`` expressions (whole-stage codegen,
-  never per-row Python)  -- see :mod:`osmzen_spark.compiler`
+  output trees into Spark ``Column`` expressions that Catalyst evaluates
+  JVM-side, interpreted (compiling Java for each small but wide request
+  plan costs more than it saves; :mod:`osmzen_spark.session`), never
+  per-row Python  -- see :mod:`osmzen_spark.compiler`
 * Arrow-vectorized geometry kernels (Web-Mercator area / length /
   centroid over flat coordinate buffers)  -- :mod:`osmzen_spark.geom`
 * a z/x/y + Morton-cell tiling core (cell encoding, cell rings,

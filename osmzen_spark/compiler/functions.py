@@ -1,5 +1,6 @@
 """Named call-functions of the rule language (ref:filter/functions.go:17-37),
-each compiled to a pure Column expression (JVM-side, codegen'd).
+each compiled to a pure Column expression (JVM-side; Catalyst evaluates
+it interpreted, as it does every engine expression, see session.py).
 
 Membership-join functions (is_bus_route, cycling_network, rel_networks,
 highway-gate min_zoom) are *pre-join stages* in the pipeline, surfaced

@@ -6,8 +6,9 @@ rules; the FIRST matching rule supplies min_zoom and the output
 properties (ref:process.go:230-238).
 
 Physical strategy: one `when(p0, 0).when(p1, 1)...` chain produces a
-`match_idx` column (Catalyst short-circuits, whole-stage codegen
-compiles the 550-odd predicates to JVM bytecode once); every output
+`match_idx` column (Catalyst short-circuits the 550-odd predicates
+and evaluates them interpreted: compiling Java for chains this wide
+costs more than the rows they run on, see session.py); every output
 key is then a cheap `when(match_idx == i, expr_i)` chain. Derived
 values (area, height, ...) are plain columns computed once per batch
 — never recomputed per rule (ref caches them per-feature,

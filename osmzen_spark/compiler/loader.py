@@ -1,7 +1,8 @@
 """Config loader: reads the engine config directory (layer YAMLs, rank
 CSVs, post-process pipeline) into a CompiledConfig — the driver-side
 "query compile" step (ref:load.go:53-128; ~10x win in the reference,
-free here because Columns are generated once and codegen'd).
+free here because Columns are generated once and Catalyst evaluates
+them JVM-side; it runs them interpreted, see session.py).
 """
 
 from __future__ import annotations

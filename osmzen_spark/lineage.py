@@ -59,10 +59,16 @@ def write_stage(
     stage: str,
     bucket_col: str,
     cell_col: str | None = "cell",
+    partition_by: str | None = None,
 ) -> dict:
     """Checkpoint a stage: data + lineage + manifest (manifest written
-    last = commit point)."""
-    df.write.mode("overwrite").parquet(os.path.join(path, "data"))
+    last = commit point). `partition_by` names a column to partition
+    the data files by (`data/<col>=<value>/`), so readers that filter
+    on it scan one directory."""
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(os.path.join(path, "data"))
     spark = df.sparkSession
     data = spark.read.parquet(os.path.join(path, "data"))
     lin = lineage_frame(data, bucket_col, cell_col)
@@ -139,11 +145,13 @@ def run_stage(
     compute,  # () -> DataFrame
     cell_col: str | None = "cell",
     deep: bool = False,
+    partition_by: str | None = None,
 ) -> DataFrame:
     """Resume-or-compute: reload a validated checkpoint, else compute,
-    checkpoint, and return the reloaded (pruned-scan-friendly) data."""
+    checkpoint (partitioned by `partition_by`, see write_stage), and
+    return the reloaded (pruned-scan-friendly) data."""
     if validate_stage(spark, path, deep=deep):
         return spark.read.parquet(os.path.join(path, "data"))
     df = compute()
-    write_stage(df, path, stage, bucket_col, cell_col)
+    write_stage(df, path, stage, bucket_col, cell_col, partition_by)
     return spark.read.parquet(os.path.join(path, "data"))

@@ -18,7 +18,9 @@ Cell language (ref:matcher/matcher.go:122-170):
 Header `col::type` suffixes are display-only; `zoom` is a pseudo-column
 bound to the tile zoom (ref:matcher/matcher.go:55-58). The whole table
 compiles to ONE generated when-chain per layer — first-match preserved
-by chain order, evaluated entirely in whole-stage codegen. The chain
+by chain order, evaluated JVM-side by Catalyst's interpreted eval
+(a 4k-arm CASE is cheaper to interpret than to compile for one
+request's rows, see session.py). The chain
 is emitted as a single SQL CASE string handed to F.expr (one py4j
 call, parsed JVM-side) rather than per-row Column.when() round-trips —
 the 5-table sort_rank set cost ~5.5 s of pure driver time the old way.

@@ -77,6 +77,8 @@ class NormalizeEngine:
           manifest is the Iceberg snapshot commit). Costs one extra
           map-side-combinable aggregation per stage;
           OSMZEN_CHECKPOINT_DEEP=1 re-derives the checksums on resume.
+
+        Both write the data partitioned by ``partition_by`` when given.
         """
         # void (all-NULL) emit columns: parquet cannot store NullType; a
         # string NULL behaves exactly like an invisible void column in
@@ -98,6 +100,14 @@ class NormalizeEngine:
                 atexit.register(shutil.rmtree, self._ckpt_dir, ignore_errors=True)
         self._ckpt_seq += 1
         path = f"{self._ckpt_dir}/{self._ckpt_seq:03d}_{name}"
+        if partition_by is not None and partition_by not in df.columns:
+            partition_by = None
+        # partition the checkpoint on the downstream branch key: every
+        # consumer filters `partition_by = <value>` (the per-layer views
+        # + postprocess join sides — 13 scans for the full config), so
+        # directory partition pruning turns 13 full-table reads into 13
+        # single-partition reads — the Iceberg partition-pruned stage
+        # table of the cluster design
         if not self._ckpt_dir_owned:
             from osmzen_spark.lineage import run_stage
 
@@ -116,16 +126,11 @@ class NormalizeEngine:
                 # cell ranges (catches corruption that preserves
                 # row counts — object stores have no CRC sidecar)
                 deep=os.environ.get("OSMZEN_CHECKPOINT_DEEP", "") == "1",
+                partition_by=partition_by,
             )
             return out.drop("__bucket")
         writer = df.write.mode("overwrite")
-        if partition_by is not None and partition_by in df.columns:
-            # partition the checkpoint on the downstream branch key:
-            # every consumer filters `partition_by = <value>` (the
-            # per-layer views + postprocess join sides — 13 scans for
-            # the full config), so directory partition pruning turns 13
-            # full-table reads into 13 single-partition reads — the
-            # Iceberg partition-pruned stage table of the cluster design
+        if partition_by is not None:
             writer = writer.partitionBy(partition_by)
         writer.parquet(path)
         return df.sparkSession.read.parquet(path)

@@ -5,6 +5,10 @@ AQE on (runtime re-plan + skew-join splitting), Arrow enabled for all
 pandas/Arrow UDF exchange, shuffle partitions sized to the local core
 count (on a real cluster this is set to ~2-3x total cores by the
 submitter; AQE coalesces small partitions automatically).
+
+Catalyst runs the engine's plans interpreted: no whole-stage codegen
+and no generated projections, predicates or orderings (see
+``SQL_CONF``).
 """
 
 from __future__ import annotations
@@ -12,6 +16,45 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The runtime session confs the engine depends on. get_spark sets them;
+# scripts/submit_flagship.py applies the ones a spark-submit caller left
+# unset, so both entry points run the same engine.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # deterministic timestamp semantics regardless of box TZ: NTZ
+    # parquet values cast to instants at face value (the DuckDB
+    # oracles compare epoch_us of naive timestamps)
+    "spark.sql.session.timeZone": "UTC",
+    # broadcast threshold generous: rank tables / rule lookups are tiny
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # constraint propagation walks every filter/join predicate tree
+    # per plan node; with 500-rule when-chains + membership joins it
+    # turns optimization into minutes of single-threaded driver CPU
+    # (observed: >30 min at sf0.01). The inferred IsNotNull/equality
+    # constraints buy nothing here — every predicate is already
+    # explicit — so turn it off engine-wide.
+    "spark.sql.constraintPropagation.enabled": "false",
+    # Interpreted execution. Every request is a few short plans over
+    # little data, but the plans are wide: nine layer branches of
+    # 40-118 columns, 4k-arm CASE chains, a 182-column union. Generating
+    # and Janino-compiling Java for them cost more than it saved: a cold
+    # z16 tile compiled ~230 classes (~8 s of compile time, then JIT
+    # threads busy on the generated code) to run ~2k features once.
+    # With both confs Catalyst evaluates every projection, predicate,
+    # ordering and join through its interpreted eval path. Either one
+    # alone still compiles: wholeStage=false alone generates each
+    # operator's projections and predicates, NO_CODEGEN alone still
+    # fuses whole stages into Java. factoryMode is an internal conf, so
+    # tests/test_engine_policy.py asserts the compile count stays near
+    # zero, which also catches a Spark release that renames it.
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
 
 
 def get_spark(
@@ -29,29 +72,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # deterministic timestamp semantics regardless of box TZ: NTZ
-        # parquet values cast to instants at face value (the DuckDB
-        # oracles compare epoch_us of naive timestamps)
-        .config("spark.sql.session.timeZone", "UTC")
-        # our rule-engine projections are wide (60+ emit columns); the
-        # default maxFields=100 silently disables whole-stage codegen
-        # for them (interpreted eval, ~2x slower end-to-end). Janino
-        # failures still degrade gracefully (codegen.fallback=true).
-        .config("spark.sql.codegen.maxFields", "400")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # broadcast threshold generous: rank tables / rule lookups are tiny
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # constraint propagation walks every filter/join predicate tree
-        # per plan node; with 500-rule when-chains + membership joins it
-        # turns optimization into minutes of single-threaded driver CPU
-        # (observed: >30 min at sf0.01). The inferred IsNotNull/equality
-        # constraints buy nothing here — every predicate is already
-        # explicit — so turn it off engine-wide.
-        .config("spark.sql.constraintPropagation.enabled", "false")
         # every decorated DataFrame API call otherwise does TWO extra
         # py4j round trips (set_current_origin + clear) plus a Python
         # stack walk to record an error call-site. The engine's plan
@@ -59,18 +79,19 @@ def get_spark(
         # 7.8k round trips / 6.4s of socket wait building the 9-layer
         # plan at sf0.01), so this debugging nicety is a material part
         # of the driver fixed cost F. Error messages stay intact —
-        # only the "user line number" enrichment is dropped.
+        # only the "user line number" enrichment is dropped. A static
+        # conf, so it is set at session build, not in SQL_CONF.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # single-JVM local mode: the "driver" heap is also every
         # executor's heap, and Catalyst holds multi-layer plans during
         # optimization — size generously (the box has 128 GiB)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        # the rule engine generates LOTS of wide whole-stage-codegen
-        # classes; the JVM default 240 MB code cache fills over a long
-        # session and JIT quietly degrades to interpreted execution
-        # (the "JVM aging" that inflated late bench queries ~3x).
-        # 512 MB + flushing is the standard Spark recommendation for
-        # codegen-heavy workloads. Only takes effect at JVM launch —
+        # a 512 MB code cache with flushing, the standard Spark advice
+        # for sessions that load many generated classes: the JVM default
+        # 240 MB filled over long codegen sessions and JIT quietly fell
+        # back to interpreting (the "JVM aging" that inflated late
+        # queries ~3x). Kept as is since the engine stopped generating
+        # code; not re-measured. Only takes effect at JVM launch —
         # harmless on an already-running session.
         .config(
             "spark.driver.extraJavaOptions",
@@ -81,6 +102,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SQL_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

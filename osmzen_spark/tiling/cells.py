@@ -14,8 +14,9 @@ The cell id packs (z, x, y) into one int64:
 Morton interleave keeps spatially close cells numerically close, so a
 range/equi-join on cell ids is a locality-preserving shuffle key (the
 same role H3/S2 indexes play; we build our own since this engine is
-dependency-free). Everything here is whole-stage-codegen Column math —
-no UDFs, no Python in the hot path.
+dependency-free). Everything here is Column math that Catalyst
+evaluates JVM-side, interpreted like every engine expression (see
+session.py) — no UDFs, no Python in the hot path.
 """
 
 from __future__ import annotations

@@ -27,27 +27,16 @@ def main():
     from synthetic import synthetic_elements, synthetic_network
 
     from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.session import SQL_CONF
 
     spark = SparkSession.builder.appName("osmzen-flagship").getOrCreate()
-    # Engine-required session confs (mirrors osmzen_spark.session.get_spark),
-    # applied only where the submitter didn't set them explicitly. The
-    # critical one is constraintPropagation=false: Catalyst's constraint
-    # inference is super-linear on the 556-rule when-chain projections and
-    # OOMs/stalls the driver without it (see session.py). The rest keep
-    # Arrow exchange, codegen on wide projections, and UTC semantics on
-    # regardless of the submitting environment.
+    # The engine's session confs (the ones get_spark sets), applied only
+    # where the submitter didn't set them explicitly. The critical one is
+    # constraintPropagation=false: Catalyst's constraint inference is
+    # super-linear on the 556-rule when-chain projections and OOMs/stalls
+    # the driver without it (see session.py).
     submitted = spark.sparkContext.getConf()
-    for k, v in (
-        ("spark.sql.constraintPropagation.enabled", "false"),
-        ("spark.sql.codegen.maxFields", "400"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-    ):
+    for k, v in SQL_CONF.items():
         if not submitted.contains(k):
             spark.conf.set(k, v)
     t0 = time.time()

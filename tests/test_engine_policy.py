@@ -1,6 +1,7 @@
 """NormalizeEngine's single evaluation path and stage-cut policy: the
 cut is a parquet checkpoint in an engine-owned temp dir that release()
-deletes, the compiled rule payload is built once per engine config, the
+deletes, the compiled rule payload is built once per engine config,
+Catalyst runs the engine's plans interpreted (no generated Java), the
 package reads no environment switch beyond the documented ones, and
 every module of the package is reachable from an engine entry point."""
 
@@ -12,6 +13,7 @@ from osmzen_spark.geom.derive import geometry_from_rings
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
 from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
+from synthetic import SF_SMALL, synthetic_elements
 
 PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "osmzen_spark")
 
@@ -88,6 +90,45 @@ def test_rule_payload_built_once_per_engine(spark, monkeypatch):
         engine.process(elements, zoom=16, layer_names=["buildings", "roads"])
     assert len(seen) == 4
     assert all(p is seen[0] for p in seen)
+
+
+def _plan_nodes(plan):
+    """Class names of every node of an executed physical plan, inside
+    adaptive plans and query stages too."""
+    name = plan.getClass().getSimpleName()
+    yield name
+    if name == "AdaptiveSparkPlanExec":
+        children = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        children = [plan.plan()]
+    else:
+        seq = plan.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for child in children:
+        yield from _plan_nodes(child)
+
+
+def test_plans_run_interpreted(spark):
+    """A bounded process() over every layer runs without whole-stage
+    codegen and compiles (almost) no Java: the few classes left are
+    ones Spark generates with no interpreted twin. With codegen on, the
+    same run compiles well over a hundred classes, so this also fails
+    if a Spark release renames the internal factoryMode conf."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+    before = compiled.getCount()
+    engine = NormalizeEngine()
+    layers = engine.process(
+        synthetic_elements(spark, SF_SMALL), zoom=16, bound=(-175.0, -70.0, -165.0, -60.0), cache=True
+    )
+    rows = 0
+    for name, df in layers.items():
+        rows += len(df.collect())
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        assert "WholeStageCodegenExec" not in nodes, name
+    engine.release()
+    assert rows > 0
+    assert compiled.getCount() - before < 10
 
 
 def test_env_switches_are_allow_listed():

@@ -108,7 +108,8 @@ def test_engine_lineage_mode_resumes(spark, tmp_path, monkeypatch):
     per-bucket lineage + manifest, and a second pipeline run with the
     same checkpoint dir RELOADS each validated stage instead of
     recomputing it (stage data files untouched) — the north rule's
-    kill-resume at stage granularity, identical output rows."""
+    kill-resume at stage granularity, identical output rows. The eval
+    union is written partitioned by zen_layer."""
     from tests.conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
 
     monkeypatch.setenv("OSMZEN_CHECKPOINT_DIR", str(tmp_path))
@@ -152,6 +153,12 @@ def test_engine_lineage_mode_resumes(spark, tmp_path, monkeypatch):
     assert stages, "no stage checkpoints written"
     for s in stages:
         assert os.path.exists(os.path.join(tmp_path, s, "_lineage_manifest.json")), s
+    # the eval union is partitioned by layer, like the temp-dir cut, and
+    # its partitioned checkpoint validates, also against a re-derived
+    # per-bucket lineage
+    union = os.path.join(tmp_path, next(s for s in stages if s.endswith("_eval_union")))
+    assert "zen_layer=buildings" in os.listdir(os.path.join(union, "data"))
+    assert validate_stage(spark, union, deep=True)
     mtimes = {
         s: os.path.getmtime(os.path.join(tmp_path, s, "_lineage_manifest.json"))
         for s in stages
