@@ -14,12 +14,14 @@ Spark-first equivalent:
 * polygon-vs-line classification is the standard osm-polygon-features
   ruleset (closed ring + area-ish tag, with `area=yes/no` override),
   evaluated as pure Columns.
-* multipolygon/boundary relations stitch member-way rings in an
-  Arrow-batched applyInPandas keyed on relation_id (relations are a
-  sliver of OSM and members per relation are bounded; the stitch is
-  endpoint matching, inherently per-relation sequential). Unclosable
-  outer rings get the reference's padded-bound patch ring; unclosable
-  inners are dropped.
+* multipolygon/boundary relations stitch member-way rings in a
+  grouped applyInArrow keyed on relation_id (relations are a sliver of
+  OSM and members per relation are bounded; the stitch is endpoint
+  matching, inherently per-relation sequential). Unclosable outer
+  rings get the reference's padded-bound patch ring; unclosable
+  inners are dropped. Member ways that are missing, or have fewer
+  than 2 nodes, add no ring, and a relation left with no usable
+  member becomes no feature.
 
 At 100 TB the two shuffles here (node join, way/relation grouping) are
 the natural partitioning of OSM assembly; everything downstream is the
@@ -28,11 +30,13 @@ normal engine pipeline.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from osmzen_spark.geom.derive import GEOMETRY_TYPE
+from osmzen_spark.geom.derive import GEOMETRY_TYPE, _flat
 
 WORLD_BOUND = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
 
@@ -130,17 +134,23 @@ def _stitch_relation_factory(bound):
         [miny - h, miny - h, maxy + h, maxy + h, miny - h],
     )
 
-    def stitch(pdf):
-        import pandas as pd
+    arrow_schema = to_arrow_schema(_REL_STITCH_SCHEMA)
 
-        rid = int(pdf["relation_id"].iloc[0])
+    def stitch(table):
+        import pyarrow.compute as pc
+
+        rid = table.column("relation_id")[0].as_py()
+        if "seq" in table.column_names:
+            table = table.take(pc.sort_indices(table, [("seq", "ascending")]))
+        xs_all, pt_off = _flat(table.column("xs"))
+        ys_all, _ = _flat(table.column("ys"))
         segs = {"outer": [], "inner": []}
-        order = pdf.sort_values("seq") if "seq" in pdf.columns else pdf
-        for _, row in order.iterrows():
-            role = row["member_role"] if row["member_role"] in ("inner",) else "outer"
-            xs, ys = list(row["xs"]), list(row["ys"])
-            if len(xs) >= 2:
-                segs[role].append((xs, ys))
+        for i, role in enumerate(table.column("member_role").to_pylist()):
+            a, b = pt_off[i], pt_off[i + 1]
+            if b - a >= 2:
+                segs["inner" if role == "inner" else "outer"].append(
+                    (xs_all[a:b].tolist(), ys_all[a:b].tolist())
+                )
 
         def close_rings(parts):
             """Endpoint-match open ways into closed rings. Returns
@@ -188,7 +198,7 @@ def _stitch_relation_factory(bound):
         if n_bad or (not outers and inners):
             outers.append(patch_ring)
         if not outers:
-            return pd.DataFrame(columns=["relation_id", "geom_type", "geometry"])
+            return arrow_schema.empty_table()
 
         xs_flat: list[float] = []
         ys_flat: list[float] = []
@@ -204,20 +214,10 @@ def _stitch_relation_factory(bound):
             ys_flat += ys
             lens.append(len(xs))
             roles.append(1)
+        geometry = {"xs": xs_flat, "ys": ys_flat, "ring_lens": lens, "ring_roles": roles}
         gt = "MultiPolygon" if len(outers) > 1 else "Polygon"
-        return pd.DataFrame(
-            [
-                {
-                    "relation_id": rid,
-                    "geom_type": gt,
-                    "geometry": {
-                        "xs": xs_flat,
-                        "ys": ys_flat,
-                        "ring_lens": lens,
-                        "ring_roles": roles,
-                    },
-                }
-            ]
+        return pa.Table.from_pylist(
+            [{"relation_id": rid, "geom_type": gt, "geometry": geometry}], schema=arrow_schema
         )
 
     return stitch
@@ -291,7 +291,7 @@ def assemble_elements(
                 how="inner",
             )
         )
-        stitched = mem.groupBy("relation_id").applyInPandas(
+        stitched = mem.groupBy("relation_id").applyInArrow(
             _stitch_relation_factory(bound or WORLD_BOUND), schema=_REL_STITCH_SCHEMA
         )
         rel_feats = mp.join(stitched, on="relation_id", how="inner").select(

@@ -28,19 +28,12 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     small) the explicit broadcast hint skips a shuffle. At 10^9+
     features the distinct-id / aggregate sides of these joins are
     gigabytes, and a forced broadcast kills the driver — set the Spark
-    conf ``spark.osmzen.broadcastPostJoins=false`` (or env
-    ``OSMZEN_BROADCAST_POSTJOINS=0``) for cluster runs: the hint is
-    dropped and AQE still converts to a broadcast join at runtime
-    whenever the actual size fits ``autoBroadcastJoinThreshold``."""
-    import os
-
-    flag = os.environ.get("OSMZEN_BROADCAST_POSTJOINS")
-    if flag is None:
-        try:
-            flag = df.sparkSession.conf.get("spark.osmzen.broadcastPostJoins", "true")
-        except Exception:
-            flag = "true"
-    if str(flag).lower() in ("0", "false", "no"):
+    conf ``spark.osmzen.broadcastPostJoins=false`` for cluster runs:
+    the hint is dropped and AQE still converts to a broadcast join at
+    runtime whenever the actual size fits
+    ``autoBroadcastJoinThreshold``."""
+    flag = df.sparkSession.conf.get("spark.osmzen.broadcastPostJoins", "true")
+    if flag.lower() in ("0", "false", "no"):
         return df
     return F.broadcast(df)
 
@@ -429,8 +422,6 @@ def remove_duplicate_features(layers, zoom, params):
     (id, type) order per key. Physical shape: tiny multi-candidate
     aggregate -> Arrow-batched greedy scan -> broadcast anti-join of
     dropped ids (see inline comment)."""
-    import pandas as pd
-
     end = params.get("end_zoom", 0)
     if end and zoom > end:
         return layers
@@ -507,7 +498,7 @@ def remove_duplicate_features(layers, zoom, params):
         #      first-wins order), keeping only multi-candidate groups —
         #      a tiny aggregate;
         #   3) run the order-dependent scan per group in an
-        #      Arrow-batched mapInPandas (numpy-vectorized haversine
+        #      Arrow-batched mapInArrow (numpy-vectorized haversine
         #      against the kept set, so a 10^4-candidate group is
         #      ~10^8 SIMD flops, not 10^8 Python trips);
         #   4) ANTI-join the dropped ids back (size-gated broadcast) —
@@ -562,18 +553,23 @@ def remove_duplicate_features(layers, zoom, params):
 
     def drop_ids(batch_iter):
         import numpy as np
+        import pyarrow as pa
 
         r2 = 2.0 * 6371000.0
-        for pdf in batch_iter:
-            did: list[int] = []
-            dtype: list[str] = []
-            dlrank: list[int] = []
-            for pts_arr in pdf["__pts"]:
-                n = len(pts_arr)
-                lons = np.fromiter((p["clon"] for p in pts_arr), dtype=np.float64, count=n)
-                lats = np.fromiter((p["clat"] for p in pts_arr), dtype=np.float64, count=n)
-                lam = np.radians(lons)
-                phi = np.radians(lats)
+        for batch in batch_iter:
+            # one group's candidates = one slice of the flat struct values
+            pts = batch.column(0)
+            offs = pts.offsets.to_numpy()
+            offs = offs - offs[0]
+            flat = pts.flatten()
+            lam_all = np.radians(flat.field("clon").to_numpy(zero_copy_only=False))
+            phi_all = np.radians(flat.field("clat").to_numpy(zero_copy_only=False))
+            dropped: list[int] = []
+            for g in range(len(offs) - 1):
+                s = int(offs[g])
+                n = int(offs[g + 1]) - s
+                lam = lam_all[s : s + n]
+                phi = phi_all[s : s + n]
                 cphi = np.cos(phi)
                 kept_idx = np.empty(n, dtype=np.int64)
                 n_kept = 0
@@ -586,23 +582,23 @@ def remove_duplicate_features(layers, zoom, params):
                         )
                         d = r2 * np.arcsin(np.minimum(1.0, np.sqrt(a)))
                         if (d < dist_m).any():
-                            did.append(pts_arr[i]["id"])
-                            dtype.append(pts_arr[i]["type"])
-                            dlrank.append(pts_arr[i]["__lrank"])
+                            dropped.append(s + i)
                             continue
                     kept_idx[n_kept] = i
                     n_kept += 1
-            yield pd.DataFrame(
-                {
-                    "__did": pd.Series(did, dtype="int64"),
-                    "__dtype": pd.Series(dtype, dtype="object"),
-                    "__dlrank": pd.Series(dlrank, dtype="int32"),
-                }
+            take = pa.array(dropped, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    flat.field("id").take(take).cast(pa.int64()),
+                    flat.field("type").take(take).cast(pa.string()),
+                    flat.field("__lrank").take(take).cast(pa.int32()),
+                ],
+                names=["__did", "__dtype", "__dlrank"],
             )
 
-    dropped_df = cands.mapInPandas(drop_ids, schema="__did long, __dtype string, __dlrank int")
+    dropped_df = cands.select("__pts").mapInArrow(drop_ids, schema="__did long, __dtype string, __dlrank int")
     if len(active) > 1:
-        # one shared scan feeds several anti-joins: cut the mapInPandas
+        # one shared scan feeds several anti-joins: cut the mapInArrow
         # subtree so it executes once, not once per layer
         dropped_df = dropped_df.localCheckpoint(eager=False)
     for name in active:

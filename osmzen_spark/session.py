@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Defaults chosen for the 100TB design point, scaled down for local test:
-AQE on (runtime re-plan + skew-join splitting), Arrow enabled for all
-pandas/Arrow UDF exchange, shuffle partitions sized to the local core
+AQE on (runtime re-plan + skew-join splitting), Arrow enabled for
+DataFrame <-> pandas conversion (the engine's own Python passes are
+Arrow UDFs), shuffle partitions sized to the local core
 count (on a real cluster this is set to ~2-3x total cores by the
 submitter; AQE coalesces small partitions automatically).
 
@@ -86,20 +87,6 @@ def get_spark(
         # executor's heap, and Catalyst holds multi-layer plans during
         # optimization — size generously (the box has 128 GiB)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        # a 512 MB code cache with flushing, the standard Spark advice
-        # for sessions that load many generated classes: the JVM default
-        # 240 MB filled over long codegen sessions and JIT quietly fell
-        # back to interpreting (the "JVM aging" that inflated late
-        # queries ~3x). Kept as is since the engine stopped generating
-        # code; not re-measured. Only takes effect at JVM launch —
-        # harmless on an already-running session.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTIONS",
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
-            ),
-        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in {**SQL_CONF, **(extra_conf or {})}.items():

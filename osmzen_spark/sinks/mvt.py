@@ -9,13 +9,12 @@ per-layer interned key/value tables), with a decoder twin used by the
 tests to round-trip every byte.
 
 Spark shape: `mvt_tiles` shuffles the normalized feature table ONCE on
-(tile_x, tile_y) — the engine's natural partition key — sorts within
-partitions so tiles arrive contiguous, and encodes batch-vectorized
-inside mapInPandas (projection/quantization/zigzag/varint all as
-whole-array numpy; per-tile state is O(tile) via a carry buffer, not
-O(partition)). At 10^12 features this is the standard tile-build
-fan-out: shuffle on the tile key, encode locally, write blobs to
-object storage.
+(tile_x, tile_y) — the engine's natural partition key — and encodes
+each tile's Arrow table inside a grouped applyInArrow
+(projection/quantization/zigzag/varint all as whole-array numpy over
+the flat coordinate buffers; per-tile state is O(tile)). At 10^12
+features this is the standard tile-build fan-out: shuffle on the tile
+key, encode locally, write blobs to object storage.
 
 Scope: Point / LineString / Polygon geometries, string/double/bool
 properties, configurable extent (default 4096). Geometries arrive in
@@ -377,74 +376,76 @@ def mvt_tiles(
     """Normalized feature rows -> one MVT blob per (tile_x, tile_y).
 
     Scale shape: ONE shuffle (repartition on the engine's natural tile
-    key) + sortWithinPartitions(tile, zen_layer, id) so every tile's
-    rows arrive contiguous and in deterministic order, then a
-    mapInPandas encoder that runs batch-VECTORIZED: Mercator
-    projection + extent quantization over all points of an Arrow
-    batch at once, zigzag deltas as whole-array int math, varints via
-    the numpy LEB128 kernel (encode_varints). Python touches features
-    (assembling ~100-byte protobuf bodies) and tiles (key/value
-    interning tables), never points or varint bytes — the first
-    applyInPandas-per-tile version spent ~3 ms/feature on per-point
-    math and per-group overhead; this one is ~30 us/feature.
-
-    A tile whose rows straddle an Arrow batch boundary is carried into
-    the next batch (tiles cannot straddle partitions: the shuffle is
-    ON the tile key), so memory is O(batch + largest tile), not
-    O(partition). Input needs: geometry struct (xs/ys/ring_lens),
-    geom_type, zen_layer, id, tile_x, tile_y at ``zoom``, plus
-    ``property_cols``. Returns (tile_x, tile_y, n_features, mvt).
-    Byte-parity with the scalar encode_tile path is pytest-gated
-    (tests/test_mvt.py)."""
+    key), then a grouped Arrow encoder per tile: the tile's rows arrive
+    as one Arrow table, are stably sorted by (zen_layer, id) and encoded
+    tile-VECTORIZED: Mercator projection + extent quantization over
+    the flat coordinate buffers at once, zigzag deltas as whole-array
+    int math, varints via the numpy LEB128 kernel (encode_varints).
+    Python touches features (assembling ~100-byte protobuf bodies) and
+    the tile (key/value interning tables), never points or varint
+    bytes. Memory is O(largest tile). Input needs: geometry struct
+    (xs/ys/ring_lens), geom_type, zen_layer, id, tile_x, tile_y at
+    ``zoom``, plus ``property_cols``. Returns (tile_x, tile_y,
+    n_features, mvt). Byte-parity with the scalar encode_tile path is
+    pytest-gated (tests/test_mvt.py)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from osmzen_spark.geom.derive import _flat
 
     n_tiles = 1 << zoom
     max_lat = 85.05112877980659
     pcols = list(property_cols)
-    out_cols = ["tile_x", "tile_y", "n_features", "mvt"]
+    out_schema = pa.schema(
+        [
+            ("tile_x", pa.int64()),
+            ("tile_y", pa.int64()),
+            ("n_features", pa.int32()),
+            ("mvt", pa.binary()),
+        ]
+    )
 
-    def encode_ready(pdf):
-        n = len(pdf)
-        if n == 0:
-            return []
-        geo = pdf["geometry"]
-        xs_l = [np.asarray(g["xs"], dtype=np.float64) for g in geo]
-        ys_l = [np.asarray(g["ys"], dtype=np.float64) for g in geo]
-        rl_l = [np.asarray(g["ring_lens"], dtype=np.int64) for g in geo]
-        npts = np.fromiter((len(a) for a in xs_l), dtype=np.int64, count=n)
-        xs = np.concatenate(xs_l)
-        ys = np.concatenate(ys_l)
-        tx = pdf["tile_x"].to_numpy(dtype=np.int64)
-        ty = pdf["tile_y"].to_numpy(dtype=np.int64)
+    def encode_group(table):
+        import pyarrow.compute as pc
+
+        # feature order inside the tile: (zen_layer, id), ties kept in
+        # arrival order (the sort is stable)
+        table = table.take(
+            pc.sort_indices(
+                table, [("zen_layer", "ascending"), ("id", "ascending")], null_placement="at_start"
+            )
+        )
+        n = table.num_rows
+        tx = table.column("tile_x")[0].as_py()
+        ty = table.column("tile_y")[0].as_py()
+        geo = table.column("geometry").combine_chunks()
+        xs, offs = _flat(geo.field("xs"))
+        ys, _ = _flat(geo.field("ys"))
+        ring_lens, ring_off = _flat(geo.field("ring_lens"))
+        rl_l = [ring_lens[ring_off[i] : ring_off[i + 1]] for i in range(n)]
         # projection + quantization, all points at once (trunc toward
         # zero then clamp — identical to the scalar reference)
-        xn = (xs + 180.0) / 360.0 * n_tiles - np.repeat(tx, npts)
+        xn = (xs + 180.0) / 360.0 * n_tiles - tx
         rlat = np.radians(np.clip(ys, -max_lat, max_lat))
         yn = (1.0 - np.log(np.tan(rlat) + 1.0 / np.cos(rlat)) / np.pi) / 2.0 * n_tiles
-        yn -= np.repeat(ty, npts)
+        yn -= ty
         gx = np.clip(np.trunc(xn * extent), 0, extent).astype(np.int64)
         gy = np.clip(np.trunc(yn * extent), 0, extent).astype(np.int64)
 
-        offs = np.concatenate(([0], np.cumsum(npts)))
-        gts = pdf["geom_type"].to_numpy()
-        ids = pdf["id"].to_numpy()
-        lnames = pdf["zen_layer"].to_numpy()
-        props = {c: pdf[c].to_numpy() for c in pcols}
-
+        ids = table.column("id").to_numpy()
+        lnames = table.column("zen_layer").to_pylist()
+        props = {c: table.column(c).to_pylist() for c in pcols}
         gcodes = np.fromiter(
             (
                 3 if g.endswith("Polygon") else 2 if g.endswith("LineString") else 1
-                for g in gts
+                for g in table.column("geom_type").to_pylist()
             ),
             dtype=np.int8,
             count=n,
         )
         feat_cmds = _encode_commands_batch(gx, gy, offs, gcodes, rl_l)
 
-        keys = pdf[["tile_x", "tile_y"]].to_numpy()
-        change = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1)) + 1
-        bounds = np.concatenate(([0], change, [n]))
         # constant protobuf tag bytes + the small-varint cache replace
         # four function calls per feature; byte output is identical
         # (varint coding of a value is unique)
@@ -454,89 +455,49 @@ def mvt_tiles(
             _tag(3, _VARINT),
             _tag(4, _LEN),
         )
-        out_rows = []
-        for bi in range(len(bounds) - 1):
-            s, e = int(bounds[bi]), int(bounds[bi + 1])
-            layer_parts: dict[str, tuple[dict, dict, list]] = {}
-            for i in range(s, e):
-                keys_t, vals_t, feats = layer_parts.setdefault(
-                    str(lnames[i]), ({}, {}, [])
-                )
-                tags_b = b""
-                for c in pcols:
-                    v = props[c][i]
-                    if v is None or v != v:  # drop None/NaN
-                        continue
-                    if isinstance(v, np.generic):
-                        v = v.item()
-                    ki = keys_t.setdefault(c, len(keys_t))
-                    vi = vals_t.setdefault((type(v).__name__, v), len(vals_t))
-                    tags_b += _varint_c(ki) + _varint_c(vi)
-                cb = feat_cmds[i]
-                body = (
-                    t1v
-                    + _varint_c(abs(int(ids[i])))
-                    + t2l
-                    + _varint_c(len(tags_b))
-                    + tags_b
-                    + t3v
-                    + _varint_c(int(gcodes[i]))
-                    + t4l
-                    + _varint_c(len(cb))
-                    + cb
-                )
-                feats.append(t2l + _varint_c(len(body)) + body)
-            blob = bytearray()
-            nfeat = 0
-            for lname, (keys_t, vals_t, feats) in layer_parts.items():
-                lb = bytearray()
-                lb += _tag(15, _VARINT) + _varint(2)
-                lb += _len_field(1, lname.encode("utf-8"))
-                for fe in feats:
-                    lb += fe
-                for kk in keys_t:
-                    lb += _len_field(3, kk.encode("utf-8"))
-                for _t, vv in vals_t:
-                    lb += _len_field(4, _mvt_value(vv))
-                lb += _tag(5, _VARINT) + _varint(extent)
-                blob += _len_field(3, bytes(lb))
-                nfeat += len(feats)
-            out_rows.append((int(keys[s][0]), int(keys[s][1]), nfeat, bytes(blob)))
-        return out_rows
-
-    def gen(batches):
-        # carry: list of frames, all rows of ONE (still-open) tile key.
-        # Kept as a frame LIST so a tile spanning k Arrow batches costs
-        # one concat total, not k re-concats of the growing carry
-        # (the O(k^2) copying a hot tile used to pay).
-        carry: list = []
-        carry_key = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            first_key = (pdf["tile_x"].iat[0], pdf["tile_y"].iat[0])
-            if carry and first_key != carry_key:
-                # the carried tile is complete: flush it on its own
-                rows = encode_ready(pd.concat(carry, ignore_index=True))
-                carry = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
-            lx, ly = pdf["tile_x"].iat[-1], pdf["tile_y"].iat[-1]
-            last = ((pdf["tile_x"] == lx) & (pdf["tile_y"] == ly)).to_numpy()
-            ready = pdf[~last]
-            if len(ready):
-                if carry:  # carried rows belong to ready's first tile
-                    ready = pd.concat([*carry, ready], ignore_index=True)
-                    carry = []
-                rows = encode_ready(ready)
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
-            carry.append(pdf[last].reset_index(drop=True))
-            carry_key = (lx, ly)
-        if carry:
-            rows = encode_ready(pd.concat(carry, ignore_index=True))
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
+        layer_parts: dict[str, tuple[dict, dict, list]] = {}
+        for i in range(n):
+            keys_t, vals_t, feats = layer_parts.setdefault(str(lnames[i]), ({}, {}, []))
+            tags_b = b""
+            for c in pcols:
+                v = props[c][i]
+                if v is None or v != v:  # drop None/NaN
+                    continue
+                ki = keys_t.setdefault(c, len(keys_t))
+                vi = vals_t.setdefault((type(v).__name__, v), len(vals_t))
+                tags_b += _varint_c(ki) + _varint_c(vi)
+            cb = feat_cmds[i]
+            body = (
+                t1v
+                + _varint_c(abs(int(ids[i])))
+                + t2l
+                + _varint_c(len(tags_b))
+                + tags_b
+                + t3v
+                + _varint_c(int(gcodes[i]))
+                + t4l
+                + _varint_c(len(cb))
+                + cb
+            )
+            feats.append(t2l + _varint_c(len(body)) + body)
+        blob = bytearray()
+        nfeat = 0
+        for lname, (keys_t, vals_t, feats) in layer_parts.items():
+            lb = bytearray()
+            lb += _tag(15, _VARINT) + _varint(2)
+            lb += _len_field(1, lname.encode("utf-8"))
+            for fe in feats:
+                lb += fe
+            for kk in keys_t:
+                lb += _len_field(3, kk.encode("utf-8"))
+            for _t, vv in vals_t:
+                lb += _len_field(4, _mvt_value(vv))
+            lb += _tag(5, _VARINT) + _varint(extent)
+            blob += _len_field(3, bytes(lb))
+            nfeat += len(feats)
+        return pa.Table.from_pylist(
+            [{"tile_x": tx, "tile_y": ty, "n_features": nfeat, "mvt": bytes(blob)}], schema=out_schema
+        )
 
     cols = ["tile_x", "tile_y", "geometry", "geom_type", "zen_layer", "id", *property_cols]
     # Explicit partition count: a bare repartition(cols) exchange is
@@ -547,13 +508,14 @@ def mvt_tiles(
     # count to the session's shuffle parallelism keeps the Python stage
     # wide; the value is config-derived (the submitter sizes
     # spark.sql.shuffle.partitions to the cluster), not a local
-    # constant.
+    # constant. The grouping reuses this hash partitioning, so the
+    # encoder adds no second shuffle.
     n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         df.select(*dict.fromkeys(cols))
         .repartition(n_parts, "tile_x", "tile_y")
-        .sortWithinPartitions("tile_x", "tile_y", "zen_layer", "id")
-        .mapInPandas(gen, "tile_x long, tile_y long, n_features int, mvt binary")
+        .groupBy("tile_x", "tile_y")
+        .applyInArrow(encode_group, from_arrow_schema(out_schema))
     )
 
 

@@ -168,20 +168,20 @@ def collections_to_lines(spark: SparkSession, path: str) -> DataFrame:
     happens JVM-side in `parse_geojson_features`."""
     import json
 
-    import pandas as pd
+    import pyarrow as pa
 
     files = spark.read.format("binaryFile").load(path).select("content")
 
     def gen(batches):
-        for pdf in batches:
+        for batch in batches:
             out = []
-            for blob in pdf["content"]:
-                doc = json.loads(bytes(blob))
+            for blob in batch.column(0).to_pylist():
+                doc = json.loads(blob)
                 feats = doc["features"] if doc.get("type") == "FeatureCollection" else [doc]
                 out.extend(json.dumps(f, separators=(",", ":")) for f in feats)
-            yield pd.DataFrame({"value": out})
+            yield pa.RecordBatch.from_arrays([pa.array(out, type=pa.string())], names=["value"])
 
-    return files.mapInPandas(gen, "value string")
+    return files.mapInArrow(gen, "value string")
 
 
 def read_feature_collections(spark: SparkSession, path: str) -> DataFrame:

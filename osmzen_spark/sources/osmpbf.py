@@ -35,7 +35,7 @@ import zlib
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from osmzen_spark.sources.osmxml import OsmTables, raw_tables
+from osmzen_spark.sources.osmxml import PARSED_SCHEMA, OsmTables, elements_batch, raw_tables
 
 # ------------------------------------------------------------------
 # vectorized varint / zigzag kernels
@@ -340,13 +340,6 @@ def _dense_tags(kv: np.ndarray, n_nodes: int, strings: list[str]) -> list[dict]:
 # Spark reader
 # ------------------------------------------------------------------
 
-_PARSED_SCHEMA = (
-    "element_type string, element_id long, lon double, lat double, "
-    "tags map<string,string>, nds array<long>, "
-    "members array<struct<mtype:string,mref:long,mrole:string>>"
-)
-
-
 def parse_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
     """.osm.pbf file -> parsed element rows, blob-parallel.
 
@@ -356,8 +349,6 @@ def parse_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
     real cluster the same pattern runs against any FileSystem that
     supports range reads (HDFS/S3 posix mounts); the split model is
     identical to Parquet row groups."""
-    import pandas as pd
-
     index = [
         (off, size)
         for off, size, btype in scan_blob_index(path)
@@ -369,21 +360,15 @@ def parse_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
 
     def gen(batches):
         with open(path, "rb") as f:
-            for pdf in batches:
+            for batch in batches:
                 rows = []
-                for off, size in zip(pdf["off"].tolist(), pdf["size"].tolist()):
+                for off, size in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                     f.seek(off)
                     block = _blob_payload(memoryview(f.read(size)))
                     rows.extend(decode_primitive_block(block))
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "element_type", "element_id", "lon", "lat",
-                        "tags", "nds", "members",
-                    ],
-                )
+                yield elements_batch(rows)
 
-    return splits.mapInPandas(gen, _PARSED_SCHEMA)
+    return splits.mapInArrow(gen, PARSED_SCHEMA)
 
 
 def read_osm_pbf(spark: SparkSession, path: str, stage_cut: bool = True) -> OsmTables:

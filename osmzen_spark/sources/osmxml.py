@@ -13,7 +13,7 @@ One XML *file* is the unit of parallelism: `spark.read.format
 across executors, so a directory of per-region extracts (the way OSM
 XML ships in practice — planet dumps are distributed as many regional
 .osm files or as PBF) parses fully in parallel with zero shuffle.
-Parsing is a streaming `iterparse` inside `mapInPandas`: memory per
+Parsing is a streaming `iterparse` inside `mapInArrow`: memory per
 task is O(one element), not O(file), so a multi-GB regional extract
 is fine as long as it fits the executor's disk-read budget. A single
 monolithic planet.xml cannot be split mid-file by any correct parser
@@ -28,16 +28,37 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # one row per OSM element; parallel columns nds/members are NULL for
 # the types that lack them
-_PARSED_SCHEMA = (
-    "element_type string, element_id long, lon double, lat double, "
-    "tags map<string,string>, nds array<long>, "
-    "members array<struct<mtype:string,mref:long,mrole:string>>"
+_PARSED_ARROW = pa.schema(
+    [
+        ("element_type", pa.string()),
+        ("element_id", pa.int64()),
+        ("lon", pa.float64()),
+        ("lat", pa.float64()),
+        ("tags", pa.map_(pa.string(), pa.string())),
+        ("nds", pa.list_(pa.int64())),
+        (
+            "members",
+            pa.list_(pa.struct([("mtype", pa.string()), ("mref", pa.int64()), ("mrole", pa.string())])),
+        ),
+    ]
 )
+PARSED_SCHEMA = from_arrow_schema(_PARSED_ARROW)
+
+
+def elements_batch(rows: list[tuple]) -> pa.RecordBatch:
+    """(type, id, lon, lat, tags, nds, members) element tuples -> one
+    Arrow batch of the parsed-elements schema."""
+    cols = list(zip(*rows)) if rows else [()] * len(_PARSED_ARROW)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _PARSED_ARROW)], schema=_PARSED_ARROW
+    )
 
 
 def _iter_osm_elements(data: bytes):
@@ -95,38 +116,25 @@ def _iter_osm_elements(data: bytes):
 
 def parse_osm_xml_blobs(blobs: DataFrame, content_col: str = "content") -> DataFrame:
     """DataFrame with one XML document (bytes or str) per row -> parsed
-    OSM element rows (`_PARSED_SCHEMA`). The document is the
+    OSM element rows (`PARSED_SCHEMA`). The document is the
     parallelism unit; parsing streams via iterparse."""
-    import pandas as pd
 
     def gen(batches):
-        for pdf in batches:
-            rows = [
-                tup
-                for blob in pdf[content_col]
-                for tup in _iter_osm_elements(
-                    blob.encode() if isinstance(blob, str) else bytes(blob)
-                )
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "element_type",
-                    "element_id",
-                    "lon",
-                    "lat",
-                    "tags",
-                    "nds",
-                    "members",
-                ],
+        for batch in batches:
+            yield elements_batch(
+                [
+                    tup
+                    for blob in batch.column(0).to_pylist()
+                    for tup in _iter_osm_elements(blob.encode() if isinstance(blob, str) else blob)
+                ]
             )
 
-    return blobs.select(content_col).mapInPandas(gen, _PARSED_SCHEMA)
+    return blobs.select(content_col).mapInArrow(gen, PARSED_SCHEMA)
 
 
 def parse_osm_xml(spark: SparkSession, path: str) -> DataFrame:
     """path (file, dir, or glob of .osm/.xml files) -> one DataFrame
-    of parsed OSM elements (`_PARSED_SCHEMA`). One task per file."""
+    of parsed OSM elements (`PARSED_SCHEMA`). One task per file."""
     return parse_osm_xml_blobs(
         spark.read.format("binaryFile").load(path), "content"
     )

@@ -1,0 +1,70 @@
+"""Degenerate inputs through the Arrow UDF passes: each gives a
+documented result or a clear error, never a task crash."""
+
+import os
+import struct
+
+import pytest
+
+from osmzen_spark.sources.osmpbf import _encode_varint, _ld, _tag, encode_pbf, read_osm_pbf
+
+from test_assembly import _raw_tables
+
+
+def test_pbf_without_data_blobs_gives_empty_tables(spark, tmp_path):
+    path = os.path.join(tmp_path, "header-only.osm.pbf")
+    with open(path, "wb") as f:
+        f.write(encode_pbf([], [], []))
+    t = read_osm_pbf(spark, path)
+    assert [df.count() for df in t] == [0, 0, 0, 0, 0]
+
+
+@pytest.mark.parametrize("field", [4, 7], ids=["lzma", "zstd"])
+def test_pbf_lzma_zstd_blob_is_a_clear_error(spark, tmp_path, field):
+    blob = _ld(field, b"\x00" * 16) + _tag(2, 0) + _encode_varint(64)
+    hdr = _ld(1, b"OSMData") + _tag(3, 0) + _encode_varint(len(blob))
+    path = os.path.join(tmp_path, "packed.osm.pbf")
+    with open(path, "wb") as f:
+        f.write(encode_pbf([], [], []) + struct.pack(">I", len(hdr)) + hdr + blob)
+    with pytest.raises(Exception, match="lzma/zstd unsupported"):
+        read_osm_pbf(spark, path)
+
+
+def test_multipolygon_with_missing_or_short_members(spark):
+    """Member ways that are missing, or have fewer than 2 nodes, add no
+    ring; a relation left with no usable member becomes no feature, and
+    the usable members of any other relation stitch as usual."""
+    from osmzen_spark.pipeline.assembly import assemble_elements
+
+    square = [(1, 0.0, 0.0), (2, 0.01, 0.0), (3, 0.01, 0.01), (4, 0.0, 0.01)]
+    node_rows = [(i, lon, lat, {}) for i, lon, lat in square] + [(9, 0.5, 0.5, {})]
+    way_node_rows = [(101, s, n) for s, n in enumerate([1, 2, 3, 4, 1])] + [(102, 0, 9)]
+    way_rows = [(101, {}), (102, {})]
+    mp = {"type": "multipolygon", "natural": "water"}
+    rel_rows = [(900, mp), (901, mp), (902, mp)]
+    rel_member_rows = [
+        (900, "way", 999, "outer", 0),  # missing way only
+        (901, "way", 102, "outer", 0),  # 1-node way only
+        (902, "way", 999, "outer", 0),  # missing + 1-node + one closed way
+        (902, "way", 102, "outer", 1),
+        (902, "way", 101, "outer", 2),
+    ]
+    tables = _raw_tables(spark, node_rows, way_node_rows, way_rows, rel_rows, rel_member_rows)
+    rows = assemble_elements(*tables).collect()
+    assert [r["element_id"] for r in rows] == [902]
+    g = rows[0]["geometry"]
+    assert rows[0]["geom_type"] == "Polygon"
+    assert list(g["ring_lens"]) == [5] and list(g["ring_roles"]) == [0]
+    assert list(g["xs"]) == [0.0, 0.01, 0.01, 0.0, 0.0]
+
+
+def test_mvt_tiles_over_empty_frame(spark):
+    from osmzen_spark.sinks.mvt import mvt_tiles
+
+    schema = (
+        "tile_x long, tile_y long, "
+        "geometry struct<xs:array<double>,ys:array<double>,"
+        "ring_lens:array<int>,ring_roles:array<int>>, "
+        "geom_type string, zen_layer string, id long, kind string"
+    )
+    assert mvt_tiles(spark.createDataFrame([], schema), zoom=16).collect() == []

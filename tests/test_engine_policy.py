@@ -32,22 +32,24 @@ ENTRY_MODULES = (
     "tiling",
 )
 
-# package modules no entry point reaches: training-data ops, payload
-# codecs and line simplification the engine does not run. They stay only
-# while their own tests cover them (ROADMAP lists their deletion); the
-# list must stay exact, so nothing new joins it unnoticed.
+# package modules no entry point reaches: training-data ops and payload
+# codecs the engine does not run. They stay only while their own tests
+# cover them (ROADMAP lists their deletion); the list must stay exact,
+# so nothing new joins it unnoticed.
 UNREACHED_ALLOWED = {
-    "geom/simplify.py",
     *(f"ops/{m}.py" for m in (
-        "__init__", "bucketed", "capping", "contamination", "dedup",
-        "incremental", "packing", "ranking", "redaction", "repetition",
-        "resharding", "sampling", "similarity", "textstats",
+        "__init__", "capping", "dedup", "incremental", "packing", "ranking",
+        "repetition", "sampling", "similarity", "textstats",
     )),
     *(f"payload/{m}.py" for m in ("__init__", "images", "jpeg")),
 }
 
+# the engine modules that may import pandas: the rule predicates' tag
+# matrix still does (ROADMAP item 6 moves it to pyarrow.compute)
+PANDAS_ALLOWED = {"compiler/vectorized.py", "compiler/arrow_layer.py"}
+
 # every OSMZEN_* environment variable the package may read
-ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR", "OSMZEN_CHECKPOINT_DEEP", "OSMZEN_BROADCAST_POSTJOINS"}
+ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR", "OSMZEN_CHECKPOINT_DEEP"}
 
 
 def _garage(spark):
@@ -180,12 +182,11 @@ def _imports(module: str, path: str):
             yield from (f"{base}.{a.name}" for a in node.names)
 
 
-def test_every_package_module_is_reachable():
-    """Walk the imports (with ast, no Spark) from the entry modules;
-    every .py file under osmzen_spark/ must be reached, apart from the
-    exact UNREACHED_ALLOWED list. Importing a.b.c also runs a and a.b,
-    so parent packages count as reached."""
-    reached, todo = set(), [f"osmzen_spark.{m}" for m in ENTRY_MODULES]
+def _reachable() -> dict[str, str]:
+    """{file path: dotted module} of every package module the entry
+    modules import, walked with ast (no Spark). Importing a.b.c also
+    runs a and a.b, so parent packages count as reached."""
+    reached, todo = {}, [f"osmzen_spark.{m}" for m in ENTRY_MODULES]
     while todo:
         parts = todo.pop().split(".")
         if parts[0] != "osmzen_spark":
@@ -195,16 +196,43 @@ def test_every_package_module_is_reachable():
             path = _module_file(module)
             if path is None or path in reached:
                 continue
-            reached.add(path)
+            reached[path] = module
             todo.extend(_imports(module, path))
+    return reached
+
+
+def test_every_package_module_is_reachable():
+    """Every .py file under osmzen_spark/ must be reached from the entry
+    modules, apart from the exact UNREACHED_ALLOWED list."""
+    reached = _reachable()
     every = {
         os.path.join(root, f)
         for root, _dirs, files in os.walk(PACKAGE)
         for f in files
         if f.endswith(".py")
     }
-    unreached = sorted(os.path.relpath(p, PACKAGE) for p in every - reached)
+    unreached = sorted(os.path.relpath(p, PACKAGE) for p in every - set(reached))
     unexpected = sorted(set(unreached) - UNREACHED_ALLOWED)
     assert not unexpected, f"modules no entry point imports: {unexpected}"
     stale = sorted(UNREACHED_ALLOWED - set(unreached))
     assert not stale, f"UNREACHED_ALLOWED names reached or deleted modules: {stale}"
+
+
+def test_python_boundary_is_arrow():
+    """Every Python pass the engine runs exchanges Arrow batches: no
+    reachable module calls mapInPandas/applyInPandas, and only the
+    exact PANDAS_ALLOWED list imports pandas."""
+    pandas_udfs, pandas_importers = [], set()
+    for path, module in _reachable().items():
+        rel = os.path.relpath(path, PACKAGE)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        pandas_udfs += [
+            f"{rel}:{node.lineno} {node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr in ("mapInPandas", "applyInPandas")
+        ]
+        if any(name.split(".")[0] == "pandas" for name in _imports(module, path)):
+            pandas_importers.add(rel)
+    assert not pandas_udfs, f"pandas UDFs on the engine path: {pandas_udfs}"
+    assert pandas_importers == PANDAS_ALLOWED

@@ -219,3 +219,62 @@ def test_full_tile_from_pbf(spark, tmp_path):
     assert abs(float(tt["height"]) - 158.0) < 1e-6
     kinds = {r["kind"] for r in layers["roads"].select("kind").distinct().collect()}
     assert {"major_road", "path"} & kinds
+
+
+def _write_osm_xml(city, path):
+    """The OSM XML twin of perfbench's PBF writer, for parity tests."""
+    from xml.sax.saxutils import quoteattr
+
+    def tags(t):
+        return "".join(f"<tag k={quoteattr(k)} v={quoteattr(v)}/>" for k, v in t.items())
+
+    lines = ['<?xml version="1.0" encoding="UTF-8"?>', '<osm version="0.6">']
+    for nid, lon, lat, t in city.nodes:
+        lines.append(f'<node id="{nid}" lon="{lon!r}" lat="{lat!r}">{tags(t)}</node>')
+    for wid, t, refs in city.ways:
+        nds = "".join(f'<nd ref="{r}"/>' for r in refs)
+        lines.append(f'<way id="{wid}">{nds}{tags(t)}</way>')
+    for rid, t, members in city.relations:
+        ms = "".join(
+            f'<member type="{mt}" ref="{m}" role={quoteattr(role)}/>' for mt, m, role in members
+        )
+        lines.append(f'<relation id="{rid}">{ms}{tags(t)}</relation>')
+    lines.append("</osm>")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("\n".join(lines))
+
+
+def test_pbf_matches_xml_on_generated_city(spark, tmp_path):
+    """PBF and XML of the same generated city parse to identical raw
+    tables: ids, tags, way refs and relation members exactly, node
+    coordinates on the 1e-7 degree grid both formats carry."""
+    import sys
+
+    from osmzen_spark.sources.osmxml import read_osm_xml
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+    import gen
+
+    city = gen.City(3, n_buildings=80, n_roads=120, n_pois=60, n_routes=3)
+    xml_path = os.path.join(tmp_path, "city.osm")
+    _write_osm_xml(city, xml_path)
+    p = read_osm_pbf(spark, gen.city_pbf(city, str(tmp_path)))
+    x = read_osm_xml(spark, xml_path)
+
+    def rows(df):
+        out = []
+        for r in df.collect():
+            d = r.asDict()
+            if "tags" in d:
+                d["tags"] = sorted(d["tags"].items())
+            for c in ("lon", "lat"):
+                if c in d:
+                    d[c] = round(d[c] * 1e7)
+            out.append(tuple(sorted(d.items())))
+        return sorted(out)
+
+    for name in ("nodes", "ways", "way_nodes", "relations", "relation_members"):
+        got, want = rows(getattr(p, name)), rows(getattr(x, name))
+        assert got == want, name
+    assert len(rows(p.nodes)) == len(city.nodes)
+    assert len(rows(p.relation_members)) == sum(len(r[2]) for r in city.relations)

@@ -47,7 +47,7 @@ def test_process_element_preference_order(spark):
         assert r["label_placement"] is None  # original feature, not the label twin
 
 
-def test_flagship_with_broadcasts_disabled(spark, monkeypatch):
+def test_flagship_with_broadcasts_disabled(spark):
     """The size-gated broadcast escape hatch: the whole pipeline still
     produces identical results with every post-process broadcast hint
     dropped (the 10^9-feature configuration, where AQE decides)."""
@@ -70,8 +70,11 @@ def test_flagship_with_broadcasts_disabled(spark, monkeypatch):
         return out
 
     baseline = snap(engine.process_unioned(elements, zoom=20).collect())
-    monkeypatch.setenv("OSMZEN_BROADCAST_POSTJOINS", "0")
-    gated = snap(engine.process_unioned(elements, zoom=20).collect())
+    spark.conf.set("spark.osmzen.broadcastPostJoins", "false")
+    try:
+        gated = snap(engine.process_unioned(elements, zoom=20).collect())
+    finally:
+        spark.conf.unset("spark.osmzen.broadcastPostJoins")
     assert baseline == gated
 
 

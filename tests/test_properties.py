@@ -3,10 +3,9 @@
 The reference has no property/randomized testing (SURVEY.md §5); these
 go beyond it on the components whose correctness is a mathematical
 invariant rather than a golden value: codec round-trips, sampling-
-threshold monotonicity, protobuf varint/zigzag encoding, and
-Douglas-Peucker structural invariants. All kernels here are pure
-Python/NumPy — no SparkSession per example — so hundreds of cases run
-in seconds; the Spark plumbing around them is pinned by the regular
+threshold monotonicity and protobuf varint/zigzag encoding. All
+kernels here are pure Python/NumPy — no SparkSession per example — so
+hundreds of cases run in seconds; the Spark plumbing around them is pinned by the regular
 suite + the DuckDB oracles.
 """
 
@@ -110,63 +109,6 @@ def test_zigzag_roundtrip(v):
     z = _zigzag(v)
     assert z >= 0
     assert _unzigzag(z) == v
-
-
-# ------------------------------------------------ Douglas-Peucker
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.floats(min_value=-100, max_value=100, allow_nan=False),
-            st.floats(min_value=-100, max_value=100, allow_nan=False),
-        ),
-        min_size=2,
-        max_size=40,
-    ),
-    st.floats(min_value=0.0, max_value=50.0, allow_nan=False),
-)
-def test_dp_keep_mask_invariants(points, eps):
-    from osmzen_spark.geom.simplify import dp_keep_mask
-
-    xs = np.array([p[0] for p in points])
-    ys = np.array([p[1] for p in points])
-    keep = dp_keep_mask(xs, ys, eps)
-    # endpoints always survive; output is a subsequence of the input
-    assert keep[0] and keep[-1]
-    assert keep.dtype == bool and len(keep) == len(xs)
-    # eps=0 keeps every vertex that is not exactly collinear-between
-    # its kept neighbors; a strictly convex V must keep its apex
-    if eps == 0.0 and len(points) == 3 and not keep[1]:
-        # dropped middle point must lie exactly on the chord
-        d = abs(
-            (xs[2] - xs[0]) * (ys[0] - ys[1]) - (xs[0] - xs[1]) * (ys[2] - ys[0])
-        )
-        assert d == 0.0
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(min_value=3, max_value=30), st.integers(min_value=0, max_value=10**6))
-def test_dp_simplified_error_bounded(n, seed):
-    """Every dropped vertex lies within eps of the simplified chain's
-    covering segment — the defining DP guarantee."""
-    from osmzen_spark.geom.simplify import dp_keep_mask
-
-    rng = np.random.RandomState(seed)
-    xs = np.cumsum(rng.uniform(0.1, 1.0, size=n))
-    ys = rng.uniform(-5, 5, size=n)
-    eps = 1.0
-    keep = dp_keep_mask(xs, ys, eps)
-    kept_idx = np.flatnonzero(keep)
-    for a, b in zip(kept_idx, kept_idx[1:]):
-        for m in range(a + 1, b):
-            # exact point-to-segment distance with clamped projection
-            px, py = xs[m] - xs[a], ys[m] - ys[a]
-            sx, sy = xs[b] - xs[a], ys[b] - ys[a]
-            denom = sx * sx + sy * sy
-            t = 0.0 if denom == 0 else max(0.0, min(1.0, (px * sx + py * sy) / denom))
-            d2 = (px - t * sx) ** 2 + (py - t * sy) ** 2
-            assert d2 <= eps * eps + 1e-9
 
 
 # ------------------------------------------------ luma average-hash
