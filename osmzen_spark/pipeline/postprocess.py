@@ -77,6 +77,14 @@ def _ids_of(df: DataFrame) -> DataFrame:
     return df.select(F.col("id").alias("__oid"), F.col("type").alias("__otype")).distinct()
 
 
+def conditional_names_inputs(layers: dict[str, DataFrame]) -> list[str]:
+    """The layers set_conditional_names reads: pois, landuse and
+    buildings when at least two of them are present (else it changes
+    nothing)."""
+    present = [n for n in ("pois", "landuse", "buildings") if n in layers]
+    return present if len(present) > 1 else []
+
+
 def set_conditional_names(layers: dict[str, DataFrame], zoom: int, params=None) -> dict[str, DataFrame]:
     """Hard-wired first post-processor (ref:postprocess/functions.go:83-152):
 
@@ -131,17 +139,26 @@ def csv_match_properties(layers, zoom, params):
     return out
 
 
+def _backfill_inputs(layers, zoom, params) -> list[str]:
+    """[layer, other_layer] when both are present and the source has
+    other_key, else [] (backfill_from_other_layer changes nothing)."""
+    dst_name, src_name = params["layer"], params["other_layer"]
+    if dst_name not in layers or src_name not in layers:
+        return []
+    if params["other_key"] not in layers[src_name].columns:
+        return []
+    return [dst_name, src_name]
+
+
 def backfill_from_other_layer(layers, zoom, params):
     """dst[key] <- src[other_key] by feature id, only when dst key absent
     (ref:postprocess/functions.go:822-881). Join on id (reference indexes
     id only), broadcast the source side."""
+    if not _backfill_inputs(layers, zoom, params):
+        return layers
     dst_name, dst_key = params["layer"], params["layer_key"]
     src_name, src_key = params["other_layer"], params["other_key"]
-    if dst_name not in layers or src_name not in layers:
-        return layers
     src = layers[src_name]
-    if src_key not in src.columns:
-        return layers
     vals = (
         src.filter(F.col("id") != 0)
         .filter(F.col(src_key).isNotNull())
@@ -414,6 +431,17 @@ def whitelist(layers, zoom, params):
     return out
 
 
+def _dedup_inputs(layers, zoom, params) -> list[str]:
+    """The source layers remove_duplicate_features reads at this zoom:
+    those present that carry every property key; none past end_zoom."""
+    end = params.get("end_zoom", 0)
+    if end and zoom > end:
+        return []
+    keys = params["property_keys"]
+    names = params.get("source_layers") or [params["source_layer"]]
+    return [n for n in names if n in layers and all(k in layers[n].columns for k in keys)]
+
+
 def remove_duplicate_features(layers, zoom, params):
     """Greedy first-wins spatial dedup of Points sharing a key tuple
     within min_distance pixels (converted to meters at zoom+8 from the
@@ -421,9 +449,15 @@ def remove_duplicate_features(layers, zoom, params):
     (first kept wins): candidates are processed in deterministic
     (id, type) order per key. Physical shape: tiny multi-candidate
     aggregate -> Arrow-batched greedy scan -> broadcast anti-join of
-    dropped ids (see inline comment)."""
-    end = params.get("end_zoom", 0)
-    if end and zoom > end:
+    the dropped (id, type, layer rank) rows into every source layer
+    (see inline comment).
+
+    The step holds no cut of its own: with several source layers it
+    reads each of them twice (candidates and anti-join), so
+    ``NormalizeEngine.postprocess`` materializes those layers right
+    before it runs."""
+    active = _dedup_inputs(layers, zoom, params)
+    if not active:
         return layers
     keys = params["property_keys"]
     geom_types = params.get("geometry_types", ["Point"])
@@ -458,7 +492,6 @@ def remove_duplicate_features(layers, zoom, params):
     dist_m = haversine(c1[0], c1[1], c2[0], c2[1])
 
     source_layers = params.get("source_layers") or [params["source_layer"]]
-    out = dict(layers)
     # Cross-layer semantics (ref:queries.yaml:1027, functions.go:510-538):
     # ONE shared deduper over the union of all source layers, greedy
     # first-wins in source_layers order (pois beat landuse beat
@@ -468,14 +501,8 @@ def remove_duplicate_features(layers, zoom, params):
     # within-layer (id, type) order.
     super_m = 512.0 * dist_m
     pts_frames = []
-    active: list[str] = []
-    for lrank, name in enumerate(source_layers):
-        df = out.get(name)
-        if df is None:
-            continue
-        missing = [k for k in keys if k not in df.columns]
-        if missing:
-            continue
+    for name in active:
+        lrank = source_layers.index(name)
         key_cols = [F.coalesce(F.col(k).cast("string"), F.lit("")) for k in keys]
         eligible = F.col("geom_type").isin(*geom_types)
         for kc in key_cols:
@@ -503,9 +530,8 @@ def remove_duplicate_features(layers, zoom, params):
         #      ~10^8 SIMD flops, not 10^8 Python trips);
         #   4) ANTI-join the dropped ids back (size-gated broadcast) —
         #      the fact table is never reshuffled.
-        active.append(name)
         pts_frames.append(
-            df.filter(eligible).select(
+            layers[name].filter(eligible).select(
                 F.concat_ws("-!-", *key_cols).alias("__dk"),
                 F.lit(lrank).alias("__lrank"),
                 "id",
@@ -520,8 +546,6 @@ def remove_duplicate_features(layers, zoom, params):
                 ).alias("__gy"),
             )
         )
-    if not pts_frames:
-        return out
     pts = pts_frames[0]
     for f in pts_frames[1:]:
         pts = pts.unionByName(f)
@@ -596,18 +620,20 @@ def remove_duplicate_features(layers, zoom, params):
                 names=["__did", "__dtype", "__dlrank"],
             )
 
-    dropped_df = cands.select("__pts").mapInArrow(drop_ids, schema="__did long, __dtype string, __dlrank int")
-    if len(active) > 1:
-        # one shared scan feeds several anti-joins: cut the mapInArrow
-        # subtree so it executes once, not once per layer
-        dropped_df = dropped_df.localCheckpoint(eager=False)
+    # every source layer anti-joins the same dropped-row frame; the
+    # layer rank in the join condition keeps a pois row from being
+    # dropped for a buildings row of the same (id, type)
+    dropped = maybe_broadcast(
+        cands.select("__pts").mapInArrow(drop_ids, schema="__did long, __dtype string, __dlrank int")
+    )
+    out = dict(layers)
     for name in active:
-        lrank = source_layers.index(name)
         df = out[name]
-        mine = dropped_df.filter(F.col("__dlrank") == lrank)
         out[name] = df.join(
-            maybe_broadcast(mine),
-            (df["id"] == mine["__did"]) & (df["type"] == mine["__dtype"]),
+            dropped,
+            (df["id"] == dropped["__did"])
+            & (df["type"] == dropped["__dtype"])
+            & (dropped["__dlrank"] == source_layers.index(name)),
             "left_anti",
         )
     return out
@@ -977,4 +1003,11 @@ POSTPROCESSORS = {
     "drop_names": drop_names,
     # engine addition (nil no-op in the reference) — opt-in via config
     "keep_n_features": keep_n_features,
+}
+
+# the configurable steps that read more than one layer: fn name -> the
+# layers the step reads at this zoom ([] when it returns early)
+CROSS_LAYER_INPUTS = {
+    "remove_duplicate_features": _dedup_inputs,
+    "backfill_from_other_layer": _backfill_inputs,
 }

@@ -68,3 +68,29 @@ def test_mvt_tiles_over_empty_frame(spark):
         "geom_type string, zen_layer string, id long, kind string"
     )
     assert mvt_tiles(spark.createDataFrame([], schema), zoom=16).collect() == []
+
+
+def test_empty_tile_through_the_whole_pipeline(spark):
+    """A tile request whose bound holds no element: every layer comes
+    out empty, the post-process cuts run on empty frames, and the MVT
+    sink over the union returns no rows."""
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.sinks.mvt import mvt_tiles
+    from synthetic import SF_SMALL, synthetic_elements, synthetic_network
+
+    net, rels, way_nodes = synthetic_network(spark, SF_SMALL)
+    elements = synthetic_elements(spark, SF_SMALL).unionByName(net)
+    engine = NormalizeEngine()
+    try:
+        layers = engine.process(
+            elements, zoom=16, bound=(100.0, 10.0, 100.005, 10.005), cache=True,
+            relation_members=rels, way_nodes=way_nodes,
+        )
+        assert {n: df.count() for n, df in layers.items()} == {n: 0 for n in layers}
+        dfs = list(layers.values())
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df, allowMissingColumns=True)
+        assert mvt_tiles(union, zoom=16).collect() == []
+    finally:
+        engine.release()

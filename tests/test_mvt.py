@@ -1,6 +1,6 @@
 """MVT sink (sinks/mvt.py): byte-level protobuf round-trips of the
 hand-written encoder via the decoder twin, command-integer semantics,
-and the Spark per-tile applyInPandas sink over the normalized
+and the Spark per-tile grouped applyInArrow sink over the normalized
 buildings slice."""
 
 import numpy as np
@@ -190,7 +190,7 @@ def test_encode_commands_batch_point_free_batch():
 
 
 def test_spark_mvt_sink_byte_parity_with_scalar(spark):
-    """The vectorized mapInPandas sink must produce byte-identical
+    """The per-tile applyInArrow sink must produce byte-identical
     blobs to the scalar reference (old per-point projection + interned
     encode_tile) over every geometry type, holes, multiparts, ring
     collapse, NaN/None props, negative ids, and multiple layers."""
@@ -258,7 +258,7 @@ def test_spark_mvt_sink_byte_parity_with_scalar(spark):
         "geometry struct<xs:array<double>,ys:array<double>,"
         "ring_lens:array<int>,ring_roles:array<int>>, "
         "geom_type string, zen_layer string, id long, kind string",
-    ).repartition(5)  # exercise the shuffle + carry machinery
+    ).repartition(5)  # rows of a tile arrive from several partitions
 
     got = {
         (r["tile_x"], r["tile_y"]): (r["n_features"], bytes(r["mvt"]))
@@ -362,8 +362,9 @@ def test_spark_mvt_sink_deterministic(spark):
 
 def test_spark_mvt_sink_tile_spanning_many_batches(spark):
     """A single hot tile spanning many Arrow batches must come out
-    identical to the single-batch encoding (exercises the carry-list
-    path that replaced the O(k^2) per-batch re-concat)."""
+    identical to the single-batch encoding (the grouped encoder gets
+    the whole tile as one Arrow table, however many batches its rows
+    arrive in)."""
     from osmzen_spark.sinks.mvt import mvt_tiles
 
     rows = []

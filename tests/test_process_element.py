@@ -156,3 +156,29 @@ def test_dedup_cross_layer_first_wins(spark):
     assert sorted(r["id"] for r in out["pois"].collect()) == [9, 10]
     assert sorted(r["id"] for r in out["landuse"].collect()) == [2]
     assert out["buildings"].count() == 0
+
+
+def test_dedup_cross_layer_same_id_keeps_first_layer(spark):
+    """One element in two source layers: the pois row and the buildings
+    row share (id, type) and name, 0.1 m apart. The dedup drops only
+    the later layer's row; an anti-join that ignored the layer rank of
+    the dropped row would remove the pois row as well."""
+    from osmzen_spark.pipeline.postprocess import remove_duplicate_features
+
+    def mk(lat):
+        return spark.createDataFrame(
+            [(5, "way", "Point", "Museum", 0.0, lat)],
+            "id long, type string, geom_type string, name string, clon double, clat double",
+        )
+
+    params = {
+        "source_layers": ["pois", "landuse", "buildings"],
+        "end_zoom": 16,
+        "property_keys": ["name"],
+        "geometry_types": ["Point"],
+        "min_distance": 64.0,
+    }
+    # 0.1 m of latitude is ~9e-7 degrees
+    out = remove_duplicate_features({"pois": mk(0.0), "buildings": mk(9e-7)}, 16, params)
+    assert [(r["id"], r["type"]) for r in out["pois"].collect()] == [(5, "way")]
+    assert out["buildings"].count() == 0
