@@ -11,6 +11,9 @@ math (no UDFs, no RNG), reproducible at any scale factor.
 * ``synthetic_images``        — an 8x8 RGB image payload (raw, PNG and
   baseline-JPEG bytes) per lineitem key, for the payload codec tests;
   the only generator that runs a Python (Arrow) mapper.
+* ``write_osm_xml``           — an OSM XML file of a city given as node,
+  way and relation tuples (perfbench's ``gen.City``), the XML twin of
+  perfbench's PBF writer for the parse tests.
 
 Element classes cycle deterministically (key mod 18): buildings with
 levels (polygon), parking garages, parks, schools, restaurants with
@@ -530,3 +533,28 @@ def synthetic_images(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return keys.mapInArrow(mapper, schema=out_schema)
+
+
+def write_osm_xml(city, path: str) -> None:
+    """The OSM XML twin of perfbench's PBF writer: ``city.nodes`` as
+    ``(id, lon, lat, tags)``, ``city.ways`` as ``(id, tags, refs)`` and
+    ``city.relations`` as ``(id, tags, [(type, ref, role)])``."""
+    from xml.sax.saxutils import quoteattr
+
+    def tags(t):
+        return "".join(f"<tag k={quoteattr(k)} v={quoteattr(v)}/>" for k, v in t.items())
+
+    lines = ['<?xml version="1.0" encoding="UTF-8"?>', '<osm version="0.6">']
+    for nid, lon, lat, t in city.nodes:
+        lines.append(f'<node id="{nid}" lon="{lon!r}" lat="{lat!r}">{tags(t)}</node>')
+    for wid, t, refs in city.ways:
+        nds = "".join(f'<nd ref="{r}"/>' for r in refs)
+        lines.append(f'<way id="{wid}">{nds}{tags(t)}</way>')
+    for rid, t, members in city.relations:
+        ms = "".join(
+            f'<member type="{mt}" ref="{m}" role={quoteattr(role)}/>' for mt, m, role in members
+        )
+        lines.append(f'<relation id="{rid}">{ms}{tags(t)}</relation>')
+    lines.append("</osm>")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write("\n".join(lines))

@@ -19,6 +19,11 @@ from osmzen_spark.sources.geojson import (
     write_geojson_lines,
 )
 
+FIXTURE = "/root/reference/testdata/tile-16-17896-24450.xml"
+requires_fixture = pytest.mark.skipif(
+    not os.path.exists(FIXTURE), reason=f"reference fixture {FIXTURE} is absent"
+)
+
 FEATURES = [
     {
         "type": "Feature",
@@ -173,6 +178,7 @@ def test_feature_collection_file(spark, tmp_path):
     assert collections_to_lines(spark, p).count() == len(FEATURES)
 
 
+@requires_fixture
 def test_reference_output_shape(spark):
     """full_tile -> feature_collections = the reference's
     Config.Process return type on its own benchmark fixture."""
@@ -182,7 +188,7 @@ def test_reference_output_shape(spark):
     bound = tile_bound(16, 17896, 24450)
     layers = full_tile(
         spark,
-        "/root/reference/testdata/tile-16-17896-24450.xml",
+        FIXTURE,
         zoom=16,
         bound=bound,
         cache=True,
@@ -205,6 +211,7 @@ def test_reference_output_shape(spark):
         assert f["properties"]["kind"] == "building" or f["properties"]["kind"]
 
 
+@requires_fixture
 def test_process_geojson_reference_benchmark_shape(spark, tmp_path):
     """BenchmarkProcessGeoJSON's semantics (ref:benchmarks_test.go:233):
     already-assembled GeoJSON features -> filter/transform/postprocess
@@ -218,7 +225,7 @@ def test_process_geojson_reference_benchmark_shape(spark, tmp_path):
     from osmzen_spark.sources.osmxml import read_osm_xml
     from osmzen_spark.tiling.cells import tile_bound
 
-    t = read_osm_xml(spark, "/root/reference/testdata/tile-16-17896-24450.xml")
+    t = read_osm_xml(spark, FIXTURE)
     bound = tile_bound(16, 17896, 24450)
     elements = assemble_elements(
         t.nodes, t.way_nodes, t.ways, t.relations, t.relation_members, bound=bound

@@ -21,6 +21,13 @@ from osmzen_spark.sources.osmpbf import (
     unzigzag,
 )
 
+from synthetic import write_osm_xml
+
+FIXTURE = "/root/reference/testdata/tile-16-17896-24450.xml"
+requires_fixture = pytest.mark.skipif(
+    not os.path.exists(FIXTURE), reason=f"reference fixture {FIXTURE} is absent"
+)
+
 
 def test_varint_kernel_roundtrip():
     rng = random.Random(1)
@@ -131,6 +138,7 @@ def test_spark_reader(spark, tmp_path):
     assert wn[(10, 0)] == 1 and wn[(10, 3)] == 1
 
 
+@requires_fixture
 def test_pbf_matches_xml_on_reference_fixture(spark):
     """Parity of the two raw-input formats: parse the reference's z16
     XML fixture, re-encode it as PBF, read it back, and require
@@ -138,7 +146,7 @@ def test_pbf_matches_xml_on_reference_fixture(spark):
     PBF 100-nanodegree grid)."""
     from osmzen_spark.sources.osmxml import read_osm_xml
 
-    x = read_osm_xml(spark, "/root/reference/testdata/tile-16-17896-24450.xml")
+    x = read_osm_xml(spark, FIXTURE)
     nodes = [
         (r["node_id"], r["lon"], r["lat"], dict(r["tags"]))
         for r in x.nodes.collect()
@@ -179,6 +187,7 @@ def test_pbf_matches_xml_on_reference_fixture(spark):
     os.unlink(path)
 
 
+@requires_fixture
 def test_full_tile_from_pbf(spark, tmp_path):
     """The planet-format user story end to end: the reference's z16
     benchmark fixture re-encoded as .osm.pbf -> blob-parallel decode ->
@@ -190,7 +199,7 @@ def test_full_tile_from_pbf(spark, tmp_path):
     from osmzen_spark.sources.osmxml import read_osm_xml
     from osmzen_spark.tiling.cells import tile_bound
 
-    x = read_osm_xml(spark, "/root/reference/testdata/tile-16-17896-24450.xml")
+    x = read_osm_xml(spark, FIXTURE)
     nodes = [
         (r["node_id"], r["lon"], r["lat"], dict(r["tags"])) for r in x.nodes.collect()
     ]
@@ -221,29 +230,6 @@ def test_full_tile_from_pbf(spark, tmp_path):
     assert {"major_road", "path"} & kinds
 
 
-def _write_osm_xml(city, path):
-    """The OSM XML twin of perfbench's PBF writer, for parity tests."""
-    from xml.sax.saxutils import quoteattr
-
-    def tags(t):
-        return "".join(f"<tag k={quoteattr(k)} v={quoteattr(v)}/>" for k, v in t.items())
-
-    lines = ['<?xml version="1.0" encoding="UTF-8"?>', '<osm version="0.6">']
-    for nid, lon, lat, t in city.nodes:
-        lines.append(f'<node id="{nid}" lon="{lon!r}" lat="{lat!r}">{tags(t)}</node>')
-    for wid, t, refs in city.ways:
-        nds = "".join(f'<nd ref="{r}"/>' for r in refs)
-        lines.append(f'<way id="{wid}">{nds}{tags(t)}</way>')
-    for rid, t, members in city.relations:
-        ms = "".join(
-            f'<member type="{mt}" ref="{m}" role={quoteattr(role)}/>' for mt, m, role in members
-        )
-        lines.append(f'<relation id="{rid}">{ms}{tags(t)}</relation>')
-    lines.append("</osm>")
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\n".join(lines))
-
-
 def test_pbf_matches_xml_on_generated_city(spark, tmp_path):
     """PBF and XML of the same generated city parse to identical raw
     tables: ids, tags, way refs and relation members exactly, node
@@ -257,7 +243,7 @@ def test_pbf_matches_xml_on_generated_city(spark, tmp_path):
 
     city = gen.City(3, n_buildings=80, n_roads=120, n_pois=60, n_routes=3)
     xml_path = os.path.join(tmp_path, "city.osm")
-    _write_osm_xml(city, xml_path)
+    write_osm_xml(city, xml_path)
     p = read_osm_pbf(spark, gen.city_pbf(city, str(tmp_path)))
     x = read_osm_xml(spark, xml_path)
 
