@@ -16,9 +16,8 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
   backfill joins, conditional names, quantize/clamp)  -- :mod:`osmzen_spark.pipeline`
 * sources (OSM PBF / XML, GeoJSON) and the MVT sink  -- :mod:`osmzen_spark.sources`,
   :mod:`osmzen_spark.sinks`
-* training-data ops (dedup, similarity search, text stats) and payload
-  codecs, which the engine does not run  -- :mod:`osmzen_spark.ops`,
-  :mod:`osmzen_spark.payload`
+* training-data ops (dedup, similarity search, text stats), which the
+  engine does not run  -- :mod:`osmzen_spark.ops`
 
 The reference implementation (read-only, for behavior only) lives at
 /root/reference; citations in docstrings use ``ref:file:line`` form.

@@ -212,12 +212,6 @@ def to_plain_float_np(vals: np.ndarray) -> np.ndarray:
     return pd.to_numeric(s, errors="coerce").to_numpy(dtype=np.float64)
 
 
-def _as_str_array(x, n: int) -> np.ndarray:
-    if isinstance(x, np.ndarray):
-        return x
-    return np.full(n, x, dtype=object)
-
-
 # ---------------------------------------------------------------------------
 # condition compiler  (ref:filter/conditions.go — same ops as
 # compiler/conditions.py, NumPy bool output)

@@ -317,11 +317,11 @@ def shingle_explode(
     # Fan out an under-partitioned input ahead of the Python pass: a
     # sandbox-scale documents parquet bin-packs into ONE scan partition
     # (maxPartitionBytes), serializing the Arrow shingling onto a
-    # single core (same trap, same fix as payload.fan_out_scan — a
-    # no-op at real scale where the table arrives in thousands of
-    # splits). Applied AFTER column pruning so the exchange carries
-    # only (id, text); every consumer aggregates order-independently,
-    # so the round-robin redistribution cannot change results.
+    # single core (a no-op at real scale where the table arrives in
+    # thousands of splits). Applied AFTER column pruning so the
+    # exchange carries only (id, text); every consumer aggregates
+    # order-independently, so the round-robin redistribution cannot
+    # change results.
     spark = src.sparkSession
     target = spark.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < target:

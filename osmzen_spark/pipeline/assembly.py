@@ -21,7 +21,9 @@ Spark-first equivalent:
   rings get the reference's padded-bound patch ring; unclosable
   inners are dropped. Member ways that are missing, or have fewer
   than 2 nodes, add no ring, and a relation left with no usable
-  member becomes no feature.
+  member becomes no feature. Likewise a tagged way with fewer than 2
+  resolvable nodes has no drawable line and becomes no feature (the
+  MVT encoder would emit it with empty geometry).
 
 At 100 TB the two shuffles here (node join, way/relation grouping) are
 the natural partitioning of OSM assembly; everything downstream is the
@@ -260,7 +262,8 @@ def assemble_elements(
         ).alias("geometry"),
     )
 
-    w = ways.filter(tagged).join(coords, on="way_id", how="inner")
+    # a way needs 2 resolved nodes to be a line (module docstring)
+    w = ways.filter(tagged).join(coords.filter(F.size("xs") >= 2), on="way_id", how="inner")
     is_poly = F.col("closed") & _is_polygon_tags_col(F.col("tags"))
     way_feats = w.select(
         F.col("way_id").alias("element_id"),

@@ -58,13 +58,21 @@ SQL_CONF = {
 }
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g, as a JVM size
+    string. A heap larger than the machine is never pressed to collect
+    and grows until the kernel kills the JVM."""
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mib // 2, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "osmzen-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -85,8 +93,8 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # single-JVM local mode: the "driver" heap is also every
         # executor's heap, and Catalyst holds multi-layer plans during
-        # optimization — size generously (the box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # optimization — size generously, but from the host's memory
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     for k, v in {**SQL_CONF, **(extra_conf or {})}.items():

@@ -142,15 +142,3 @@ def neighbor_offsets(ring: int) -> list[tuple[int, int]]:
     (the (2r+1)^2 block, including center). Used for cell-ring kNN
     candidate expansion."""
     return [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-
-
-def ring_offsets(ring: int) -> list[tuple[int, int]]:
-    """(dx, dy) offsets at exactly Chebyshev distance ``ring``."""
-    if ring == 0:
-        return [(0, 0)]
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) == ring:
-                out.append((dx, dy))
-    return out

@@ -8,9 +8,6 @@ math (no UDFs, no RNG), reproducible at any scale factor.
   assemble into exactly the building slice of ``synthetic_elements``.
 * ``synthetic_network``       — road/path ways, gate nodes and route
   relation memberships, one way per orders row.
-* ``synthetic_images``        — an 8x8 RGB image payload (raw, PNG and
-  baseline-JPEG bytes) per lineitem key, for the payload codec tests;
-  the only generator that runs a Python (Arrow) mapper.
 * ``write_osm_xml``           — an OSM XML file of a city given as node,
   way and relation tuples (perfbench's ``gen.City``), the XML twin of
   perfbench's PBF writer for the parse tests.
@@ -428,111 +425,6 @@ def _network_from_base(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame
     ))
     relation_members = bike.unionByName(bus, allowMissingColumns=False).unionByName(hike)
     return elements, relation_members, way_nodes
-
-
-def synthetic_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Payload table, one 8x8 RGB image per lineitem key. Three real
-    formats, all with closed-form decodable pixels:
-
-    * odd keys: raw RGB bytes, pixel(x, y, c) =
-      (seed + 7x + 13y + 29c) mod 256, seed = (key*2654435761) mod 2^31
-    * keys % 4 == 0: the SAME pattern, PNG-encoded (stdlib codec)
-    * keys % 4 == 2: REAL baseline JFIF streams synthesized in the
-      COEFFICIENT domain (payload/jpeg.py encode_from_coefficients):
-      per channel the quantized DC + three low-frequency ACs are a
-      closed form of the seed, quant tables are all-16, and the
-      decoder's integer IDCT + fixed-point color convert make every
-      decoded pixel an exact integer function of the key.
-
-    The phash column is the REAL 64-bit luma average-hash of the
-    DECODED pixels (payload.images.luma_ahash64)."""
-    import pyarrow as pa
-
-    from osmzen_spark.payload.images import encode_png, luma_ahash64
-
-    w = h = 8
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li = li.repartition(spark.sparkContext.defaultParallelism)
-    key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
-    # the sf* lineitem is not TPC-H-exact: (orderkey, linenumber)
-    # collides, so image ids must be deduped to stay a key
-    keys = li.select(key.alias("k")).distinct()
-
-    out_schema = (
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long, element_id long"
-    )
-
-    def mapper(batches):
-        import numpy as np
-
-        from osmzen_spark.payload.jpeg import (
-            encode_from_coefficients,
-            idct8x8_int,
-            ycbcr_to_rgb_int,
-        )
-
-        xs = np.arange(w).reshape(1, 1, w, 1)
-        ys = np.arange(h).reshape(1, h, 1, 1)
-        cs = np.arange(3).reshape(1, 1, 1, 3)
-        q16 = np.full((8, 8), 16, dtype=np.int64)
-
-        def jpeg_image(seed: int):
-            """(bytes, decoded) for a coefficient-domain JFIF stream."""
-            coefs = []
-            for c in range(3):
-                m = np.zeros((8, 8), dtype=np.int64)
-                m[0, 0] = (seed + 5 * c) % 128 - 64
-                m[0, 1] = (seed // 4 + 3 * c) % 9 - 4
-                m[1, 0] = (seed // 16 + 7 * c) % 9 - 4
-                m[1, 1] = (seed // 64 + 11 * c) % 5 - 2
-                coefs.append(m)
-            blob = encode_from_coefficients(coefs, q16, q16)
-            planes = [idct8x8_int(coefs[c] * q16).astype(np.int64) for c in range(3)]
-            return blob, ycbcr_to_rgb_int(planes[0], planes[1], planes[2])
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ks = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            seeds = (ks * 2654435761) % (2**31)
-            px = (
-                (seeds.reshape(n, 1, 1, 1) + 7 * xs + 13 * ys + 29 * cs) % 256
-            ).astype(np.uint8)
-            blobs, fmts, hashes = [], [], []
-            for i in range(n):
-                if ks[i] % 2 == 1:
-                    img = px[i]
-                    blobs.append(img.tobytes())
-                    fmts.append("raw")
-                elif ks[i] % 4 == 0:
-                    img = px[i]
-                    blobs.append(encode_png(img))
-                    fmts.append("png")
-                else:  # k % 4 == 2 — real baseline JPEG bytes
-                    blob, img = jpeg_image(int(seeds[i]))
-                    blobs.append(blob)
-                    fmts.append("jpeg")
-                hashes.append(luma_ahash64(img))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([f"img-{k}" for k in ks]),
-                    pa.array(blobs, type=pa.binary()),
-                    pa.array(np.full(n, w, dtype=np.int32)),
-                    pa.array(np.full(n, h, dtype=np.int32)),
-                    pa.array(fmts),
-                    pa.array([f"caption for element {k}" for k in ks]),
-                    pa.array(np.array(hashes, dtype=np.int64)),
-                    pa.array(ks),
-                ],
-                names=[
-                    "image_id", "bytes", "w", "h", "fmt",
-                    "caption", "phash", "element_id",
-                ],
-            )
-
-    return keys.mapInArrow(mapper, schema=out_schema)
 
 
 def write_osm_xml(city, path: str) -> None:

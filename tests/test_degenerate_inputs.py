@@ -94,3 +94,50 @@ def test_empty_tile_through_the_whole_pipeline(spark):
         assert mvt_tiles(union, zoom=16).collect() == []
     finally:
         engine.release()
+
+
+def test_ways_with_fewer_than_two_resolved_nodes(spark, tmp_path):
+    """PBF -> assembly -> normalize -> MVT over tagged roads whose node
+    refs resolve to 0 or 1 node: such a way has no drawable line, so
+    it becomes no element, no layer row and no MVT feature, while a
+    complete road beside it comes through."""
+    from osmzen_spark.pipeline.assembly import assemble_elements
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.sinks.mvt import decode_tile, mvt_tiles
+    from osmzen_spark.tiling.cells import tile_bound
+
+    bound = tile_bound(16, 17896, 24450)
+    minx, miny, maxx, maxy = bound
+    lon = [minx + (maxx - minx) * f for f in (0.2, 0.5, 0.8)]
+    lat = (miny + maxy) / 2
+    road = {"highway": "residential", "name": "Road"}
+    nodes = [(i + 1, lon[i], lat, {}) for i in range(3)]
+    ways = [
+        (201, road, [1, 2, 3]),  # complete
+        (202, road, [1]),  # one node
+        (203, road, [2, 998]),  # one of two refs resolves
+        (204, road, [998, 999]),  # no ref resolves
+        (205, road, []),  # no refs
+    ]
+    path = os.path.join(tmp_path, "short-ways.osm.pbf")
+    with open(path, "wb") as f:
+        f.write(encode_pbf(nodes, ways, []))
+    t = read_osm_pbf(spark, path)
+    elements = assemble_elements(t.nodes, t.way_nodes, t.ways)
+    assert sorted(r["element_id"] for r in elements.collect()) == [201]
+
+    engine = NormalizeEngine()
+    try:
+        layers = engine.process(elements, zoom=16, bound=bound, cache=True)
+        rows = [r for df in layers.values() for r in df.select("zen_layer", "id").collect()]
+        assert [(r["zen_layer"], r["id"]) for r in rows] == [("roads", 201)]
+        dfs = list(layers.values())
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df, allowMissingColumns=True)
+        tiles = mvt_tiles(union, zoom=16).collect()
+    finally:
+        engine.release()
+    feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
+    assert [f["id"] for f in feats] == [201]
+    assert all(f["rings"] for f in feats)

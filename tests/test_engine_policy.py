@@ -36,16 +36,15 @@ ENTRY_MODULES = (
     "tiling",
 )
 
-# package modules no entry point reaches: training-data ops and payload
-# codecs the engine does not run. They stay only while their own tests
-# cover them (ROADMAP lists their deletion); the list must stay exact,
-# so nothing new joins it unnoticed.
+# package modules no entry point reaches: the training-data ops the
+# engine does not run. They stay only while their own tests cover them
+# (ROADMAP lists their deletion); the list must stay exact, so nothing
+# new joins it unnoticed.
 UNREACHED_ALLOWED = {
-    *(f"ops/{m}.py" for m in (
+    f"ops/{m}.py" for m in (
         "__init__", "capping", "dedup", "incremental", "packing", "ranking",
         "repetition", "sampling", "similarity", "textstats",
-    )),
-    *(f"payload/{m}.py" for m in ("__init__", "images", "jpeg")),
+    )
 }
 
 # the engine modules that may import pandas: the rule predicates' tag

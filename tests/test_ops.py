@@ -1,4 +1,4 @@
-"""Training-data ops tests: dedup, similarity, text stats, payload."""
+"""Training-data ops tests: dedup, similarity, text stats."""
 
 import numpy as np
 
@@ -82,24 +82,6 @@ def test_lsh_buckets_capture_similar(spark):
     cand = lsh_bucket_candidates(emb, emb.filter(F.col("vec_id") == 1), dim=3, n_planes=6).collect()
     pids = {r["p_id"] for r in cand}
     assert 2 in pids  # near-identical vector must share the bucket
-
-
-def test_image_payload_roundtrip(spark):
-    from osmzen_spark.payload.images import with_image_features, psnr, decode_raw
-
-    rows = [("img-1", bytes([10, 20, 30] * 64), 8, 8, "raw", "caption one", 111)]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long")
-    feats = {r["image_id"]: r for r in with_image_features(df).collect()}
-    assert feats["img-1"]["mean_r"] == 10.0
-    assert feats["img-1"]["mean_g"] == 20.0
-    assert feats["img-1"]["mean_b"] == 30.0
-
-    # pass-through byte equality -> PSNR inf (the payload invariant)
-    out = df.select("bytes", "caption").collect()[0]
-    a = decode_raw(bytes([10, 20, 30] * 64), 8, 8)
-    b = decode_raw(out["bytes"], 8, 8)
-    assert psnr(a, b) == float("inf")
-    assert out["caption"] == "caption one"
 
 
 def test_ann_recall_meets_target(spark):
@@ -189,113 +171,6 @@ def test_ngram_jaccard_pairs_bruteforce_parity(spark):
     assert set(got) == set(expect)
     for k2, v in expect.items():
         assert abs(got[k2] - v) < 1e-12, (k2, got[k2], v)
-
-
-def _png_with_filters(img, filters):
-    """Hand-assemble a PNG whose scanlines use the given filter types
-    (exercises the decoder's Sub/Up/Average/Paeth reconstruction)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from osmzen_spark.payload.images import _PNG_SIG, _paeth
-
-    h, w, _ = img.shape
-    bpp = 3
-    stride = w * bpp
-    flat = img.reshape(h, stride).astype(np.int64)
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int64)
-    for y, ftype in zip(range(h), filters):
-        line = flat[y]
-        filt = np.zeros(stride, dtype=np.int64)
-        for i in range(stride):
-            left = line[i - bpp] if i >= bpp else 0
-            ul = prev[i - bpp] if i >= bpp else 0
-            if ftype == 0:
-                filt[i] = line[i]
-            elif ftype == 1:
-                filt[i] = line[i] - left
-            elif ftype == 2:
-                filt[i] = line[i] - prev[i]
-            elif ftype == 3:
-                filt[i] = line[i] - (left + prev[i]) // 2
-            else:
-                filt[i] = line[i] - _paeth(int(left), int(prev[i]), int(ul))
-        raw.append(ftype)
-        raw += bytes((filt & 0xFF).astype(np.uint8).tolist())
-        prev = line
-
-    def chunk(ctype, body):
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(
-            ">I", zlib.crc32(ctype + body) & 0xFFFFFFFF
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    )
-
-
-def test_png_codec_roundtrip_and_filters():
-    import numpy as np
-
-    from osmzen_spark.payload.images import decode_png, encode_png, psnr
-
-    rng_img = (
-        np.arange(8 * 8 * 3, dtype=np.int64) * 2654435761 % 251
-    ).astype(np.uint8).reshape(8, 8, 3)
-    assert psnr(decode_png(encode_png(rng_img)), rng_img) == float("inf")
-    # every scanline filter type reconstructs exactly
-    data = _png_with_filters(rng_img, [0, 1, 2, 3, 4, 4, 3, 1])
-    assert psnr(decode_png(data), rng_img) == float("inf")
-
-
-def test_png_payload_psnr_gate(spark):
-    """PSNR>=40dB payload invariant on real fmt='png' rows through the
-    mapInPandas feature pipeline (decode is no longer a stub)."""
-    import numpy as np
-
-    from osmzen_spark.payload.images import encode_png, with_image_features
-
-    img = (np.arange(6 * 4 * 3, dtype=np.int64) * 40503 % 256).astype(np.uint8).reshape(4, 6, 3)
-    rows = [("png-1", bytearray(encode_png(img)), 6, 4, "png", "cap", 7)]
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
-    )
-    feats = with_image_features(df).collect()[0]
-    assert abs(feats["mean_r"] - img[:, :, 0].mean()) < 1e-9
-    assert abs(feats["brightness"] - img.mean()) < 1e-9
-
-
-def test_augment_images_flip_crop_stretch(spark):
-    """augment_images: flip -> center crop -> per-channel contrast
-    stretch, verified byte-for-byte against an independent numpy
-    re-derivation, plus the constant-channel -> 0 edge case."""
-    import numpy as np
-
-    from osmzen_spark.payload.images import augment_images
-
-    img = (np.arange(8 * 8 * 3, dtype=np.int64) * 40503 % 256).astype(
-        np.uint8
-    ).reshape(8, 8, 3)
-    img[:, :, 2] = 17  # constant blue channel -> stretch must emit 0
-    rows = [("aug-1", bytearray(img.tobytes()), 8, 8, "raw", "cap", 0)]
-    df = spark.createDataFrame(
-        rows,
-        "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
-    )
-    got = augment_images(df, flip=True, crop=6, normalize=True).collect()[0]
-    assert (got["out_w"], got["out_h"]) == (6, 6)
-    cr = img[:, ::-1, :][1:7, 1:7, :].astype(np.int64)
-    mn, mx = cr.min(axis=(0, 1)), cr.max(axis=(0, 1))
-    exp = np.where(mx > mn, (cr - mn) * 255 // np.maximum(mx - mn, 1), 0)
-    assert bytes(got["augmented"]) == exp.astype(np.uint8).tobytes()
-    assert exp[:, :, 2].max() == 0
-    # flip-only path: pure mirror of the raw bytes
-    plain = augment_images(df, flip=True, crop=None, normalize=False).collect()[0]
-    assert bytes(plain["augmented"]) == img[:, ::-1, :].tobytes()
 
 
 def test_ivf_full_probe_equals_bruteforce(spark):
