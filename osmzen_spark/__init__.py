@@ -16,7 +16,7 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
   backfill joins, conditional names, quantize/clamp)  -- :mod:`osmzen_spark.pipeline`
 * sources (OSM PBF / XML, GeoJSON) and the MVT sink  -- :mod:`osmzen_spark.sources`,
   :mod:`osmzen_spark.sinks`
-* training-data ops (dedup, similarity search, text stats), which the
+* training-data ops (text stats, sampling, packing …), which the
   engine does not run  -- :mod:`osmzen_spark.ops`
 
 The reference implementation (read-only, for behavior only) lives at

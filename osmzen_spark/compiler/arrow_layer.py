@@ -45,8 +45,6 @@ _NUM_FUNCS = {
 }
 _BOOL_FUNCS = {"util.tag_str_to_bool", "util.true_or_none", "util.is_building",
                "mz_calculate_is_building_or_part", "mz_calculate_is_bus_route"}
-_STR_FUNCS = {"mz_building_kind_detail", "mz_building_part_kind_detail",
-              "mz_cycling_network", "mz_hiking_network"}
 _NUM_PSEUDO = {"zoom", "area", "way_area", "volume", "height"}
 
 

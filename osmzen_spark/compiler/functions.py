@@ -72,13 +72,10 @@ def to_float_meters_col(s: Column) -> Column:
 
 # -------------------------------------------------------- kind-detail tables
 # Transcribed decision tables (ref:filter/functions.go:636-736, originally
-# tilezen functions.sql L702-L899): values mapping to '' mean "no detail",
-# identity values pass through, aliases remap.
+# tilezen functions.sql L702-L899): identity values pass through, aliases
+# remap, and any other value (the reference's explicit '' list included)
+# maps to no detail.
 
-_BUILDING_KIND_EMPTY = [
-    "bangunan", "building", "other", "rumah", "Rumah", "Rumah Masyarakat",
-    "rumah_penduduk", "true", "trullo", "yes",
-]
 _BUILDING_KIND_IDENTITY = [
     "abandoned", "administrative", "agricultural", "airport", "allotment_house",
     "apartments", "arbour", "bank", "barn", "basilica", "beach_hut", "bell_tower",
@@ -126,7 +123,6 @@ _BUILDING_KIND_ALIAS = {
     "townhome": "terrace",
 }
 
-_BUILDING_PART_EMPTY = ["yes", "part", "church:part", "default"]
 _BUILDING_PART_IDENTITY = [
     "arch", "balcony", "base", "column", "door", "elevator", "entrance", "floor",
     "hall", "main", "passageway", "pillar", "porch", "ramp", "roof", "room",

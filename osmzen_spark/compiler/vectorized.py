@@ -338,9 +338,6 @@ def _compile_entry(key, val, keys: set[str]) -> Callable:
 # num expressions return (float64 ndarray, valid bool ndarray).
 # ---------------------------------------------------------------------------
 
-_PSEUDO_NUM = {"zoom", "area", "way_area", "volume", "height"}
-
-
 def compile_num_np(node, keys: set[str]) -> Callable[[BatchContext], tuple[np.ndarray, np.ndarray]]:
     """Numeric expression -> (values, valid)."""
     if isinstance(node, bool):

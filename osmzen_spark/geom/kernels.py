@@ -33,7 +33,6 @@ from osmzen_spark.geom.mercator import mercator_x, mercator_y, unproject_lat, un
 
 POLY_TYPES = ("Polygon", "MultiPolygon")
 LINE_TYPES = ("LineString", "MultiLineString")
-POINT_TYPES = ("Point", "MultiPoint")
 
 
 def geometry_stats(

@@ -1,10 +1,1 @@
-from osmzen_spark.ops.dedup import (  # noqa: F401
-    exact_dedup,
-    minhash_dedup_pairs,
-    simhash_col,
-    simhash_frame,
-    with_simhash,
-    ngram_jaccard_pairs,
-)
 from osmzen_spark.ops.textstats import with_text_stats, language_id_col  # noqa: F401
-from osmzen_spark.ops.similarity import cosine_topk_bruteforce, lsh_bucket_candidates  # noqa: F401

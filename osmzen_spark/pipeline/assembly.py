@@ -24,6 +24,11 @@ Spark-first equivalent:
   member becomes no feature. Likewise a tagged way with fewer than 2
   resolvable nodes has no drawable line and becomes no feature (the
   MVT encoder would emit it with empty geometry).
+* a node whose coordinate is not a WGS84 position (NaN, infinite,
+  |lat| > 90 or |lon| > 180) counts as absent: it is no feature and
+  no vertex of its ways, so those ways keep their other nodes under
+  the rule above (the MVT sink would write such a node at tile row 0
+  with int64-overflowed vertex coordinates).
 
 At 100 TB the two shuffles here (node join, way/relation grouping) are
 the natural partitioning of OSM assembly; everything downstream is the
@@ -115,8 +120,6 @@ def assemble_way_coords(nodes: DataFrame, way_nodes: DataFrame) -> DataFrame:
         ).alias("closed"),
     )
 
-
-_ELEMENT_COLS = ("element_id", "element_type", "tags", "geom_type", "geometry")
 
 _REL_STITCH_SCHEMA = T.StructType(
     [
@@ -245,6 +248,9 @@ def assemble_elements(
     Only tagged nodes/ways/relations become features (untagged elements
     exist purely as geometry carriers), matching osmgeojson's
     "interesting elements" behavior."""
+    # drop nodes with no WGS84 position (module docstring); Spark orders
+    # NaN above every number, so the range test drops NaN too
+    nodes = nodes.filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
     coords = assemble_way_coords(nodes, way_nodes)
 
     tagged = F.size("tags") > 0

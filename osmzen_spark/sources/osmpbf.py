@@ -371,13 +371,12 @@ def parse_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
     return splits.mapInArrow(gen, PARSED_SCHEMA)
 
 
-def read_osm_pbf(spark: SparkSession, path: str, stage_cut: bool = True) -> OsmTables:
+def read_osm_pbf(spark: SparkSession, path: str) -> OsmTables:
     """Parse a .osm.pbf into the five raw tables (same bundle as the
-    XML source; everything downstream is shared)."""
-    parsed = parse_osm_pbf(spark, path)
-    if stage_cut:
-        parsed = parsed.localCheckpoint(eager=True)
-    return raw_tables(parsed)
+    XML source; everything downstream is shared). The single parse is
+    materialized before the five tables fan out from it, as in
+    `read_osm_xml`, so no consumer re-decodes the blobs."""
+    return raw_tables(parse_osm_pbf(spark, path).localCheckpoint(eager=True))
 
 
 def full_tile(

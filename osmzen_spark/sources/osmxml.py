@@ -179,17 +179,14 @@ def raw_tables(parsed: DataFrame) -> OsmTables:
     return OsmTables(nodes, way_nodes, ways, relations, relation_members)
 
 
-def read_osm_xml(spark: SparkSession, path: str, stage_cut: bool = True) -> OsmTables:
+def read_osm_xml(spark: SparkSession, path: str) -> OsmTables:
     """Parse OSM XML at `path` into the five raw tables.
 
-    stage_cut=True materializes the single parse before the five
-    derived tables fan out from it (otherwise each consumer would
-    re-decode the XML — the same fan-out rule the engine applies at
-    every multi-consumer boundary, BASELINE.md round-1 lesson 3)."""
-    parsed = parse_osm_xml(spark, path)
-    if stage_cut:
-        parsed = parsed.localCheckpoint(eager=True)
-    return raw_tables(parsed)
+    The single parse is materialized before the five derived tables fan
+    out from it (otherwise each consumer would re-decode the XML — the
+    same fan-out rule the engine applies at every multi-consumer
+    boundary, BASELINE.md round-1 lesson 3)."""
+    return raw_tables(parse_osm_xml(spark, path).localCheckpoint(eager=True))
 
 
 def process_tables(

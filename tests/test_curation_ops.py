@@ -1,11 +1,7 @@
-"""Round-5 curation operators: repetition filters, BM25 ranking,
-SemDeDup semantic deduplication."""
-
-import numpy as np
+"""Round-5 curation operators: repetition filters and BM25 ranking."""
 
 from osmzen_spark.ops.ranking import bm25_rank
 from osmzen_spark.ops.repetition import repetition_filter, repetition_stats
-from osmzen_spark.ops.similarity import semantic_dedup
 
 
 def test_repetition_stats_spam_vs_clean(spark):
@@ -63,43 +59,6 @@ def test_bm25_ranks_matching_docs_first(spark):
     assert [r["doc_id"] for r in by_term["join"]] == [3]
     # df counts docs containing the term
     assert t[0]["df"] == 2 and by_term["join"][0]["df"] == 1
-
-
-def test_semantic_dedup_drops_within_cluster_only(spark):
-    # two well-separated clusters in 4-d; one near-duplicate pair in
-    # cluster A, plus a cross-cluster pair that is NOT similar
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.999, 0.01, 0.0, 0.0]),  # near-dup of 1 -> dropped
-        (3, [0.0, 1.0, 0.0, 0.0]),
-        (4, [0.0, 0.98, 0.2, 0.0]),  # cos to 3 ~= 0.98 -> dropped
-        (5, [0.0, 0.0, 1.0, 0.0]),  # alone in its direction
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = np.array(
-        [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]
-    )
-    kept = semantic_dedup(emb, cents, threshold=0.95, dim=4)
-    ids = sorted(r["vec_id"] for r in kept.collect())
-    assert ids == [1, 3, 5]
-    # every survivor carries its cluster id
-    cids = {r["vec_id"]: r["cid"] for r in kept.collect()}
-    assert cids == {1: 0, 3: 1, 5: 2}
-
-
-def test_semantic_dedup_keep_lowest_id_is_non_cascading(spark):
-    # chain: 1~2, 2~3, but 1!~3. Rule: drop anything with a lower-id
-    # similar mate -> 2 and 3 both dropped (3 via 2, even though 2 is
-    # itself dropped). One cluster so all pairs compared.
-    rows = [
-        (1, [1.0, 0.0]),
-        (2, [0.96, 0.28]),  # cos(1,2) ~ 0.96
-        (3, [0.82, 0.57]),  # cos(2,3) ~ 0.95, cos(1,3) ~ 0.82
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = np.array([[1.0, 0.0]])
-    kept = semantic_dedup(emb, cents, threshold=0.9, dim=2)
-    assert sorted(r["vec_id"] for r in kept.collect()) == [1]
 
 
 def test_repetition_stats_matches_python_reference(spark):

@@ -141,3 +141,77 @@ def test_ways_with_fewer_than_two_resolved_nodes(spark, tmp_path):
     feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
     assert [f["id"] for f in feats] == [201]
     assert all(f["rings"] for f in feats)
+
+
+def test_nan_and_out_of_range_coordinates(spark, tmp_path):
+    """OSM XML -> assembly -> normalize (world bound) -> MVT with nodes
+    at lat="nan" and lat="95": such a node counts as absent at
+    assembly, so a tagged one is no feature and a way keeps only its
+    valid nodes. Every output vertex is a real position (the MVT sink
+    would write such a node at tile row 0 with int64-overflowed vertex
+    coordinates)."""
+    import math
+
+    from osmzen_spark.pipeline.assembly import assemble_elements
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.sinks.mvt import decode_tile, mvt_tiles
+    from osmzen_spark.sources.osmxml import read_osm_xml
+
+    road = '<tag k="highway" v="residential"/>'
+    cafe = '<tag k="amenity" v="cafe"/><tag k="name" v="Cafe"/>'
+    xml = f"""<?xml version="1.0"?>
+<osm version="0.6">
+ <node id="1" lat="41.500" lon="-81.690"/>
+ <node id="2" lat="41.500" lon="-81.680"/>
+ <node id="3" lat="41.510" lon="-81.680"/>
+ <node id="4" lat="nan" lon="-81.685"/>
+ <node id="5" lat="95" lon="-81.685"/>
+ <node id="6" lat="41.505" lon="-81.685">{cafe}</node>
+ <node id="7" lat="nan" lon="-81.686">{cafe}</node>
+ <node id="8" lat="95" lon="-81.687">{cafe}</node>
+ <way id="10"><nd ref="1"/><nd ref="2"/><nd ref="3"/>{road}</way>
+ <way id="11"><nd ref="1"/><nd ref="4"/><nd ref="3"/>{road}</way>
+ <way id="12"><nd ref="1"/><nd ref="5"/><nd ref="3"/>{road}</way>
+ <way id="13"><nd ref="4"/><nd ref="2"/><nd ref="5"/>{road}</way>
+ <way id="14"><nd ref="1"/><nd ref="2"/><nd ref="3"/><nd ref="4"/><nd ref="1"/><tag k="building" v="yes"/></way>
+</osm>"""
+    path = os.path.join(tmp_path, "bad-coords.osm")
+    with open(path, "w") as f:
+        f.write(xml)
+    t = read_osm_xml(spark, path)
+    elements = assemble_elements(t.nodes, t.way_nodes, t.ways, t.relations, t.relation_members)
+    got = {r["element_id"]: r for r in elements.collect()}
+    # 7 and 8 are gone; 11 and 12 keep nodes 1 and 3; 13 keeps only
+    # node 2, so it is no line; 14 is still a ring without node 4
+    assert sorted(got) == [6, 10, 11, 12, 14]
+    assert len(got[11]["geometry"]["xs"]) == len(got[12]["geometry"]["xs"]) == 2
+    assert got[14]["geom_type"] == "Polygon" and len(got[14]["geometry"]["xs"]) == 4
+    for r in got.values():
+        g = r["geometry"]
+        assert all(-180 <= x <= 180 for x in g["xs"]) and all(-90 <= y <= 90 for y in g["ys"])
+
+    engine = NormalizeEngine()
+    try:
+        layers = engine.process(elements, zoom=16)
+        rows = {
+            (r["zen_layer"], r["id"])
+            for df in layers.values()
+            for r in df.select("zen_layer", "id").collect()
+        }
+        assert rows == {("pois", 6), ("roads", 10), ("roads", 11), ("roads", 12), ("buildings", 14)}
+        dfs = list(layers.values())
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df, allowMissingColumns=True)
+        tiles = mvt_tiles(union, zoom=16).collect()
+    finally:
+        engine.release()
+    assert {(t["tile_x"], t["tile_y"]) for t in tiles} <= {
+        (x, y) for x in range(17895, 17899) for y in range(24447, 24452)
+    }
+    feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
+    assert sorted(f["id"] for f in feats) == [6, 10, 11, 12, 14]
+    for f in feats:
+        assert f["rings"] and all(
+            math.isfinite(c) and abs(c) < 2**16 for ring in f["rings"] for pt in ring for c in pt
+        )

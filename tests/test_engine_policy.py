@@ -42,10 +42,14 @@ ENTRY_MODULES = (
 # new joins it unnoticed.
 UNREACHED_ALLOWED = {
     f"ops/{m}.py" for m in (
-        "__init__", "capping", "dedup", "incremental", "packing", "ranking",
-        "repetition", "sampling", "similarity", "textstats",
+        "__init__", "capping", "incremental", "packing", "ranking",
+        "repetition", "sampling", "textstats",
     )
 }
+
+# the pandas-exchanging UDF entry points: the DataFrame methods and the
+# pandas_udf decorator/function, however it is imported
+PANDAS_UDF_NAMES = {"mapInPandas", "applyInPandas", "pandas_udf"}
 
 # the engine modules that may import pandas: the rule predicates' tag
 # matrix still does (ROADMAP item 6 moves it to pyarrow.compute)
@@ -274,19 +278,32 @@ def test_every_package_module_is_reachable():
     assert not stale, f"UNREACHED_ALLOWED names reached or deleted modules: {stale}"
 
 
+def _udf_names(node) -> list[str]:
+    """The names a node may bind or read a pandas UDF by: `df.mapInPandas`,
+    `F.pandas_udf`, a bare `pandas_udf` and `from ... import pandas_udf`."""
+    if isinstance(node, ast.Attribute):
+        return [node.attr]
+    if isinstance(node, ast.Name):
+        return [node.id]
+    if isinstance(node, ast.ImportFrom):
+        return [alias.name for alias in node.names]
+    return []
+
+
 def test_python_boundary_is_arrow():
     """Every Python pass the engine runs exchanges Arrow batches: no
-    reachable module calls mapInPandas/applyInPandas, and only the
-    exact PANDAS_ALLOWED list imports pandas."""
+    reachable module calls mapInPandas/applyInPandas or uses pandas_udf,
+    and only the exact PANDAS_ALLOWED list imports pandas."""
     pandas_udfs, pandas_importers = [], set()
     for path, module in _reachable().items():
         rel = os.path.relpath(path, PACKAGE)
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
         pandas_udfs += [
-            f"{rel}:{node.lineno} {node.attr}"
+            f"{rel}:{node.lineno} {name}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Attribute) and node.attr in ("mapInPandas", "applyInPandas")
+            for name in _udf_names(node)
+            if name in PANDAS_UDF_NAMES
         ]
         if any(name.split(".")[0] == "pandas" for name in _imports(module, path)):
             pandas_importers.add(rel)

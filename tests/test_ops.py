@@ -1,11 +1,5 @@
-"""Training-data ops tests: dedup, similarity, text stats."""
+"""Training-data ops tests: text stats."""
 
-import numpy as np
-
-from pyspark.sql import functions as F
-
-from osmzen_spark.ops.dedup import exact_dedup, minhash_dedup_pairs, ngram_jaccard_pairs, simhash_col
-from osmzen_spark.ops.similarity import cosine_topk_bruteforce, lsh_bucket_candidates
 from osmzen_spark.ops.textstats import with_text_stats
 
 
@@ -20,35 +14,6 @@ def docs_df(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_dedup(spark):
-    out = exact_dedup(docs_df(spark), "text", "doc_id")
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert ids == [1, 3, 4, 5]  # 2 removed (same text, higher id)
-
-
-def test_ngram_jaccard_near_dup(spark):
-    pairs = ngram_jaccard_pairs(docs_df(spark), k=3, min_jaccard=0.5).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (1, 2) in got  # exact dup -> jaccard 1.0
-    assert (1, 3) in got or (2, 3) in got  # near dup above 0.5
-    assert all(p not in got for p in [(1, 5), (4, 5)])
-
-
-def test_minhash_pairs_find_exact_dup(spark):
-    pairs = minhash_dedup_pairs(docs_df(spark), num_hashes=32, bands=8).collect()
-    exact = [r for r in pairs if (r["id_a"], r["id_b"]) == (1, 2)]
-    assert exact and exact[0]["est_jaccard"] == 1.0
-
-
-def test_simhash_deterministic_and_similar(spark):
-    df = docs_df(spark).select("doc_id", simhash_col(F.col("text"), bits=32).alias("sh"))
-    vals = {r["doc_id"]: r["sh"] for r in df.collect()}
-    assert vals[1] == vals[2]  # identical text -> identical simhash
-    ham_near = bin(vals[1] ^ vals[3]).count("1")
-    ham_far = bin(vals[1] ^ vals[5]).count("1")
-    assert ham_near < ham_far
-
-
 def test_text_stats(spark):
     out = {r["doc_id"]: r for r in with_text_stats(docs_df(spark)).collect()}
     assert out[1]["lang_id"] == "en"
@@ -56,450 +21,3 @@ def test_text_stats(spark):
     assert out[1]["n_tokens"] == 13
     assert 0.0 <= out[1]["quality"] <= 1.0
     assert out[1]["fingerprint"] == out[2]["fingerprint"]
-
-
-def vec_df(spark):
-    rows = [
-        (1, [1.0, 0.0, 0.0]),
-        (2, [0.9, 0.1, 0.0]),
-        (3, [0.0, 1.0, 0.0]),
-        (4, [0.0, 0.0, 1.0]),
-        (5, [0.7, 0.7, 0.0]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_cosine_topk(spark):
-    emb = vec_df(spark)
-    q = emb.filter(F.col("vec_id") == 1)
-    res = cosine_topk_bruteforce(emb, q, k=2).collect()
-    ranked = [r["p_id"] for r in sorted(res, key=lambda r: r["sim_rank"])]
-    assert ranked == [2, 5]
-
-
-def test_lsh_buckets_capture_similar(spark):
-    emb = vec_df(spark)
-    cand = lsh_bucket_candidates(emb, emb.filter(F.col("vec_id") == 1), dim=3, n_planes=6).collect()
-    pids = {r["p_id"] for r in cand}
-    assert 2 in pids  # near-identical vector must share the bucket
-
-
-def test_ann_recall_meets_target(spark):
-    """Driver-facing quality gate for the LSH-ANN path: multi-table
-    banding (b=4, L=24) retrieves >= 90% of each query's true top-5
-    cosine neighbors on the sf0.001 embeddings table (measured 0.96+ —
-    deterministic planes, deterministic data). The query side is a 5%
-    sample (the small side of an ANN job); truth is the exact
-    brute-force top-k."""
-    from osmzen_spark.ops.similarity import lsh_ann_candidates
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.pmod(F.col("vec_id"), F.lit(20)) == 0)
-    k = 5
-    truth = cosine_topk_bruteforce(emb, queries, k=k, dim=64)
-    cand = lsh_ann_candidates(emb, queries, dim=64, bits=4, tables=24).withColumn(
-        "found", F.lit(1)
-    )
-    found = F.sum(F.coalesce(F.col("found"), F.lit(0)))
-    rows = (
-        truth.join(cand, on=["q_id", "p_id"], how="left")
-        .groupBy("q_id")
-        .agg((found / float(k)).alias("recall"))
-        .collect()
-    )
-    assert len(rows) == 25  # 5% query sample of the 500 sf0.001 vectors
-    avg = sum(r["recall"] for r in rows) / len(rows)
-    assert avg >= 0.9, avg
-
-
-def test_ngram_jaccard_pairs_exact(spark):
-    from osmzen_spark.ops.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "completely different text with no overlap at all"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-             ngram_jaccard_pairs(docs, "text", "doc_id", k=3, min_jaccard=0.3).collect()}
-    assert set(pairs) == {(1, 2)}
-    # 7 shingles each, 6 shared -> 6/8
-    assert abs(pairs[(1, 2)] - 0.75) < 1e-12
-
-
-def test_ngram_jaccard_pairs_bruteforce_parity(spark):
-    """PPJoin prefix + positional filters must be exactness-preserving:
-    the emitted pair set (and every jaccard) equals the brute-force
-    all-pairs computation over distinct word-3-gram sets. The corpus is
-    built to stress the filters: shared hot shingles (common template
-    words), chains of partial overlaps near the threshold, and short
-    docs below k words."""
-    from osmzen_spark.ops.dedup import ngram_jaccard_pairs
-
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
-    rows = []
-    for i in range(48):
-        # overlapping sliding windows over a shared vocabulary ->
-        # many near-threshold pairs + hot shingles
-        seq = [words[(i + j) % len(words)] for j in range(10)]
-        if i % 7 == 0:
-            seq = seq[:2]  # short docs (single-shingle degenerate case)
-        rows.append((i, " ".join(seq)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    t = 0.5
-
-    def grams(text, k=3):
-        ws = text.lower().split()
-        if len(ws) <= k:
-            return {" ".join(ws)}
-        return {" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)}
-
-    expect = {}
-    for i in range(48):
-        for j in range(i + 1, 48):
-            a, b = grams(rows[i][1]), grams(rows[j][1])
-            jac = len(a & b) / len(a | b)
-            if jac >= t:
-                expect[(i, j)] = jac
-
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-           ngram_jaccard_pairs(docs, "text", "doc_id", k=3, min_jaccard=t).collect()}
-    assert set(got) == set(expect)
-    for k2, v in expect.items():
-        assert abs(got[k2] - v) < 1e-12, (k2, got[k2], v)
-
-
-def test_ivf_full_probe_equals_bruteforce(spark):
-    """With nprobe = n_centroids the IVF candidate set is every point
-    except self, so IVF-flat must reproduce the exact brute-force
-    top-k bit-for-bit (rank-for-rank) — a determinism gate on the
-    whole assign/probe/join/rerank chain."""
-    from osmzen_spark.ops.similarity import ivf_ann_topk, ivf_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.pmod(F.col("vec_id"), F.lit(50)) == 0)
-    cents = ivf_centroids(64, 8)
-    ivf = ivf_ann_topk(emb, q, cents, k=3, nprobe=8, dim=64)
-    bf = cosine_topk_bruteforce(emb, q, k=3, dim=64)
-    a = {(r["q_id"], r["sim_rank"]): r["p_id"] for r in ivf.collect()}
-    b = {(r["q_id"], r["sim_rank"]): r["p_id"] for r in bf.collect()}
-    assert a == b and len(a) > 0
-
-
-def test_ivf_partial_probe_recall(spark):
-    """nprobe=4 of 16 cells on the sf0.001 embeddings: the scale path
-    (cells prune 75% of the scan) must beat the nprobe/ncent=0.25
-    no-structure floor. The synthetic embeddings are near-uniform
-    random directions — the worst case for any clustering index
-    (measured 0.416 offline); real clustered embeddings recall far
-    higher, and the exactness of the chain is covered by the
-    full-probe test above."""
-    from osmzen_spark.ops.similarity import ivf_ann_topk, ivf_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.pmod(F.col("vec_id"), F.lit(20)) == 0)
-    cents = ivf_centroids(64, 16)
-    ivf = ivf_ann_topk(emb, q, cents, k=5, nprobe=4, dim=64)
-    bf = cosine_topk_bruteforce(emb, q, k=5, dim=64)
-    got = {(r["q_id"], r["p_id"]) for r in ivf.collect()}
-    truth = {(r["q_id"], r["p_id"]) for r in bf.collect()}
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.35, recall
-
-
-def test_ivf_kmeans_training(spark):
-    """Lloyd iterations on the deterministic sample must not worsen
-    the spherical inertia (mean max cosine to the codebook)."""
-    import numpy as np
-
-    from osmzen_spark.ops.similarity import ivf_centroids, ivf_train_kmeans
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = emb.select("embedding").collect()
-    x = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    x /= np.linalg.norm(x, axis=1, keepdims=True)
-    c0 = ivf_centroids(64, 8)
-    c5 = ivf_train_kmeans(emb, 64, 8, iters=5)
-    inertia0 = (x @ c0.T).max(axis=1).mean()
-    inertia5 = (x @ c5.T).max(axis=1).mean()
-    assert c5.shape == (8, 64)
-    assert np.allclose(np.linalg.norm(c5, axis=1), 1.0)
-    assert inertia5 >= inertia0 - 1e-9, (inertia0, inertia5)
-
-
-def test_embedding_near_dup_matches_exact_within_candidates(spark):
-    """The emitted pair set must equal {LSH candidates} ∩ {exact cosine
-    >= τ}, re-derived independently in numpy from the same planes."""
-    from osmzen_spark.ops.similarity import _plane_matrix, embedding_near_dup
-
-    rng = np.random.RandomState(7)
-    base = rng.randn(40, 16)
-    # plant three near-dup pairs: slightly perturbed copies
-    base[10] = base[3] + 0.05 * rng.randn(16)
-    base[20] = base[5] + 0.05 * rng.randn(16)
-    base[30] = base[8] + 0.05 * rng.randn(16)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = sorted(
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup(df, dim=16, threshold=0.9, bits=6, tables=16).collect()
-    )
-
-    # numpy twin (float32 round-trip like the parquet/arrow path)
-    V = base.astype(np.float32).astype(np.float64)
-    planes = _plane_matrix(16, 96)
-    bit = (V @ planes.T >= 0).astype(np.int64).reshape(40, 16, 6)
-    w = 2 ** np.arange(5, -1, -1, dtype=np.int64)
-    buckets = (bit * w).sum(axis=2) + np.arange(16, dtype=np.int64) * (1 << 32)
-    cand = set()
-    from collections import defaultdict
-
-    bk = defaultdict(list)
-    for i, row in enumerate(buckets):
-        for b in row:
-            bk[b].append(i)
-    for members in bk.values():
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                cand.add((min(members[i], members[j]), max(members[i], members[j])))
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    want = sorted((a, b) for (a, b) in cand if Vn[a] @ Vn[b] >= 0.9)
-    assert got == want
-    # the planted near-dups must be found (cos ~0.998 -> per-table
-    # p^6 ~ 0.87, 16 tables -> recall ~1-1e-14)
-    assert {(3, 10), (5, 20), (8, 30)} <= set(got)
-
-
-def test_pq_exact_on_codebook_built_vectors(spark):
-    """Determinism gate on the whole encode/pack/LUT/rank chain: when
-    every vector IS a concatenation of sub-centroids, quantization
-    error is zero — encode must recover exactly those codes and the
-    PQ top-k must equal the exact brute-force top-k rank-for-rank
-    (ADC = sqrt(8) x true cosine here, so rankings coincide; repeated
-    code patterns create exact ties that both sides must break on
-    ascending p_id)."""
-    import numpy as np
-
-    from osmzen_spark.ops.similarity import (
-        cosine_topk_bruteforce,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode_arrow,
-    )
-
-    cb = pq_codebooks(64, 8, 16)
-    picks = {i: [(i * 7 + j * 3) % 16 for j in range(8)] for i in range(1, 41)}
-    rows = [
-        (i, [float(v) for v in np.concatenate([cb[j][c] for j, c in enumerate(cs)])])
-        for i, cs in picks.items()
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    codes = {r["p_id"]: r["code"] for r in pq_encode_arrow(df, cb).collect()}
-    for i, cs in picks.items():
-        expect = sum(c << (4 * j) for j, c in enumerate(cs))
-        assert codes[i] == expect, (i, codes[i], expect)
-
-    q = df.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 0)
-    pq = pq_adc_topk(pq_encode_arrow(df, cb), q, cb, k=3)
-    bf = cosine_topk_bruteforce(df, q, k=3, dim=64)
-    a = {(r["q_id"], r["adc_rank"]): r["p_id"] for r in pq.collect()}
-    b = {(r["q_id"], r["sim_rank"]): r["p_id"] for r in bf.collect()}
-    assert a == b and len(a) == 12
-
-
-def test_pq_recall_beats_chance_floor(spark):
-    """Recall sanity on the sf0.001 embeddings: near-uniform random
-    directions are the worst case for any 32-bit quantizer (measured
-    0.128 offline); the gate is a wide margin over the 5/499 ~ 0.01
-    no-structure floor. Real clustered embeddings recall far higher;
-    exactness of the chain is covered by the codebook-built test."""
-    from osmzen_spark.ops.similarity import (
-        cosine_topk_bruteforce,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode_arrow,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cb = pq_codebooks(64, 8, 16)
-    q = emb.filter(F.pmod(F.col("vec_id"), F.lit(20)) == 0)
-    pq = {(r["q_id"], r["p_id"]) for r in pq_adc_topk(pq_encode_arrow(emb, cb), q, cb, k=5).collect()}
-    bf = {(r["q_id"], r["p_id"]) for r in cosine_topk_bruteforce(emb, q, k=5, dim=64).collect()}
-    recall = len(pq & bf) / len(bf)
-    assert recall >= 0.06, recall
-
-
-def test_dedup_components_exact(spark):
-    """Hand-built pair graph: a 4-chain (propagation needs multiple
-    rounds), a triangle, and an isolated pair — every node must label
-    with its component minimum."""
-    from osmzen_spark.ops.dedup import dedup_components
-
-    pairs = spark.createDataFrame(
-        [(1, 5), (5, 9), (9, 12),      # chain 1-5-9-12
-         (20, 21), (21, 22), (20, 22),  # triangle
-         (30, 31)],                     # isolated pair
-        "id_a long, id_b long",
-    )
-    got = {r["doc_id"]: r["rep_id"] for r in dedup_components(pairs).collect()}
-    assert got == {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
-
-
-def test_dedup_components_long_path_converges(spark):
-    """A path graph far longer than max_iter: plain min-propagation
-    needs ~length rounds, pointer doubling needs O(log length). 200
-    nodes must converge within the default 25-iteration cap."""
-    from osmzen_spark.ops.dedup import dedup_components
-
-    n = 200
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_a long, id_b long"
-    )
-    got = {r["doc_id"]: r["rep_id"] for r in dedup_components(pairs).collect()}
-    assert len(got) == n + 1
-    assert set(got.values()) == {0}
-
-
-def test_exact_dedup_survives_hash_collision(spark):
-    """Force a total hash collision (constant hash) — distinct texts
-    must all survive; true duplicates still dedup to the lowest id."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha"), (4, "gamma")],
-        "doc_id long, text string",
-    )
-    out = exact_dedup(df, "text", "doc_id", hash_expr=F.lit(0)).collect()
-    got = {(r["doc_id"], r["text"]) for r in out}
-    assert got == {(1, "alpha"), (2, "beta"), (4, "gamma")}
-
-
-def test_partial_topk_batch_matches_full_sort():
-    """argpartition-with-tie-repair must equal the full lexsort cut
-    exactly, including boundary ties (quantized scores force many)."""
-    import numpy as np
-
-    from osmzen_spark.ops.similarity import _partial_topk_batch
-
-    rng = np.random.default_rng(7)
-    for n, nq, take in [(200, 5, 10), (50, 3, 50), (300, 4, 7)]:
-        scores = np.round(rng.random((n, nq)) * 10) / 10  # heavy ties
-        pid = rng.permutation(n).astype(np.int64)
-        ids_b = np.arange(nq, dtype=np.int64)
-        got_q, got_p, got_s = _partial_topk_batch(ids_b, pid, scores, take)
-        take_eff = min(take, n)
-        for qi in range(nq):
-            ref_rows = np.lexsort((pid, -scores[:, qi]))[:take_eff]
-            sl = slice(qi * take_eff, (qi + 1) * take_eff)
-            assert np.array_equal(got_p[sl], pid[ref_rows]), (n, nq, take, qi)
-            assert np.array_equal(got_s[sl], scores[ref_rows, qi])
-
-
-def test_shingle_explode_matches_scalar_definition(spark):
-    """The vectorized batch shingler must equal the scalar definition
-    (lower, whitespace-run split, one short shingle when < k words,
-    distinct per doc, sorted) row for row — over edge cases and a
-    seeded random corpus."""
-    import random
-
-    from osmzen_spark.ops.dedup import shingle_explode
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, ""),                       # zero words -> one "" shingle
-        (3, "   "),                    # whitespace only -> same
-        (4, "solo"),                   # < k words -> whole doc
-        (5, "two words"),
-        (6, "exactly three words"),
-        (7, "a a a a a a"),            # heavy duplicate shingles
-        (8, "MiXeD CaSe TeXt MiXeD CaSe TeXt"),
-        (9, None),                     # dropped like explode(NULL)
-        (10, "tabs\tand\nnewlines   collapse  into runs"),
-        (11, "ünïcödé wörds ünïcödé wörds ünïcödé"),
-    ]
-    rng = random.Random(42)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
-    for i in range(12, 40):
-        rows.append((i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 25)))))
-
-    for k in (1, 3, 5):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = [
-            (r["id"], r["n"], r["c"], r["g"])
-            for r in shingle_explode(df, "text", "doc_id", k)
-            .orderBy("id", "g")
-            .collect()
-        ]
-        want = []
-        for doc_id, text in rows:
-            if text is None:
-                continue
-            ws = str(text).strip().lower().split()
-            pos = [" ".join(ws[j : j + k]) for j in range(max(len(ws) - k, 0) + 1)]
-            shs = sorted(set(pos))
-            want.extend((doc_id, len(shs), pos.count(g), g) for g in shs)
-        want.sort(key=lambda t: (t[0], t[3]))
-        assert got == want, f"k={k}"
-
-
-def _parity_corpus(spark):
-    import random
-
-    rng = random.Random(99)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
-    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 30))))
-            for i in range(1, 30)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_simhash_frame_matches_column_path(spark):
-    """simhash_frame (explode + codegen bit-vote aggregates) must
-    produce the exact fingerprints of the Column-API with_simhash
-    (interpreted HOF votes over the positional shingle list)."""
-    from pyspark.sql import functions as F
-
-    from osmzen_spark.ops.dedup import simhash_frame, with_simhash
-
-    docs = _parity_corpus(spark)
-    a = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash_frame(docs, "text", "doc_id", bits=64, shingle_k=2).collect()
-    }
-    b = {
-        r["doc_id"]: r["simhash"]
-        for r in with_simhash(docs, "text", bits=64, shingle_k=2)
-        .select("doc_id", "simhash")
-        .filter(F.col("text").isNotNull())
-        .collect()
-    }
-    assert a == b and len(a) > 10
-
-
-def test_minhash_signature_agg_matches_column_path(spark):
-    """minhash_dedup_pairs' explode+MIN-aggregate signatures must equal
-    the Column-API minhash_signature values slot for slot."""
-    from pyspark.sql import functions as F
-
-    from osmzen_spark.ops.dedup import minhash_signature, shingle_explode
-
-    docs = _parity_corpus(spark)
-    ex = shingle_explode(docs, "text", "doc_id", 5).select(
-        "id", F.xxhash64("g").alias("gh")
-    )
-    mins = [F.min(F.xxhash64(F.lit(i), F.col("gh"))).alias(f"s{i}") for i in range(8)]
-    a = {
-        r["id"]: tuple(r[f"s{i}"] for i in range(8))
-        for r in ex.groupBy("id").agg(*mins).collect()
-    }
-    b = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in docs.filter(F.col("text").isNotNull())
-        .select("doc_id", minhash_signature(F.col("text"), 8, 5).alias("sig"))
-        .collect()
-    }
-    assert a == b and len(a) > 10

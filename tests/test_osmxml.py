@@ -16,6 +16,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from osmzen_spark.pipeline.normalize import NormalizeEngine
 from osmzen_spark.sources.osmxml import full_tile, parse_osm_xml, read_osm_xml
 from osmzen_spark.tiling.cells import tile_bound
 
@@ -121,7 +122,7 @@ def test_parse_is_single_pass(spark, xml_path):
     # raw_tables derives all five tables from ONE parse: the parsed
     # frame is a localCheckpoint (LogicalRDD scan), so no consumer
     # re-decodes the XML
-    t = read_osm_xml(spark, xml_path, stage_cut=True)
+    t = read_osm_xml(spark, xml_path)
     plan = t.nodes._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan
 
@@ -156,3 +157,35 @@ def test_full_tile_reference_benchmark_input(spark):
     # downtown Cleveland z16 tile: a dense but bounded feature count
     n_roads = roads.count()
     assert n_roads > 20
+
+
+def test_full_tile_output_shape(spark, xml_path):
+    """full_tile end to end on `xml_path` (the generated city is centred
+    on the same z16 tile): every layer is present, tile-assigned at z16
+    and clipped (the raw-tags stash dropped), with only supported
+    geometry types."""
+    geom_types = {
+        "Point", "MultiPoint", "LineString", "MultiLineString", "Polygon", "MultiPolygon",
+    }
+    engine = NormalizeEngine()
+    try:
+        layers = full_tile(
+            spark, xml_path, zoom=16, bound=tile_bound(16, 17896, 24450),
+            engine=engine, cache=True,
+        )
+        assert set(layers) == {
+            "buildings", "roads", "pois", "landuse", "water",
+            "places", "boundaries", "transit", "earth",
+        }
+        counts = {}
+        for name, df in layers.items():
+            assert {"kind", "tile_z", "tile_x", "tile_y", "cell"} <= set(df.columns), name
+            assert "tags" not in df.columns, name
+            rows = df.groupBy("geom_type", "tile_z").count().collect()
+            assert {r["tile_z"] for r in rows} <= {16}, name
+            assert {r["geom_type"] for r in rows} <= geom_types, name
+            counts[name] = sum(r["count"] for r in rows)
+    finally:
+        engine.release()
+    assert counts["buildings"] > 0
+    assert counts["roads"] > 0
