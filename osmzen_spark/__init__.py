@@ -1,4 +1,4 @@
-"""osmzen_spark — a from-scratch PySpark-native spatial-join + tiling engine.
+"""osmzen_spark — a from-scratch PySpark-native normalization + tiling engine.
 
 Re-creates the query/data-processing capabilities of paulmach/osmzen
 (Tilezen's OSM -> vector-tile normalization) as an idiomatic Spark engine:
@@ -10,14 +10,11 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
   per-row Python  -- see :mod:`osmzen_spark.compiler`
 * Arrow-vectorized geometry kernels (Web-Mercator area / length /
   centroid over flat coordinate buffers)  -- :mod:`osmzen_spark.geom`
-* a z/x/y + Morton-cell tiling core (cell encoding, cell rings,
-  point-in-polygon, kNN)  -- :mod:`osmzen_spark.tiling`
+* z/x/y tile and Morton cell columns  -- :mod:`osmzen_spark.tiling`
 * layer pipelines + cross-layer post-processing (rank matchers,
   backfill joins, conditional names, quantize/clamp)  -- :mod:`osmzen_spark.pipeline`
 * sources (OSM PBF / XML, GeoJSON) and the MVT sink  -- :mod:`osmzen_spark.sources`,
   :mod:`osmzen_spark.sinks`
-* training-data ops (text stats, sampling, packing …), which the
-  engine does not run  -- :mod:`osmzen_spark.ops`
 
 The reference implementation (read-only, for behavior only) lives at
 /root/reference; citations in docstrings use ``ref:file:line`` form.

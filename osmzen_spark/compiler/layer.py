@@ -115,7 +115,7 @@ class CompiledLayer:
         (tests/test_arrow_parity.py).
 
         Expects element_id, element_type, tags, geom_type + the derived
-        area/length/clon/clat columns (geom.derive.with_geometry_stats);
+        area/length/clon/clat columns (geom.derive.append_geometry_stats);
         returns one row per matching feature with id/type/zen_layer/
         min_zoom/match_idx + emits + every input column passed through.
         """

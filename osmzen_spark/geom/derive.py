@@ -1,4 +1,5 @@
-"""Spark stage: append geometry-derived columns via ``mapInArrow``.
+"""Geometry-derived columns, appended to Arrow batches inside the
+engine's ``mapInArrow`` pass (compiler/arrow_multilayer.py).
 
 ``mapInArrow`` hands us raw Arrow RecordBatches, so the list columns'
 flat value buffers + offsets go straight into the numpy kernels — the
@@ -15,12 +16,9 @@ Derived columns (ref:filter/context.go:109-181):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from osmzen_spark.geom.kernels import geometry_stats
@@ -76,17 +74,6 @@ def append_geometry_stats(
         list(batch.columns) + [pa.array(s, type=pa.float64()) for s in stats],
         names=names + list(STATS_COLS),
     )
-
-
-def with_geometry_stats(df: DataFrame, geometry_col: str = "geometry", type_col: str = "geom_type") -> DataFrame:
-    """Append area/length/clon/clat, computed Arrow-batch-vectorized."""
-    out_schema = T.StructType(df.schema.fields + [T.StructField(c, T.DoubleType()) for c in STATS_COLS])
-
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield append_geometry_stats(batch, geometry_col, type_col)
-
-    return df.mapInArrow(mapper, schema=out_schema)
 
 
 def geometry_from_rings(rings, geom_type: str | None = None):

@@ -100,8 +100,7 @@ def validate_stage(
     it row-for-row against the stored `_lineage/` table — catches
     corruption that preserves row counts (a torn page, a re-written
     value) at the cost of one extra scan. Cheap relative to the
-    recompute it guards, so resume paths that feed downstream stages
-    should prefer it."""
+    recompute it guards, so run_stage always resumes through it."""
     mpath = os.path.join(path, MANIFEST)
     if not os.path.exists(mpath):
         return False
@@ -144,13 +143,13 @@ def run_stage(
     bucket_col: str,
     compute,  # () -> DataFrame
     cell_col: str | None = "cell",
-    deep: bool = False,
     partition_by: str | None = None,
 ) -> DataFrame:
-    """Resume-or-compute: reload a validated checkpoint, else compute,
-    checkpoint (partitioned by `partition_by`, see write_stage), and
-    return the reloaded (pruned-scan-friendly) data."""
-    if validate_stage(spark, path, deep=deep):
+    """Resume-or-compute: reload a checkpoint that passes deep
+    validation, else compute, checkpoint (partitioned by `partition_by`,
+    see write_stage), and return the reloaded (pruned-scan-friendly)
+    data."""
+    if validate_stage(spark, path, deep=True):
         return spark.read.parquet(os.path.join(path, "data"))
     df = compute()
     write_stage(df, path, stage, bucket_col, cell_col, partition_by)

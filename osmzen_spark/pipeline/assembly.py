@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from osmzen_spark.geom.derive import GEOMETRY_TYPE, _flat
+from osmzen_spark.geom.mercator import wgs84_position
 
 WORLD_BOUND = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
 
@@ -248,9 +249,8 @@ def assemble_elements(
     Only tagged nodes/ways/relations become features (untagged elements
     exist purely as geometry carriers), matching osmgeojson's
     "interesting elements" behavior."""
-    # drop nodes with no WGS84 position (module docstring); Spark orders
-    # NaN above every number, so the range test drops NaN too
-    nodes = nodes.filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
+    # drop nodes with no WGS84 position (module docstring)
+    nodes = nodes.filter(wgs84_position(F.col("lon"), F.col("lat")))
     coords = assemble_way_coords(nodes, way_nodes)
 
     tagged = F.size("tags") > 0

@@ -94,8 +94,9 @@ class NormalizeEngine:
           a run that reuses the dir validates each stage and RESUMES
           from it without recompute (kill-resume; on a real cluster the
           manifest is the Iceberg snapshot commit). Costs one extra
-          map-side-combinable aggregation per stage;
-          OSMZEN_CHECKPOINT_DEEP=1 re-derives the checksums on resume.
+          map-side-combinable aggregation per stage, and a resume
+          re-derives the checksums and cell ranges before it trusts a
+          stage.
 
         Both write the data partitioned by ``partition_by`` when given.
         """
@@ -141,10 +142,6 @@ class NormalizeEngine:
                 bucket_col="__bucket",
                 compute=lambda: bucketed,
                 cell_col="cell" if "cell" in df.columns else None,
-                # deep: resume re-derives per-bucket checksums and
-                # cell ranges (catches corruption that preserves
-                # row counts — object stores have no CRC sidecar)
-                deep=os.environ.get("OSMZEN_CHECKPOINT_DEEP", "") == "1",
                 partition_by=partition_by,
             )
             return out.drop("__bucket")

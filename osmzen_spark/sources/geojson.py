@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osmzen_spark.geom.mercator import wgs84_position
+
 
 # ---------------------------------------------------------------- read
 
@@ -148,7 +150,12 @@ def parse_geojson_features(
         ).alias("tags"),
         gt.alias("geom_type"),
         geometry.alias("geometry"),
-    ).filter(F.col("geom_type").isin(*supported_types))
+    ).filter(
+        F.col("geom_type").isin(*supported_types)
+        # a feature with any vertex outside WGS84 is dropped whole, like
+        # an assembly node with no WGS84 position
+        & F.forall(F.zip_with("geometry.xs", "geometry.ys", wgs84_position), lambda ok: ok)
+    )
 
 
 def read_geojson_lines(spark: SparkSession, path: str) -> DataFrame:

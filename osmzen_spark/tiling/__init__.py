@@ -1,12 +1,1 @@
-from osmzen_spark.tiling.cells import (  # noqa: F401
-    MAX_LAT,
-    cell_col,
-    cell_to_zxy,
-    morton_col,
-    tile_x_col,
-    tile_y_col,
-    with_tile,
-    neighbor_offsets,
-)
-from osmzen_spark.tiling.pip import point_in_polygon_join  # noqa: F401
-from osmzen_spark.tiling.knn import knn_join, knn_bruteforce  # noqa: F401
+"""z/x/y tile and Morton cell columns (tiling.cells)."""

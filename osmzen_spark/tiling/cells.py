@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_LAT = 85.05112877980659  # atan(sinh(pi)) — Web-Mercator clip latitude
-MAX_ZOOM = 29  # 29 bits per axis fits into 58 of 64 (sign-safe)
 
 
 def tile_x_col(lon: Column, z: int) -> Column:
@@ -64,15 +63,6 @@ def morton_col(x: Column, y: Column) -> Column:
     return _spread_bits(x).bitwiseOR(F.shiftleft(_spread_bits(y), 1))
 
 
-def cell_col(lon: Column, lat: Column, z: int) -> Column:
-    """int64 cell id at zoom z for a lon/lat point column pair."""
-    if not 0 <= z <= MAX_ZOOM:
-        raise ValueError(f"zoom {z} out of range 0..{MAX_ZOOM}")
-    return F.shiftleft(F.lit(z).cast("long"), 58).bitwiseOR(
-        morton_col(tile_x_col(lon, z), tile_y_col(lat, z))
-    )
-
-
 def cell_from_xy_col(x: Column, y: Column, z: int) -> Column:
     return F.shiftleft(F.lit(z).cast("long"), 58).bitwiseOR(morton_col(x, y))
 
@@ -87,58 +77,13 @@ def with_tile(df: DataFrame, z: int, lon: str = "clon", lat: str = "clat") -> Da
     )
 
 
-# ---------------------------------------------------------------- driver-side
-
-
-def morton(x: int, y: int) -> int:
-    def spread(c: int) -> int:
-        c &= 0x1FFFFFFF
-        c = (c | (c << 16)) & 0x0000FFFF0000FFFF
-        c = (c | (c << 8)) & 0x00FF00FF00FF00FF
-        c = (c | (c << 4)) & 0x0F0F0F0F0F0F0F0F
-        c = (c | (c << 2)) & 0x3333333333333333
-        c = (c | (c << 1)) & 0x5555555555555555
-        return c
-
-    return spread(x) | (spread(y) << 1)
-
-
-def _compact_bits(c: int) -> int:
-    c &= 0x5555555555555555
-    c = (c | (c >> 1)) & 0x3333333333333333
-    c = (c | (c >> 2)) & 0x0F0F0F0F0F0F0F0F
-    c = (c | (c >> 4)) & 0x00FF00FF00FF00FF
-    c = (c | (c >> 8)) & 0x0000FFFF0000FFFF
-    c = (c | (c >> 16)) & 0x00000000FFFFFFFF
-    return c
-
-
-def cell_to_zxy(cell: int) -> tuple[int, int, int]:
-    z = cell >> 58
-    m = cell & ((1 << 58) - 1)
-    return z, _compact_bits(m), _compact_bits(m >> 1)
-
-
-def cell_id(z: int, x: int, y: int) -> int:
-    return (z << 58) | morton(x, y)
-
-
 def tile_bound(z: int, x: int, y: int) -> tuple[float, float, float, float]:
     """(minlon, minlat, maxlon, maxlat) of Web-Mercator tile z/x/y —
     the inverse of tile_x_col/tile_y_col (maptile.Tile.Bound analog,
     used by the reference's full-tile entry point)."""
-    import math
-
     n = float(1 << z)
 
     def lat(yy: float) -> float:
         return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * yy / n))))
 
     return (x / n * 360.0 - 180.0, lat(y + 1), (x + 1) / n * 360.0 - 180.0, lat(y))
-
-
-def neighbor_offsets(ring: int) -> list[tuple[int, int]]:
-    """(dx, dy) offsets for all cells within Chebyshev distance ``ring``
-    (the (2r+1)^2 block, including center). Used for cell-ring kNN
-    candidate expansion."""
-    return [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]

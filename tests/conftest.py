@@ -29,6 +29,23 @@ ELEMENTS_SCHEMA = T.StructType(
 )
 
 
+def with_geometry_stats(df, geometry_col="geometry", type_col="geom_type"):
+    """df with area/length/clon/clat appended by the engine's geometry
+    kernel (geom.derive.append_geometry_stats) in a mapInArrow pass:
+    the derived input of the Column oracle CompiledLayer.evaluate."""
+    from osmzen_spark.geom.derive import STATS_COLS
+
+    out_schema = T.StructType(df.schema.fields + [T.StructField(c, T.DoubleType()) for c in STATS_COLS])
+
+    def mapper(batches):
+        from osmzen_spark.geom.derive import append_geometry_stats
+
+        for batch in batches:
+            yield append_geometry_stats(batch, geometry_col, type_col)
+
+    return df.mapInArrow(mapper, schema=out_schema)
+
+
 def make_elements(spark, rows):
     """rows: list of (id, type, tags, geom_type, geometry-dict)."""
     data = [

@@ -9,10 +9,10 @@ without a tile bound."""
 from pyspark.sql import functions as F
 
 from osmzen_spark.compiler.arrow_multilayer import evaluate_all_layers_arrow, split_layer_views
-from osmzen_spark.geom.derive import STATS_COLS, geometry_from_rings, point_geometry, with_geometry_stats
+from osmzen_spark.geom.derive import STATS_COLS, geometry_from_rings, point_geometry
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
-from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
+from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements, with_geometry_stats
 
 SQ = geometry_from_rings([[(0.0, 0.0), (0.01, 0.0), (0.01, 0.01), (0.0, 0.01)]], "Polygon")
 BIG = geometry_from_rings([[(0.0, 0.0), (0.3, 0.0), (0.3, 0.3), (0.0, 0.3)]], "Polygon")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from osmzen_spark.pipeline.assembly import assemble_elements
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
-from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS
+from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, with_geometry_stats
 from synthetic import SF_SMALL
 
 
@@ -131,8 +131,6 @@ def test_multipolygon_stitch_two_open_outers_plus_hole(spark):
     assert g["ring_lens"][1] == 5
 
     # area = outer - hole via the engine's geometry kernel
-    from osmzen_spark.geom.derive import with_geometry_stats
-
     stats = with_geometry_stats(spark.createDataFrame([el.asDict()])).collect()[0]
     outer_only = assemble_elements(
         nodes, way_nodes,

@@ -6,9 +6,11 @@ import struct
 
 import pytest
 
-from osmzen_spark.sources.osmpbf import _encode_varint, _ld, _tag, encode_pbf, read_osm_pbf
+from osmzen_spark.sources.osmpbf import read_osm_pbf
 
 from test_assembly import _raw_tables
+from tests_util_mvt import decode_tile
+from tests_util_pbf import _encode_varint, _ld, _tag, encode_pbf
 
 
 def test_pbf_without_data_blobs_gives_empty_tables(spark, tmp_path):
@@ -103,7 +105,7 @@ def test_ways_with_fewer_than_two_resolved_nodes(spark, tmp_path):
     complete road beside it comes through."""
     from osmzen_spark.pipeline.assembly import assemble_elements
     from osmzen_spark.pipeline.normalize import NormalizeEngine
-    from osmzen_spark.sinks.mvt import decode_tile, mvt_tiles
+    from osmzen_spark.sinks.mvt import mvt_tiles
     from osmzen_spark.tiling.cells import tile_bound
 
     bound = tile_bound(16, 17896, 24450)
@@ -154,7 +156,7 @@ def test_nan_and_out_of_range_coordinates(spark, tmp_path):
 
     from osmzen_spark.pipeline.assembly import assemble_elements
     from osmzen_spark.pipeline.normalize import NormalizeEngine
-    from osmzen_spark.sinks.mvt import decode_tile, mvt_tiles
+    from osmzen_spark.sinks.mvt import mvt_tiles
     from osmzen_spark.sources.osmxml import read_osm_xml
 
     road = '<tag k="highway" v="residential"/>'
@@ -215,3 +217,50 @@ def test_nan_and_out_of_range_coordinates(spark, tmp_path):
         assert f["rings"] and all(
             math.isfinite(c) and abs(c) < 2**16 for ring in f["rings"] for pt in ring for c in pt
         )
+
+
+def test_geojson_vertices_outside_wgs84(spark, tmp_path):
+    """GeoJSON features skip assembly, so the source itself applies the
+    WGS84 check: a feature with any vertex outside it is dropped whole
+    and reaches no layer and no MVT blob (a Point at lat 95 once landed
+    in tile row 0)."""
+    import json
+
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.sinks.mvt import mvt_tiles
+    from osmzen_spark.sources.geojson import process_geojson, read_geojson_lines
+
+    cafe = {"amenity": "cafe", "name": "Cafe"}
+    road = {"highway": "residential"}
+
+    def feature(fid, tags, gtype, coords):
+        geometry = {"type": gtype, "coordinates": coords}
+        return {"type": "Feature", "id": fid, "properties": tags, "geometry": geometry}
+
+    feats = [
+        feature("node/6", cafe, "Point", [-81.685, 41.505]),
+        feature("node/8", cafe, "Point", [-81.687, 95.0]),
+        feature("node/9", cafe, "Point", [200.0, 41.505]),
+        feature("way/10", road, "LineString", [[-81.69, 41.5], [-81.68, 41.5], [-81.68, 41.51]]),
+        feature("way/12", road, "LineString", [[-81.69, 41.5], [-81.685, 95.0], [-81.68, 41.51]]),
+    ]
+    path = os.path.join(tmp_path, "bad-coords.geojsonl")
+    with open(path, "w") as f:
+        f.write("\n".join(json.dumps(x) for x in feats) + "\n")
+    assert sorted(r["element_id"] for r in read_geojson_lines(spark, path).collect()) == [6, 10]
+
+    engine = NormalizeEngine()
+    try:
+        layers = process_geojson(spark, path, zoom=16, engine=engine)
+        dfs = list(layers.values())
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df, allowMissingColumns=True)
+        rows = {(r["zen_layer"], r["id"]) for r in union.select("zen_layer", "id").collect()}
+        assert rows == {("pois", 6), ("roads", 10)}
+        tiles = mvt_tiles(union, zoom=16).collect()
+    finally:
+        engine.release()
+    feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
+    assert sorted(f["id"] for f in feats) == [6, 10]
+    assert all(t["tile_y"] > 0 for t in tiles)

@@ -5,8 +5,9 @@ each cross-layer step, so the final union reads each eval-union layer
 at most once and release() frees those cuts too, the compiled rule
 payload is built once per engine config,
 Catalyst runs the engine's plans interpreted (no generated Java), the
-package reads no environment switch beyond the documented ones, and
-every module of the package is reachable from an engine entry point."""
+package reads no environment switch beyond the documented ones, every
+module of the package is reachable from an engine entry point, and
+every top-level function or class has a caller outside the tests."""
 
 import ast
 import os
@@ -33,18 +34,27 @@ ENTRY_MODULES = (
     "compiler.loader",
     "lineage",
     "session",
-    "tiling",
 )
 
-# package modules no entry point reaches: the training-data ops the
-# engine does not run. They stay only while their own tests cover them
-# (ROADMAP lists their deletion); the list must stay exact, so nothing
-# new joins it unnoticed.
-UNREACHED_ALLOWED = {
-    f"ops/{m}.py" for m in (
-        "__init__", "capping", "incremental", "packing", "ranking",
-        "repetition", "sampling", "textstats",
-    )
+# the code outside the package whose calls count as uses (its tests
+# do not)
+CALLER_DIRS = ("perfbench", "scripts")
+
+# public entry points that only tests call today: the reference's
+# user-facing calls (a full tile from OSM XML or PBF, GeoJSON in and
+# out, a tile's bound) and the driver-side geometry builders for
+# callers that bring their own rings. The list must stay exact, so
+# nothing new joins it unnoticed.
+API_ALLOWED = {
+    "sources/osmxml.py::full_tile",
+    "sources/osmpbf.py::full_tile",
+    "sources/geojson.py::process_geojson",
+    "sources/geojson.py::read_feature_collections",
+    "sources/geojson.py::write_geojson_lines",
+    "sources/geojson.py::feature_collections",
+    "tiling/cells.py::tile_bound",
+    "geom/derive.py::geometry_from_rings",
+    "geom/derive.py::point_geometry",
 }
 
 # the pandas-exchanging UDF entry points: the DataFrame methods and the
@@ -56,7 +66,7 @@ PANDAS_UDF_NAMES = {"mapInPandas", "applyInPandas", "pandas_udf"}
 PANDAS_ALLOWED = {"compiler/vectorized.py", "compiler/arrow_layer.py"}
 
 # every OSMZEN_* environment variable the package may read
-ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR", "OSMZEN_CHECKPOINT_DEEP"}
+ALLOWED_ENV = {"OSMZEN_CHECKPOINT_DIR"}
 
 
 def _garage(spark):
@@ -118,18 +128,25 @@ def test_post_processors_hold_no_cut():
 
 def test_release_frees_post_process_cuts(spark):
     """A bounded run through the cross-layer dedup pins its cuts in the
-    block manager until release() unpersists them."""
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
-    before = persistent().size()
+    block manager until release() unpersists them. The check follows
+    the ids of the RDDs process() persisted: cuts that no engine owns
+    (a source's parse) may be freed by garbage collection at any time,
+    so the session-wide count is not stable during the test."""
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     engine = NormalizeEngine()
     layers = engine.process(
         _garage(spark), zoom=16, bound=(-122.26, 37.82, -122.25, 37.83),
         layer_names=["pois", "landuse", "buildings"],
     )
     assert sum(len(df.collect()) for df in layers.values()) > 0
-    assert persistent().size() > before
+    added = persisted() - before
+    assert added, "process() persisted no cut"
     engine.release()
-    assert persistent().size() == before
+    assert not added & persisted()
 
 
 def test_rule_payload_built_once_per_engine(spark, monkeypatch):
@@ -261,21 +278,100 @@ def _reachable() -> dict[str, str]:
     return reached
 
 
+def _py_files(top: str):
+    """Every .py file under top, outside tests/ directories."""
+    for root, dirs, files in os.walk(top):
+        dirs[:] = [d for d in dirs if d not in ("tests", "__pycache__")]
+        yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def _dotted(path: str) -> str:
+    """The dotted module name of a file under the repository root."""
+    rel = os.path.relpath(path, os.path.dirname(PACKAGE))[: -len(".py")]
+    return rel.replace(os.sep, ".").removesuffix(".__init__")
+
+
 def test_every_package_module_is_reachable():
-    """Every .py file under osmzen_spark/ must be reached from the entry
-    modules, apart from the exact UNREACHED_ALLOWED list."""
-    reached = _reachable()
-    every = {
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(PACKAGE)
-        for f in files
-        if f.endswith(".py")
+    """Every .py file under osmzen_spark/ is reached from the entry
+    modules."""
+    unreached = sorted(os.path.relpath(p, PACKAGE) for p in set(_py_files(PACKAGE)) - set(_reachable()))
+    assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _reads(nodes, module: str, bound: dict[str, str]) -> set[str]:
+    """Dotted names of what the code in `nodes` reads: a bare name is
+    `module.name` unless an import bound it; `m.attr` on an imported
+    module is that module's attr. Import statements alone read
+    nothing, so an __init__ re-export is no use."""
+    out = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                out.add(bound.get(node.id, f"{module}.{node.id}"))
+            elif (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.ctx, ast.Load)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in bound
+            ):
+                out.add(f"{bound[node.value.id]}.{node.attr}")
+    return out
+
+
+def test_every_definition_has_a_caller():
+    """Every top-level function or class of the package is read by
+    package code or by CALLER_DIRS, apart from the exact API_ALLOWED
+    list; its own body, tests and __init__ re-exports do not count.
+    References follow imports, so a same-named function elsewhere is
+    not a use."""
+    root = os.path.dirname(PACKAGE)
+    files = list(_py_files(PACKAGE)) + [p for d in CALLER_DIRS for p in _py_files(os.path.join(root, d))]
+    trees = {}
+    for path in files:
+        with open(path) as fh:
+            trees[path] = ast.parse(fh.read(), path)
+    # what a package __init__ re-exports: "pkg.name" -> "pkg.module.name"
+    aliases = {
+        f"{_dotted(path)}.{a.asname or a.name}": f"{node.module}.{a.name}"
+        for path, tree in trees.items()
+        if path.endswith("__init__.py")
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
     }
-    unreached = sorted(os.path.relpath(p, PACKAGE) for p in every - set(reached))
-    unexpected = sorted(set(unreached) - UNREACHED_ALLOWED)
-    assert not unexpected, f"modules no entry point imports: {unexpected}"
-    stale = sorted(UNREACHED_ALLOWED - set(unreached))
-    assert not stale, f"UNREACHED_ALLOWED names reached or deleted modules: {stale}"
+
+    def resolve(name: str) -> str:
+        while name in aliases:
+            name = aliases[name]
+        return name
+
+    bound = {
+        path: {
+            a.asname or a.name: resolve(f"{node.module}.{a.name}")
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module
+            for a in node.names
+        }
+        for path, tree in trees.items()
+    }
+    reads = {path: _reads(tree.body, _dotted(path), bound[path]) for path, tree in trees.items()}
+
+    uncalled = set()
+    for path in _py_files(PACKAGE):
+        module, body = _dotted(path), trees[path].body
+        for node in body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            name = f"{module}.{node.name}"
+            others = [t for t in body if t is not node]
+            if name in _reads(others, module, bound[path]):
+                continue
+            if not any(name in r for p, r in reads.items() if p != path):
+                uncalled.add(f"{os.path.relpath(path, PACKAGE)}::{node.name}")
+    unexpected = sorted(uncalled - API_ALLOWED)
+    assert not unexpected, f"definitions only tests call: {unexpected}"
+    stale = sorted(API_ALLOWED - uncalled)
+    assert not stale, f"API_ALLOWED names called or deleted definitions: {stale}"
 
 
 def _udf_names(node) -> list[str]:

@@ -1,13 +1,12 @@
 """MVT sink (sinks/mvt.py): byte-level protobuf round-trips of the
-hand-written encoder via the decoder twin, command-integer semantics,
-and the Spark per-tile grouped applyInArrow sink over the normalized
-buildings slice."""
+hand-written encoder via the test twins (tests_util_mvt.py),
+command-integer semantics, and the Spark per-tile grouped applyInArrow
+sink over the normalized buildings slice."""
 
 import numpy as np
 
-from osmzen_spark.sinks.mvt import decode_tile, encode_tile
-
 from synthetic import SF_SMALL, synthetic_elements
+from tests_util_mvt import decode_tile, encode_tile
 
 
 def test_roundtrip_point_and_properties():
@@ -87,7 +86,7 @@ def test_negative_deltas_zigzag():
 
 
 def test_encode_varints_matches_scalar():
-    from osmzen_spark.sinks.mvt import _varint, encode_varints
+    from osmzen_spark.sinks.mvt import _varint, _varints_with_counts
 
     rng = np.random.default_rng(7)
     vals = np.concatenate(
@@ -96,8 +95,8 @@ def test_encode_varints_matches_scalar():
             rng.integers(0, 2**62, 500, dtype=np.int64).astype(np.uint64),
         ]
     )
-    assert encode_varints(vals) == b"".join(_varint(int(v)) for v in vals)
-    assert encode_varints(np.array([], dtype=np.uint64)) == b""
+    assert _varints_with_counts(vals)[0] == b"".join(_varint(int(v)) for v in vals)
+    assert _varints_with_counts(np.array([], dtype=np.uint64))[0] == b""
 
 
 def test_encode_commands_batch_matches_per_feature():
@@ -107,12 +106,8 @@ def test_encode_commands_batch_matches_per_feature():
     sub-2-point ring drops, an all-rings-dropped feature (empty
     bytes), a zero-point point feature, and a declared ring length
     exceeding the feature's points (silent truncation)."""
-    from osmzen_spark.sinks.mvt import (
-        _commands_path,
-        _commands_point,
-        _encode_commands_batch,
-        encode_varints,
-    )
+    from osmzen_spark.sinks.mvt import _encode_commands_batch, _varints_with_counts
+    from tests_util_mvt import _commands_path, _commands_point
 
     # (gcode name, ring point lists)
     feats = [
@@ -163,7 +158,7 @@ def test_encode_commands_batch_matches_per_feature():
                 cut.append(list(zip(fx[roff : roff + ln], fy[roff : roff + ln])))
                 roff += ln
             cmds = _commands_path(cut, close=(gcodes[i] == 3))
-        want = encode_varints(np.array(cmds, dtype=np.uint64))
+        want = _varints_with_counts(np.array(cmds, dtype=np.uint64))[0]
         assert got[i] == want, (i, gt)
 
 
@@ -198,7 +193,7 @@ def test_spark_mvt_sink_byte_parity_with_scalar(spark):
 
     from pyspark.sql import functions as F  # noqa: F401
 
-    from osmzen_spark.sinks.mvt import encode_tile, mvt_tiles
+    from osmzen_spark.sinks.mvt import mvt_tiles
 
     zoom, extent = 4, 4096
     n_tiles = 1 << zoom

@@ -10,11 +10,8 @@ import pytest
 
 from osmzen_spark.sources.osmpbf import (
     _blob_payload,
-    _encode_varint,
-    _zigzag,
     decode_primitive_block,
     decode_varints,
-    encode_pbf,
     parse_osm_pbf,
     read_osm_pbf,
     scan_blob_index,
@@ -22,6 +19,7 @@ from osmzen_spark.sources.osmpbf import (
 )
 
 from synthetic import write_osm_xml
+from tests_util_pbf import _encode_varint, _zigzag, encode_pbf
 
 FIXTURE = "/root/reference/testdata/tile-16-17896-24450.xml"
 requires_fixture = pytest.mark.skipif(

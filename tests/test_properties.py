@@ -2,50 +2,14 @@
 
 The reference has no property/randomized testing (SURVEY.md §5); these
 go beyond it on the components whose correctness is a mathematical
-invariant rather than a golden value: sampling-threshold
-monotonicity and protobuf varint/zigzag encoding. All kernels here are
-pure Python — no SparkSession per example — so hundreds of cases run
-in seconds; the Spark plumbing around them is pinned by the regular
-suite + the DuckDB oracles.
+invariant rather than a golden value: protobuf varint/zigzag encoding.
+All kernels here are pure Python — no SparkSession per example — so
+hundreds of cases run in seconds; the Spark plumbing around them is
+pinned by the regular suite + the DuckDB oracles.
 """
-
-import hashlib
 
 from hypothesis import given
 from hypothesis import strategies as st
-
-
-# ------------------------------------------------ md5-bucket sampling
-
-def _kept(key: int, rate: float) -> bool:
-    # pure-Python mirror of ops.sampling (Spark and DuckDB both compute
-    # md5 of the decimal string and compare the first 8 hex chars)
-    from osmzen_spark.ops.sampling import _hex_threshold
-
-    if rate >= 1.0:
-        return True
-    bucket = hashlib.md5(str(key).encode()).hexdigest()[:8]
-    return bucket < _hex_threshold(rate)
-
-
-@given(
-    key=st.integers(min_value=0, max_value=2**62),
-    r1=st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
-    r2=st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
-)
-def test_hash_sample_monotone_in_rate(key, r1, r2):
-    """A key kept at the lower rate is kept at every higher rate —
-    the property that makes re-sampling a corpus at a higher rate a
-    SUPERSET (no churn), which hash_sample's docstring promises."""
-    lo, hi = sorted((r1, r2))
-    if _kept(key, lo):
-        assert _kept(key, hi)
-
-
-@given(st.integers(min_value=0, max_value=2**62))
-def test_hash_sample_rate_bounds(key):
-    assert _kept(key, 1.0)
-    assert not _kept(key, 0.0)
 
 
 # ------------------------------------------------ varint / zigzag
@@ -66,7 +30,8 @@ def test_varint_roundtrip(v):
 
 @given(st.integers(min_value=-(2**31), max_value=2**31 - 1))
 def test_zigzag_roundtrip(v):
-    from osmzen_spark.sinks.mvt import _unzigzag, _zigzag
+    from osmzen_spark.sinks.mvt import _zigzag
+    from tests_util_mvt import _unzigzag
 
     z = _zigzag(v)
     assert z >= 0
