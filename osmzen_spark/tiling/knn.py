@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmzen_spark.tiling.cells import cell_from_xy_col, neighbor_offsets, tile_x_col, tile_y_col
+from osmzen_spark.tiling.cells import cell_from_xy_col, tile_x_col, tile_y_col
 
 EARTH_RADIUS_M = 6371000.0
 
@@ -84,8 +84,13 @@ def knn_join(
         .withColumn("_qx", tile_x_col(F.col(f"q_{lon}"), z))
         .withColumn("_qy", tile_y_col(F.col(f"q_{lat}"), z))
     )
+    # every (dx, dy) within Chebyshev distance ring, the center included
     offsets = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in neighbor_offsets(ring)]
+        *[
+            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+            for dx in range(-ring, ring + 1)
+            for dy in range(-ring, ring + 1)
+        ]
     )
     q = q.withColumn("_off", F.explode(offsets))
     # wrap x around the antimeridian; clamp y

@@ -31,6 +31,8 @@ ENTRY_MODULES = (
     "sources.osmxml",
     "sources.geojson",
     "sinks.mvt",
+    "tiling.pip",
+    "tiling.knn",
     "compiler.loader",
     "lineage",
     "session",
@@ -42,8 +44,9 @@ CALLER_DIRS = ("perfbench", "scripts")
 
 # public entry points that only tests call today: the reference's
 # user-facing calls (a full tile from OSM XML or PBF, GeoJSON in and
-# out, a tile's bound) and the driver-side geometry builders for
-# callers that bring their own rings. The list must stay exact, so
+# out, a tile's bound), the driver-side geometry builders for
+# callers that bring their own rings, and the point-in-polygon and kNN
+# joins with kNN's exact reference. The list must stay exact, so
 # nothing new joins it unnoticed.
 API_ALLOWED = {
     "sources/osmxml.py::full_tile",
@@ -55,6 +58,9 @@ API_ALLOWED = {
     "tiling/cells.py::tile_bound",
     "geom/derive.py::geometry_from_rings",
     "geom/derive.py::point_geometry",
+    "tiling/pip.py::point_in_polygon_join",
+    "tiling/knn.py::knn_join",
+    "tiling/knn.py::knn_bruteforce",
 }
 
 # the pandas-exchanging UDF entry points: the DataFrame methods and the

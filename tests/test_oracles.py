@@ -1,9 +1,9 @@
 """DuckDB oracles for the engine core.
 
 Each entry of ``QUERIES`` runs one slice of the engine on Spark: tile
-assignment, membership joins, the buildings rule chain (from elements
-and from raw node/way tables), the per-tile cap, the MVT sink, the three
-sources and a payload ride-through.
+assignment, point-in-polygon and kNN joins, membership joins, the
+buildings rule chain (from elements and from raw node/way tables), the
+per-tile cap, the MVT sink, the three sources and a payload ride-through.
 Its twin in ``ORACLES`` re-derives the same rows in DuckDB SQL straight
 from the sf* parquet tables (TESTDATA.md), without the engine.
 
@@ -34,10 +34,11 @@ from synthetic import (
     synthetic_raw_buildings,
 )
 
-TABLES = ("customer", "orders", "lineitem")
+TABLES = ("customer", "supplier", "orders", "lineitem")
 
-# tile assignment runs on the larger table
-TILING_QUERIES = ("tile_assign",)
+# the tiling joins run on the larger table: at sf0.001 no customer point
+# falls inside a supplier rectangle, so point_in_polygon would be empty
+TILING_QUERIES = ("tile_assign", "point_in_polygon", "knn")
 
 
 # ---------------------------------------------------------------- inputs
@@ -157,6 +158,55 @@ def q_tile_assign(spark, sf_dir):
         )
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n_points"))
+    )
+
+
+def q_point_in_polygon(spark, sf_dir):
+    """PIP spatial join: customer points in supplier rectangles (cell
+    prefilter + exact vectorized ray-cast). Oracle: bbox containment
+    (exact for axis-aligned rectangles)."""
+    from osmzen_spark.tiling.pip import point_in_polygon_join
+
+    pts = _customer_points(spark, sf_dir)
+    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    half_lon = (F.pmod(F.col("s_suppkey"), F.lit(80)) + 10) / 10.0 + 0.00000049
+    half_lat = (F.pmod(F.col("s_suppkey"), F.lit(60)) + 10) / 12.0 + 0.00000049
+    cx = F.pmod(F.col("s_suppkey") * 2654435761, F.lit(320000000)) / 1000000.0 - 160.0
+    cy = F.pmod(F.col("s_suppkey") * 2246822519, F.lit(130000000)) / 1000000.0 - 65.0
+    polys = s.select(
+        F.col("s_suppkey").alias("poly_id"),
+        F.struct(
+            F.array(cx - half_lon, cx + half_lon, cx + half_lon, cx - half_lon, cx - half_lon).alias("xs"),
+            F.array(cy - half_lat, cy - half_lat, cy + half_lat, cy + half_lat, cy - half_lat).alias("ys"),
+            F.array(F.lit(5)).alias("ring_lens"),
+            F.array(F.lit(0)).alias("ring_roles"),
+        ).alias("geometry"),
+    )
+    joined = point_in_polygon_join(pts, polys, z=4, lon="lon", lat="lat")
+    return (
+        joined.groupBy("poly_id")
+        .agg(F.count("*").alias("n_inside"), F.sum("id").cast("long").alias("sum_ids"))
+        .orderBy("poly_id")
+    )
+
+
+def q_knn(spark, sf_dir):
+    """kNN via cell-ring expansion: 3 nearest customers for a grid of
+    query points; exactness checked against the window-over-haversine
+    oracle."""
+    from osmzen_spark.tiling.knn import knn_join
+
+    pts = _customer_points(spark, sf_dir)
+    queries = spark.range(1, 9).select(
+        F.col("id"),
+        (F.col("id") * 40.0 - 180.0 + 20.0).alias("lon"),
+        (F.col("id") * 15.0 - 70.0).alias("lat"),
+    )
+    res = knn_join(queries, pts, k=3, z=3, ring=2)
+    return res.select(
+        F.col("q_id").alias("query_id"),
+        F.col("p_id").alias("point_id"),
+        F.col("knn_rank").cast("int").alias("knn_rank"),
     )
 
 
@@ -383,6 +433,8 @@ def q_payload_normalize_tile(spark, sf_dir):
 
 QUERIES = {
     "tile_assign": q_tile_assign,
+    "point_in_polygon": q_point_in_polygon,
+    "knn": q_knn,
     "route_networks": q_route_networks,
     "gate_min_zoom": q_gate_min_zoom,
     "normalize_buildings": q_normalize_buildings,
@@ -512,6 +564,40 @@ ORACLES = {
                {_tile_sql("y", 64)} AS tile_y,
                COUNT(*) AS n_points
         FROM pts GROUP BY 1, 2
+    """,
+    "point_in_polygon": f"""
+        WITH pts AS ({CUSTOMER_POINTS_SQL}), rects AS (
+          SELECT s_suppkey AS poly_id,
+                 (s_suppkey * 2654435761) % 320000000 / 1000000.0 - 160.0 AS cx,
+                 (s_suppkey * 2246822519) % 130000000 / 1000000.0 - 65.0  AS cy,
+                 ((s_suppkey % 80) + 10) / 10.0 + 0.00000049 AS half_lon,
+                 ((s_suppkey % 60) + 10) / 12.0 + 0.00000049 AS half_lat
+          FROM supplier
+        )
+        SELECT poly_id, COUNT(*) AS n_inside, CAST(SUM(id) AS BIGINT) AS sum_ids
+        FROM pts JOIN rects
+          ON pts.lon > rects.cx - rects.half_lon AND pts.lon < rects.cx + rects.half_lon
+         AND pts.lat > rects.cy - rects.half_lat AND pts.lat < rects.cy + rects.half_lat
+        GROUP BY poly_id ORDER BY poly_id
+    """,
+    "knn": f"""
+        WITH pts AS ({CUSTOMER_POINTS_SQL}), q AS (
+          SELECT i AS id, i * 40.0 - 160.0 AS lon, i * 15.0 - 70.0 AS lat
+          FROM generate_series(1, 8) AS t(i)
+        ), d AS (
+          SELECT q.id AS query_id, pts.id AS point_id,
+                 2.0 * 6371000.0 * ASIN(LEAST(1.0, SQRT(
+                   POW(SIN((RADIANS(pts.lat) - RADIANS(q.lat)) / 2), 2)
+                   + COS(RADIANS(q.lat)) * COS(RADIANS(pts.lat))
+                     * POW(SIN((RADIANS(pts.lon) - RADIANS(q.lon)) / 2), 2)
+                 ))) AS dist
+          FROM q CROSS JOIN pts
+        )
+        SELECT query_id, point_id,
+               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY dist ASC, point_id ASC) AS INT) AS knn_rank
+        FROM d
+        QUALIFY knn_rank <= 3
     """,
     "route_networks": """
         SELECT o_orderkey + 10000000000 AS way_id,
