@@ -10,8 +10,7 @@ Re-creates the query/data-processing capabilities of paulmach/osmzen
   per-row Python  -- see :mod:`osmzen_spark.compiler`
 * Arrow-vectorized geometry kernels (Web-Mercator area / length /
   centroid over flat coordinate buffers)  -- :mod:`osmzen_spark.geom`
-* z/x/y tile and Morton cell columns, point-in-polygon and kNN joins
-  -- :mod:`osmzen_spark.tiling`
+* z/x/y tile and Morton cell columns  -- :mod:`osmzen_spark.tiling`
 * layer pipelines + cross-layer post-processing (rank matchers,
   backfill joins, conditional names, quantize/clamp)  -- :mod:`osmzen_spark.pipeline`
 * sources (OSM PBF / XML, GeoJSON) and the MVT sink  -- :mod:`osmzen_spark.sources`,

@@ -43,8 +43,7 @@ _NUM_FUNCS = {
     "tz_looks_like_service_area",
     "tz_looks_like_rest_area",
 }
-_BOOL_FUNCS = {"util.tag_str_to_bool", "util.true_or_none", "util.is_building",
-               "mz_calculate_is_building_or_part", "mz_calculate_is_bus_route"}
+_BOOL_FUNCS = {"util.tag_str_to_bool", "util.is_building"}
 _NUM_PSEUDO = {"zoom", "area", "way_area", "volume", "height"}
 
 
@@ -74,8 +73,6 @@ def infer_type(node) -> str:
                 return "double"
             if f in _BOOL_FUNCS:
                 return "boolean"
-            if f == "mz_get_rel_networks":
-                return "networks"
             return "string"
         if op == "case":
             ts = set()

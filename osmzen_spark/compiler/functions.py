@@ -2,11 +2,12 @@
 each compiled to a pure Column expression (JVM-side; Catalyst evaluates
 it interpreted, as it does every engine expression, see session.py).
 
-Membership-join functions (is_bus_route, cycling_network, rel_networks,
-highway-gate min_zoom) are *pre-join stages* in the pipeline, surfaced
-here as derived-column reads — the rule language sees a column, the
-physical plan is a broadcast/shuffle join done once per batch instead
-of per rule.
+Membership-join functions (highway-gate min_zoom, path major route)
+are *pre-join stages* in the pipeline, surfaced here as derived-column
+reads — the rule language sees a column, the physical plan is a
+broadcast/shuffle join done once per batch instead of per rule. The
+other membership columns (is_bus_route, mz_cycling_network,
+mz_networks) are read by rules through ``col:``.
 """
 
 from __future__ import annotations
@@ -171,10 +172,6 @@ def _fn_tag_str_to_bool(args, ctx):
     return F.when(F.lower(args[0]).isin("yes", "true"), F.lit(True))
 
 
-def _fn_true_or_none(args, ctx):
-    return F.when(args[0] == F.lit(True), F.lit(True))
-
-
 def _fn_is_building(args, ctx):
     return is_building_col(ctx)
 
@@ -236,20 +233,6 @@ def _fn_looks_like_rest_area(args, ctx):
     return _suffix_zoom(ctx, ("rest area",))
 
 
-def _fn_calculate_is_bus_route(args, ctx):
-    """Membership join result (ref:filter/functions.go:161-180); the
-    pipeline pre-joins relation memberships into `is_bus_route`."""
-    return ctx.derived.get("is_bus_route", F.lit(None).cast("boolean"))
-
-
-def _fn_cycling_network(args, ctx):
-    return ctx.derived.get("mz_cycling_network", F.lit(None).cast("string"))
-
-
-def _fn_get_rel_networks(args, ctx):
-    return ctx.derived.get("mz_networks", F.lit(None))
-
-
 def _fn_gate_min_zoom(args, ctx):
     """node->way highway-class gate zoom (ref:filter/functions.go:120-159);
     pre-joined as `gate_min_zoom`, default 17."""
@@ -265,9 +248,7 @@ def _fn_path_major_route(args, ctx):
 FUNCTIONS: dict[str, Callable] = {
     "util.safe_int": _fn_safe_int,
     "util.tag_str_to_bool": _fn_tag_str_to_bool,
-    "util.true_or_none": _fn_true_or_none,
     "util.is_building": _fn_is_building,
-    "mz_calculate_is_building_or_part": _fn_is_building,
     "mz_to_float_meters": _fn_to_float_meters,
     "mz_building_kind_detail": _fn_building_kind_detail,
     "mz_building_part_kind_detail": _fn_building_part_kind_detail,
@@ -275,9 +256,6 @@ FUNCTIONS: dict[str, Callable] = {
     "tz_estimate_parking_capacity": _fn_estimate_parking_capacity,
     "tz_looks_like_service_area": _fn_looks_like_service_area,
     "tz_looks_like_rest_area": _fn_looks_like_rest_area,
-    "mz_calculate_is_bus_route": _fn_calculate_is_bus_route,
-    "mz_cycling_network": _fn_cycling_network,
-    "mz_get_rel_networks": _fn_get_rel_networks,
     "mz_get_min_zoom_highway_level_gate": _fn_gate_min_zoom,
     "mz_calculate_path_major_route": _fn_path_major_route,
 }

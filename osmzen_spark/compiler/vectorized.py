@@ -65,9 +65,6 @@ class BatchContext:
             self._cols[name] = np.asarray(arr.to_pandas())
         return self._cols[name]
 
-    def has_col(self, name: str) -> bool:
-        return name in self.names
-
     # -- tags -------------------------------------------------------------
     def _build_tag_matrix(self):
         keys = self._needed_keys
@@ -615,18 +612,7 @@ def _compile_call(val, keys: set[str]) -> Callable:
             return out
 
         return t2b
-    if func == "util.true_or_none":
-        af = args[0]
-
-        def ton(b):
-            v = af(b)
-            out = np.empty(b.n, dtype=object)
-            out[:] = None
-            out[v == True] = True  # noqa: E712
-            return out
-
-        return ton
-    if func in ("util.is_building", "mz_calculate_is_building_or_part"):
+    if func == "util.is_building":
         return _compile_col("mz_is_building", keys)
     if func == "mz_to_float_meters":
         af = args[0]
@@ -683,14 +669,6 @@ def _compile_call(val, keys: set[str]) -> Callable:
             return _num_to_obj(v, np.ones(b.n, bool))
 
         return gate
-    if func == "mz_calculate_is_bus_route":
-        return _compile_col("is_bus_route", keys)
-    if func == "mz_cycling_network":
-        return _compile_col("mz_cycling_network", keys)
-    if func == "mz_hiking_network":
-        return _compile_col("mz_hiking_network", keys)
-    if func == "mz_get_rel_networks":
-        return _compile_col("mz_networks", keys)
     if func == "mz_calculate_path_major_route":
         def pmr(b):
             col = b.derived("path_major_route_min_zoom")

@@ -14,6 +14,8 @@ from pyspark.sql import Column
 
 EARTH_RADIUS = 6378137.0  # spherical Mercator radius, meters
 _D2R = np.pi / 180.0
+MAX_LAT = 85.05112877980659  # atan(sinh(pi)) — Web-Mercator clip latitude
+WORLD_BOUND = (-180.0, -MAX_LAT, 180.0, MAX_LAT)
 
 
 def mercator_x(lon):

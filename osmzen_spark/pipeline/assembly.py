@@ -44,9 +44,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from osmzen_spark.geom.derive import GEOMETRY_TYPE, _flat
-from osmzen_spark.geom.mercator import wgs84_position
-
-WORLD_BOUND = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
+from osmzen_spark.geom.mercator import WORLD_BOUND, wgs84_position
 
 # osm-polygon-features ruleset (the table osmgeojson follows): a closed
 # way with one of these tags is a Polygon. True = any value except

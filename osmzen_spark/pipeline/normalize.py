@@ -223,7 +223,6 @@ class NormalizeEngine:
         bound: tuple[float, float, float, float] | None = None,
         relation_members: DataFrame | None = None,
         way_nodes: DataFrame | None = None,
-        clip: bool = True,
     ) -> dict[str, DataFrame]:
         """Full pipeline; returns {layer_name: DataFrame} with tile
         columns (tile_z/tile_x/tile_y/cell) appended.
@@ -241,7 +240,7 @@ class NormalizeEngine:
            instead, so the join subtree is not duplicated into every
            layer branch and post-process self-join;
         4. per-layer views, transforms, post-processors, clip to the
-           padded ``bound`` (``clip=True``), tile assignment at
+           padded ``bound`` (when given), tile assignment at
            ``tile_zoom`` (default ``min(zoom, 16)``).
 
         With a bound, Point features outside it are dropped before eval
@@ -268,7 +267,7 @@ class NormalizeEngine:
                 df = df.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
             layers[n] = df
         layers = self.postprocess(layers, zoom, bound=bound)
-        if bound is not None and clip:
+        if bound is not None:
             # hard-wired final step for per-tile runs: clip geometry to
             # the (padded) bound and delete the raw-tags stash
             # (ref:process.go:115-122)

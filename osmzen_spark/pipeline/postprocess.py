@@ -11,31 +11,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmzen_spark.compiler.conditions import compile_condition
 from osmzen_spark.compiler.context import EvalContext
+from osmzen_spark.geom.mercator import MAX_LAT, WORLD_BOUND
 from osmzen_spark.pipeline.matcher import CSVMatcher
-
-WORLD_BOUND = (-180.0, -85.05112877980659, 180.0, 85.05112877980659)
-
-
-def maybe_broadcast(df: DataFrame) -> DataFrame:
-    """Size-gate for the post-process join hints.
-
-    Locally (and on any deployment where the derived side is known
-    small) the explicit broadcast hint skips a shuffle. At 10^9+
-    features the distinct-id / aggregate sides of these joins are
-    gigabytes, and a forced broadcast kills the driver — set the Spark
-    conf ``spark.osmzen.broadcastPostJoins=false`` for cluster runs:
-    the hint is dropped and AQE still converts to a broadcast join at
-    runtime whenever the actual size fits
-    ``autoBroadcastJoinThreshold``."""
-    flag = df.sparkSession.conf.get("spark.osmzen.broadcastPostJoins", "true")
-    if flag.lower() in ("0", "false", "no"):
-        return df
-    return F.broadcast(df)
 
 
 class PropertiesContext(EvalContext):
@@ -102,7 +84,7 @@ def set_conditional_names(layers: dict[str, DataFrame], zoom: int, params=None) 
         b = buildings
         hit = F.lit(False)
         for i, s in enumerate(srcs):
-            m = maybe_broadcast(
+            m = F.broadcast(
                 s.select(F.col("id").alias(f"__oid{i}"), F.col("type").alias(f"__otype{i}")).distinct()
             )
             b = b.join(
@@ -116,7 +98,7 @@ def set_conditional_names(layers: dict[str, DataFrame], zoom: int, params=None) 
         out["buildings"] = b
 
     if landuse is not None and pois is not None:
-        m = maybe_broadcast(_ids_of(pois))
+        m = F.broadcast(_ids_of(pois))
         l = landuse.join(
             m, (landuse["id"] == m["__oid"]) & (landuse["type"] == m["__otype"]), "left"
         )
@@ -168,7 +150,7 @@ def backfill_from_other_layer(layers, zoom, params):
     )
     dst = layers[dst_name]
     dst_col = F.col(dst_key) if dst_key in dst.columns else F.lit(None).cast("string")
-    joined = dst.join(maybe_broadcast(vals), dst["id"] == vals["__bid"], "left")
+    joined = dst.join(F.broadcast(vals), dst["id"] == vals["__bid"], "left")
     joined = joined.withColumn(dst_key, F.coalesce(dst_col, F.col("__backfill"))).drop(
         "__bid", "__backfill"
     )
@@ -471,7 +453,7 @@ def remove_duplicate_features(layers, zoom, params):
     import math as _math
 
     tx = int((lon0 + 180.0) / 360.0 * n)
-    lat_r = _math.radians(max(-85.05112877980659, min(85.05112877980659, lat0)))
+    lat_r = _math.radians(max(-MAX_LAT, min(MAX_LAT, lat0)))
     ty = int((1 - _math.log(_math.tan(lat_r) + 1 / _math.cos(lat_r)) / _math.pi) / 2.0 * n)
 
     def tile_center(x, y):
@@ -528,7 +510,7 @@ def remove_duplicate_features(layers, zoom, params):
         #      Arrow-batched mapInArrow (numpy-vectorized haversine
         #      against the kept set, so a 10^4-candidate group is
         #      ~10^8 SIMD flops, not 10^8 Python trips);
-        #   4) ANTI-join the dropped ids back (size-gated broadcast) —
+        #   4) ANTI-join the dropped ids back (broadcast) —
         #      the fact table is never reshuffled.
         pts_frames.append(
             layers[name].filter(eligible).select(
@@ -558,7 +540,7 @@ def remove_duplicate_features(layers, zoom, params):
         .select("__dk")
         .withColumn("__hot", F.lit(True))
     )
-    pts = pts.join(maybe_broadcast(hot), on="__dk", how="left")
+    pts = pts.join(F.broadcast(hot), on="__dk", how="left")
     group_key = F.when(
         F.col("__hot").isNotNull(),
         F.concat_ws("@", F.col("__dk"), F.col("__gx"), F.col("__gy")),
@@ -623,7 +605,7 @@ def remove_duplicate_features(layers, zoom, params):
     # every source layer anti-joins the same dropped-row frame; the
     # layer rank in the join condition keeps a pois row from being
     # dropped for a buildings row of the same (id, type)
-    dropped = maybe_broadcast(
+    dropped = F.broadcast(
         cands.select("__pts").mapInArrow(drop_ids, schema="__did long, __dtype string, __dlrank int")
     )
     out = dict(layers)
@@ -954,38 +936,6 @@ def _add_collision_rank(layers, zoom, params):
     return add_collision_rank(layers, zoom, params)
 
 
-def keep_n_features(layers, zoom, params):
-    """Per-tile feature cap — an ENGINE ADDITION: the reference
-    registers keep_n_features as a nil no-op (SURVEY §2.G; the Go port
-    compiles it away), but a tile server at scale needs the cap, so
-    this implements it for real. Keeps the ``n`` most important
-    features per zoom-``tile_zoom`` tile of ``source_layer``, ranked
-    by (min_zoom asc, sort_rank asc, collision_rank asc, id) — lower
-    min_zoom = more important, ties broken deterministically. One
-    window over the tile cell, i.e. one shuffle on the engine's
-    natural partition key; at 10^9 features per layer this is the
-    standard top-N-per-group plan (rank inside each tile partition,
-    no global sort)."""
-    from osmzen_spark.tiling.cells import tile_x_col, tile_y_col
-
-    name = params["source_layer"]
-    n = int(params["n"])
-    tz = int(params.get("tile_zoom", 10))
-    df = layers.get(name)
-    if df is None:
-        return layers
-    order = [
-        F.col(c).asc_nulls_last()
-        for c in ("min_zoom", "sort_rank", "collision_rank")
-        if c in df.columns
-    ] + [F.col("id").asc()]
-    w = Window.partitionBy(
-        tile_x_col(F.col("clon"), tz), tile_y_col(F.col("clat"), tz)
-    ).orderBy(*order)
-    out = df.withColumn("_kn", F.row_number().over(w)).filter(F.col("_kn") <= n).drop("_kn")
-    return {**layers, name: out}
-
-
 POSTPROCESSORS = {
     "road_networks": road_networks,
     "add_collision_rank": _add_collision_rank,
@@ -1001,8 +951,6 @@ POSTPROCESSORS = {
     "numeric_min_filter": numeric_min_filter,
     "remap": remap,
     "drop_names": drop_names,
-    # engine addition (nil no-op in the reference) — opt-in via config
-    "keep_n_features": keep_n_features,
 }
 
 # the configurable steps that read more than one layer: fn name -> the

@@ -254,34 +254,6 @@ def t_route_name(props, ctx, zoom):
     props["route_name"] = F.when(rn != F.coalesce(name, rn), rn)
 
 
-# default place min_zoom table (ref:transforms.go:326-350)
-_PLACE_DEFAULT_MZ = {
-    "locality": 13.0, "isolated_dwelling": 13.0, "farm": 13.0, "hamlet": 12.0,
-    "village": 11.0, "suburb": 10.0, "quarter": 10.0, "borough": 10.0,
-    "town": 8.0, "city": 8.0, "province": 4.0, "state": 4.0, "sea": 3.0,
-    "country": 0.0, "ocean": 0.0, "continent": 0.0,
-}
-
-
-def t_calculate_default_place_min_zoom(props, ctx, zoom):
-    """kind-keyed default min_zoom, capitals promoted (-1/-2); only when
-    min_zoom absent — effectively a no-op in the reference pipeline
-    where rule eval always sets min_zoom (ref:transforms.go:355-382)."""
-    if "min_zoom" not in props or "kind" not in props:
-        return
-    kind_mz = F.element_at(
-        F.create_map(*[F.lit(x) for kv in sorted(_PLACE_DEFAULT_MZ.items()) for x in kv]),
-        _get_s(props, "kind"),
-    )
-    is_city_town = props["kind"].isin("city", "town")
-    region_cap = props["region_capital"].isNotNull() if "region_capital" in props else F.lit(False)
-    country_cap = props["country_capital"].isNotNull() if "country_capital" in props else F.lit(False)
-    adjusted = kind_mz - F.when(is_city_town & region_cap, 1.0).when(
-        is_city_town & country_cap, 2.0
-    ).otherwise(0.0)
-    props["min_zoom"] = F.coalesce(props["min_zoom"], adjusted)
-
-
 def t_normalize_social_kind(props, ctx, zoom):
     """social_facility -> kind; social_facility:for split(';') -> detail
     (ref:transforms.go:510-528)."""
@@ -534,25 +506,7 @@ def t_tags_name_i18n(props, ctx, zoom):
         props[alt] = F.coalesce(existing, col) if existing is not None else col
 
 
-def t_noop(props, ctx, zoom):
-    pass
-
-
 TRANSFORMS: dict[str, Callable] = {
-    # intentional no-ops, matching the reference's nil registry entries
-    # (ref:transforms.go:28-40)
-    "tags_create_dict": t_noop,
-    "tags_remove": t_noop,
-    "add_id_to_properties": t_noop,
-    "remove_feature_id": t_noop,
-    "add_road_network_from_ncat": t_noop,
-    "remove_zero_area": t_noop,
-    "truncate_min_zoom_to_1dp": t_noop,
-    "truncate_min_zoom_to_2dp": t_noop,
-    "capital_alternate_viewpoint": t_noop,
-    "remap_viewpoint_kinds": t_noop,
-    "unpack_viewpoint_claims": t_noop,
-    "calculate_default_place_min_zoom": t_calculate_default_place_min_zoom,
     "parse_layer_as_float": t_parse_layer_as_float,
     "building_height": t_building_height,
     "building_min_height": t_building_min_height,

@@ -290,9 +290,9 @@ def mvt_tiles(
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from osmzen_spark.geom.derive import _flat
+    from osmzen_spark.geom.mercator import MAX_LAT
 
     n_tiles = 1 << zoom
-    max_lat = 85.05112877980659
     pcols = list(property_cols)
     out_schema = pa.schema(
         [
@@ -324,7 +324,7 @@ def mvt_tiles(
         # projection + quantization, all points at once (trunc toward
         # zero then clamp — identical to the scalar reference)
         xn = (xs + 180.0) / 360.0 * n_tiles - tx
-        rlat = np.radians(np.clip(ys, -max_lat, max_lat))
+        rlat = np.radians(np.clip(ys, -MAX_LAT, MAX_LAT))
         yn = (1.0 - np.log(np.tan(rlat) + 1.0 / np.cos(rlat)) / np.pi) / 2.0 * n_tiles
         yn -= ty
         gx = np.clip(np.trunc(xn * extent), 0, extent).astype(np.int64)

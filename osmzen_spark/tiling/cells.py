@@ -26,7 +26,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MAX_LAT = 85.05112877980659  # atan(sinh(pi)) — Web-Mercator clip latitude
+from osmzen_spark.geom.mercator import MAX_LAT
 
 
 def tile_x_col(lon: Column, z: int) -> Column:

@@ -7,6 +7,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osmzen_spark.session import get_spark  # noqa: E402
 
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+
+
+def perfbench_gen():
+    """perfbench/gen.py, the generated-city writer. It imports its
+    sibling pbf.py, so perfbench/ is on sys.path only while it loads:
+    left there, `tests` would resolve to perfbench/tests/."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.syspath_prepend(PERFBENCH)
+        import gen
+    return gen
+
 
 @pytest.fixture(scope="session")
 def spark():

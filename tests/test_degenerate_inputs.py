@@ -264,3 +264,76 @@ def test_geojson_vertices_outside_wgs84(spark, tmp_path):
     feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
     assert sorted(f["id"] for f in feats) == [6, 10]
     assert all(t["tile_y"] > 0 for t in tiles)
+
+
+def test_unclosed_rings_through_the_whole_pipeline(spark, tmp_path):
+    """PBF -> assembly -> normalize -> MVT over a building way whose
+    last node is not its first and a water multipolygon whose two outer
+    ways do not meet. The open building way is a LineString, which the
+    buildings layer does not take, so it is no feature. The relation's
+    outer cannot be stitched closed, so it gets the reference's patch
+    ring, the padded bound (ref:process.go:317-331). A closed building
+    beside them comes through, and every polygon ring written is
+    closed."""
+    from osmzen_spark.pipeline.assembly import assemble_elements
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+    from osmzen_spark.sinks.mvt import mvt_tiles
+    from osmzen_spark.tiling.cells import tile_bound
+
+    bound = tile_bound(16, 17896, 24450)
+    minx, miny, maxx, maxy = bound
+
+    def at(fx, fy):
+        return minx + (maxx - minx) * fx, miny + (maxy - miny) * fy
+
+    corners = [(0.2, 0.2), (0.4, 0.2), (0.4, 0.4), (0.2, 0.4)]
+    nodes = [(i + 1, *at(fx, fy), {}) for i, (fx, fy) in enumerate(corners)]
+    nodes += [(i + 11, *at(fx + 0.4, fy + 0.4), {}) for i, (fx, fy) in enumerate(corners)]
+    nodes += [(21, *at(0.1, 0.6), {}), (22, *at(0.3, 0.6), {}), (23, *at(0.3, 0.8), {})]
+    nodes += [(24, *at(0.2, 0.9), {}), (25, *at(0.1, 0.9), {})]
+    building = {"building": "yes"}
+    ways = [
+        (301, building, [1, 2, 3, 4]),  # open: last node is not the first
+        (302, building, [11, 12, 13, 14, 11]),  # closed
+        (401, {}, [21, 22, 23]),
+        (402, {}, [24, 25]),  # shares no end node with 401
+    ]
+    water = {"type": "multipolygon", "natural": "water"}
+    relations = [(900, water, [("way", 401, "outer"), ("way", 402, "outer")])]
+    path = os.path.join(tmp_path, "unclosed.osm.pbf")
+    with open(path, "wb") as f:
+        f.write(encode_pbf(nodes, ways, relations))
+    t = read_osm_pbf(spark, path)
+    elements = assemble_elements(t.nodes, t.way_nodes, t.ways, t.relations, t.relation_members, bound=bound)
+    got = {r["element_id"]: r for r in elements.collect()}
+    assert {k: r["geom_type"] for k, r in got.items()} == {301: "LineString", 302: "Polygon", 900: "Polygon"}
+    patch = got[900]["geometry"]
+    assert list(patch["ring_lens"]) == [5] and list(patch["ring_roles"]) == [0]
+    assert min(patch["xs"]) < minx and max(patch["ys"]) > maxy  # the padded bound
+
+    engine = NormalizeEngine()
+    try:
+        layers = engine.process(elements, zoom=16, bound=bound, cache=True)
+        dfs = list(layers.values())
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df, allowMissingColumns=True)
+        rows = union.select("zen_layer", "id", "geom_type", "geometry").collect()
+        tiles = mvt_tiles(union, zoom=16).collect()
+    finally:
+        engine.release()
+    assert sorted((r["zen_layer"], r["id"], r["geom_type"]) for r in rows) == [
+        ("buildings", 302, "Polygon"),
+        ("water", -900, "Polygon"),
+    ]
+    for r in rows:
+        g, start = r["geometry"], 0
+        for n in g["ring_lens"]:
+            ring = list(zip(g["xs"][start : start + n], g["ys"][start : start + n]))
+            assert n >= 4 and ring[0] == ring[-1], (r["id"], ring)
+            start += n
+    assert [(t["tile_x"], t["tile_y"]) for t in tiles] == [(17896, 24450)]
+    feats = [f for t in tiles for layer in decode_tile(bytes(t["mvt"])).values() for f in layer["features"]]
+    assert sorted((f["id"], f["geom_type"]) for f in feats) == [(302, "Polygon"), (900, "Polygon")]
+    for f in feats:
+        assert f["rings"] and all(len(ring) >= 4 and ring[0] == ring[-1] for ring in f["rings"])

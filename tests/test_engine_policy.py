@@ -6,8 +6,9 @@ at most once and release() frees those cuts too, the compiled rule
 payload is built once per engine config,
 Catalyst runs the engine's plans interpreted (no generated Java), the
 package reads no environment switch beyond the documented ones, every
-module of the package is reachable from an engine entry point, and
-every top-level function or class has a caller outside the tests."""
+module of the package is reachable from an engine entry point, every
+top-level function, class and method has a caller outside the tests,
+and every registry entry is named by the shipped config."""
 
 import ast
 import os
@@ -31,8 +32,6 @@ ENTRY_MODULES = (
     "sources.osmxml",
     "sources.geojson",
     "sinks.mvt",
-    "tiling.pip",
-    "tiling.knn",
     "compiler.loader",
     "lineage",
     "session",
@@ -44,9 +43,8 @@ CALLER_DIRS = ("perfbench", "scripts")
 
 # public entry points that only tests call today: the reference's
 # user-facing calls (a full tile from OSM XML or PBF, GeoJSON in and
-# out, a tile's bound), the driver-side geometry builders for
-# callers that bring their own rings, and the point-in-polygon and kNN
-# joins with kNN's exact reference. The list must stay exact, so
+# out, a tile's bound) and the geometry constructors for
+# callers that bring their own rings. The list must stay exact, so
 # nothing new joins it unnoticed.
 API_ALLOWED = {
     "sources/osmxml.py::full_tile",
@@ -58,9 +56,14 @@ API_ALLOWED = {
     "tiling/cells.py::tile_bound",
     "geom/derive.py::geometry_from_rings",
     "geom/derive.py::point_geometry",
-    "tiling/pip.py::point_in_polygon_join",
-    "tiling/knn.py::knn_join",
-    "tiling/knn.py::knn_bruteforce",
+}
+
+# methods that only tests call: the Column when-chain evaluator, the
+# test oracle of the Arrow rule pass, and the reference's
+# ProcessElement fixture API. Exact, like API_ALLOWED.
+METHOD_ALLOWED = {
+    "compiler/layer.py::CompiledLayer.evaluate",
+    "pipeline/normalize.py::NormalizeEngine.process_element",
 }
 
 # the pandas-exchanging UDF entry points: the DataFrame methods and the
@@ -324,12 +327,20 @@ def _reads(nodes, module: str, bound: dict[str, str]) -> set[str]:
     return out
 
 
+def _attrs(node) -> Counter:
+    """How often each attribute name is read or called under node."""
+    return Counter(n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute))
+
+
 def test_every_definition_has_a_caller():
     """Every top-level function or class of the package is read by
     package code or by CALLER_DIRS, apart from the exact API_ALLOWED
     list; its own body, tests and __init__ re-exports do not count.
     References follow imports, so a same-named function elsewhere is
-    not a use."""
+    not a use. Every method of a package class, dunders aside, is
+    read as an attribute of that name outside its own body, apart
+    from the exact METHOD_ALLOWED list; methods are matched by name
+    only, so any `.name` read counts."""
     root = os.path.dirname(PACKAGE)
     files = list(_py_files(PACKAGE)) + [p for d in CALLER_DIRS for p in _py_files(os.path.join(root, d))]
     trees = {}
@@ -374,10 +385,81 @@ def test_every_definition_has_a_caller():
                 continue
             if not any(name in r for p, r in reads.items() if p != path):
                 uncalled.add(f"{os.path.relpath(path, PACKAGE)}::{node.name}")
-    unexpected = sorted(uncalled - API_ALLOWED)
+
+    attrs = sum((_attrs(tree) for tree in trees.values()), Counter())
+    for path in _py_files(PACKAGE):
+        for cls in ast.walk(trees[path]):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            for node in cls.body:
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                if node.name.startswith("__") and node.name.endswith("__"):
+                    continue
+                if attrs[node.name] == _attrs(node)[node.name]:
+                    uncalled.add(f"{os.path.relpath(path, PACKAGE)}::{cls.name}.{node.name}")
+
+    allowed = API_ALLOWED | METHOD_ALLOWED
+    unexpected = sorted(uncalled - allowed)
     assert not unexpected, f"definitions only tests call: {unexpected}"
-    stale = sorted(API_ALLOWED - uncalled)
-    assert not stale, f"API_ALLOWED names called or deleted definitions: {stale}"
+    stale = sorted(allowed - uncalled)
+    assert not stale, f"API_ALLOWED/METHOD_ALLOWED name called or deleted definitions: {stale}"
+
+
+def _called_functions(node) -> set[str]:
+    """The `call: {func: ...}` names anywhere in a rule tree."""
+    if isinstance(node, list):
+        return set().union(*map(_called_functions, node))
+    if not isinstance(node, dict):
+        return set()
+    out = set().union(*map(_called_functions, node.values()))
+    call = node.get("call")
+    if isinstance(call, dict):
+        out.add(call["func"])
+    return out
+
+
+def _func_literals(tree) -> set[str]:
+    """The string literals `_compile_call` compares `func` against."""
+    fn = next(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == "_compile_call")
+    return {
+        c.value
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Compare) and isinstance(node.left, ast.Name) and node.left.id == "func"
+        for cmp in node.comparators
+        for c in ast.walk(cmp)
+        if isinstance(c, ast.Constant) and isinstance(c.value, str)
+    }
+
+
+def test_every_registry_entry_is_configured():
+    """Each entry of the name-keyed registries is named by the shipped
+    config: a TRANSFORMS key by a layer's `transform:` list, a
+    POSTPROCESSORS key by an `fn:` of engine.yaml, a FUNCTIONS key by a
+    `call` in some layer rule. The Arrow evaluator's `_compile_call`
+    handles exactly the FUNCTIONS keys, so it and its Column oracle
+    share one function set, and its type tables name only those."""
+    from osmzen_spark.compiler.arrow_layer import _BOOL_FUNCS, _NUM_FUNCS
+    from osmzen_spark.compiler.functions import FUNCTIONS
+    from osmzen_spark.compiler.loader import load_config
+    from osmzen_spark.pipeline.postprocess import POSTPROCESSORS
+    from osmzen_spark.pipeline.transforms import TRANSFORMS
+
+    cfg = load_config()
+    layers = cfg.layers.values()
+    unnamed = set(TRANSFORMS) - {t for layer in layers for t in layer.transforms}
+    assert not unnamed, f"transforms no layer names: {sorted(unnamed)}"
+    unrun = set(POSTPROCESSORS) - {step.fn for step in cfg.postprocess}
+    assert not unrun, f"post-processors engine.yaml never runs: {sorted(unrun)}"
+    functions = set(FUNCTIONS)
+    uncalled = functions - _called_functions([[r.when, r.min_zoom, r.emit] for l in layers for r in l.rules])
+    assert not uncalled, f"functions no rule calls: {sorted(uncalled)}"
+
+    path = os.path.join(PACKAGE, "compiler", "vectorized.py")
+    with open(path) as fh:
+        literals = _func_literals(ast.parse(fh.read(), path))
+    assert literals == functions, ("_compile_call only", literals - functions, "FUNCTIONS only", functions - literals)
+    assert _NUM_FUNCS | _BOOL_FUNCS <= functions, sorted((_NUM_FUNCS | _BOOL_FUNCS) - functions)
 
 
 def _udf_names(node) -> list[str]:

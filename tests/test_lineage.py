@@ -110,7 +110,7 @@ def test_engine_lineage_mode_resumes(spark, tmp_path, monkeypatch):
     recomputing it (stage data files untouched) — the north rule's
     kill-resume at stage granularity, identical output rows. The eval
     union is written partitioned by zen_layer."""
-    from tests.conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
+    from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
 
     monkeypatch.setenv("OSMZEN_CHECKPOINT_DIR", str(tmp_path))
     from osmzen_spark.pipeline.normalize import NormalizeEngine

@@ -1,9 +1,9 @@
 """DuckDB oracles for the engine core.
 
 Each entry of ``QUERIES`` runs one slice of the engine on Spark: tile
-assignment, point-in-polygon and kNN joins, membership joins, the
-buildings rule chain (from elements and from raw node/way tables), the
-per-tile cap, the MVT sink, the three sources and a payload ride-through.
+assignment, membership joins, the buildings rule chain (from elements
+and from raw node/way tables), the MVT sink, the three sources and a
+payload ride-through.
 Its twin in ``ORACLES`` re-derives the same rows in DuckDB SQL straight
 from the sf* parquet tables (TESTDATA.md), without the engine.
 
@@ -34,11 +34,10 @@ from synthetic import (
     synthetic_raw_buildings,
 )
 
-TABLES = ("customer", "supplier", "orders", "lineitem")
+TABLES = ("customer", "orders", "lineitem")
 
-# the tiling joins run on the larger table: at sf0.001 no customer point
-# falls inside a supplier rectangle, so point_in_polygon would be empty
-TILING_QUERIES = ("tile_assign", "point_in_polygon", "knn")
+# tile assignment runs on the larger table
+TILING_QUERIES = ("tile_assign",)
 
 
 # ---------------------------------------------------------------- inputs
@@ -161,55 +160,6 @@ def q_tile_assign(spark, sf_dir):
     )
 
 
-def q_point_in_polygon(spark, sf_dir):
-    """PIP spatial join: customer points in supplier rectangles (cell
-    prefilter + exact vectorized ray-cast). Oracle: bbox containment
-    (exact for axis-aligned rectangles)."""
-    from osmzen_spark.tiling.pip import point_in_polygon_join
-
-    pts = _customer_points(spark, sf_dir)
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    half_lon = (F.pmod(F.col("s_suppkey"), F.lit(80)) + 10) / 10.0 + 0.00000049
-    half_lat = (F.pmod(F.col("s_suppkey"), F.lit(60)) + 10) / 12.0 + 0.00000049
-    cx = F.pmod(F.col("s_suppkey") * 2654435761, F.lit(320000000)) / 1000000.0 - 160.0
-    cy = F.pmod(F.col("s_suppkey") * 2246822519, F.lit(130000000)) / 1000000.0 - 65.0
-    polys = s.select(
-        F.col("s_suppkey").alias("poly_id"),
-        F.struct(
-            F.array(cx - half_lon, cx + half_lon, cx + half_lon, cx - half_lon, cx - half_lon).alias("xs"),
-            F.array(cy - half_lat, cy - half_lat, cy + half_lat, cy + half_lat, cy - half_lat).alias("ys"),
-            F.array(F.lit(5)).alias("ring_lens"),
-            F.array(F.lit(0)).alias("ring_roles"),
-        ).alias("geometry"),
-    )
-    joined = point_in_polygon_join(pts, polys, z=4, lon="lon", lat="lat")
-    return (
-        joined.groupBy("poly_id")
-        .agg(F.count("*").alias("n_inside"), F.sum("id").cast("long").alias("sum_ids"))
-        .orderBy("poly_id")
-    )
-
-
-def q_knn(spark, sf_dir):
-    """kNN via cell-ring expansion: 3 nearest customers for a grid of
-    query points; exactness checked against the window-over-haversine
-    oracle."""
-    from osmzen_spark.tiling.knn import knn_join
-
-    pts = _customer_points(spark, sf_dir)
-    queries = spark.range(1, 9).select(
-        F.col("id"),
-        (F.col("id") * 40.0 - 180.0 + 20.0).alias("lon"),
-        (F.col("id") * 15.0 - 70.0).alias("lat"),
-    )
-    res = knn_join(queries, pts, k=3, z=3, ring=2)
-    return res.select(
-        F.col("q_id").alias("query_id"),
-        F.col("p_id").alias("point_id"),
-        F.col("knn_rank").cast("int").alias("knn_rank"),
-    )
-
-
 def q_route_networks(spark, sf_dir):
     """Relation-membership joins (ref:filter/functions.go:161-383):
     bicycle-network resolution, bus-route flag, and path-major-route
@@ -264,31 +214,6 @@ def q_assemble_buildings(spark, sf_dir):
     # re-execute the node join + seq-sorted collect once per consumer
     elements = assemble_elements(nodes, way_nodes, ways).localCheckpoint(eager=True)
     return _building_rows(_buildings(elements))
-
-
-def q_keep_n_features(spark, sf_dir):
-    """Per-tile feature cap (postprocess.keep_n_features): the
-    normalized buildings layer capped to the 5 most important features
-    per z10 tile, importance = (min_zoom asc, id asc). The slice is
-    projected to exactly those rank columns before the cap (the operator
-    ranks on whatever of min_zoom / sort_rank / collision_rank the frame
-    carries), so the oracle's QUALIFY ROW_NUMBER over the same tile
-    partition and order re-derives the identical cut."""
-    from osmzen_spark.pipeline.postprocess import keep_n_features
-    from osmzen_spark.tiling.cells import tile_x_col, tile_y_col
-
-    b = _buildings(synthetic_elements(spark, sf_dir))
-    b = b.select("id", "kind", "min_zoom", "clon", "clat")
-    capped = keep_n_features(
-        {"buildings": b}, 20, {"source_layer": "buildings", "n": 5, "tile_zoom": 10}
-    )["buildings"]
-    return capped.select(
-        "id",
-        "kind",
-        "min_zoom",
-        tile_x_col(F.col("clon"), 10).alias("tile_x"),
-        tile_y_col(F.col("clat"), 10).alias("tile_y"),
-    ).orderBy("tile_x", "tile_y", "min_zoom", "id")
 
 
 def q_mvt_tiles(spark, sf_dir):
@@ -433,13 +358,10 @@ def q_payload_normalize_tile(spark, sf_dir):
 
 QUERIES = {
     "tile_assign": q_tile_assign,
-    "point_in_polygon": q_point_in_polygon,
-    "knn": q_knn,
     "route_networks": q_route_networks,
     "gate_min_zoom": q_gate_min_zoom,
     "normalize_buildings": q_normalize_buildings,
     "assemble_buildings": q_assemble_buildings,
-    "keep_n_features": q_keep_n_features,
     "mvt_tiles": q_mvt_tiles,
     "geojson_roundtrip": q_geojson_roundtrip,
     "osmxml_roundtrip": q_osmxml_roundtrip,
@@ -565,40 +487,6 @@ ORACLES = {
                COUNT(*) AS n_points
         FROM pts GROUP BY 1, 2
     """,
-    "point_in_polygon": f"""
-        WITH pts AS ({CUSTOMER_POINTS_SQL}), rects AS (
-          SELECT s_suppkey AS poly_id,
-                 (s_suppkey * 2654435761) % 320000000 / 1000000.0 - 160.0 AS cx,
-                 (s_suppkey * 2246822519) % 130000000 / 1000000.0 - 65.0  AS cy,
-                 ((s_suppkey % 80) + 10) / 10.0 + 0.00000049 AS half_lon,
-                 ((s_suppkey % 60) + 10) / 12.0 + 0.00000049 AS half_lat
-          FROM supplier
-        )
-        SELECT poly_id, COUNT(*) AS n_inside, CAST(SUM(id) AS BIGINT) AS sum_ids
-        FROM pts JOIN rects
-          ON pts.lon > rects.cx - rects.half_lon AND pts.lon < rects.cx + rects.half_lon
-         AND pts.lat > rects.cy - rects.half_lat AND pts.lat < rects.cy + rects.half_lat
-        GROUP BY poly_id ORDER BY poly_id
-    """,
-    "knn": f"""
-        WITH pts AS ({CUSTOMER_POINTS_SQL}), q AS (
-          SELECT i AS id, i * 40.0 - 160.0 AS lon, i * 15.0 - 70.0 AS lat
-          FROM generate_series(1, 8) AS t(i)
-        ), d AS (
-          SELECT q.id AS query_id, pts.id AS point_id,
-                 2.0 * 6371000.0 * ASIN(LEAST(1.0, SQRT(
-                   POW(SIN((RADIANS(pts.lat) - RADIANS(q.lat)) / 2), 2)
-                   + COS(RADIANS(q.lat)) * COS(RADIANS(pts.lat))
-                     * POW(SIN((RADIANS(pts.lon) - RADIANS(q.lon)) / 2), 2)
-                 ))) AS dist
-          FROM q CROSS JOIN pts
-        )
-        SELECT query_id, point_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY dist ASC, point_id ASC) AS INT) AS knn_rank
-        FROM d
-        QUALIFY knn_rank <= 3
-    """,
     "route_networks": """
         SELECT o_orderkey + 10000000000 AS way_id,
                CASE WHEN o_orderkey % 3 = 0
@@ -631,18 +519,6 @@ ORACLES = {
     """,
     "normalize_buildings": NORMALIZE_BUILDINGS_SQL,
     "assemble_buildings": NORMALIZE_BUILDINGS_SQL,
-    # same tile partition and (min_zoom, id) order as the Spark window in
-    # postprocess.keep_n_features; duplicate label rows are identical in
-    # every ranked column, so the cut multiset is order-independent
-    "keep_n_features": f"""
-        WITH nb AS ({NORMALIZE_BUILDINGS_SQL})
-        SELECT id, kind, min_zoom, tile_x, tile_y
-        FROM nb
-        QUALIFY ROW_NUMBER() OVER (
-          PARTITION BY tile_x, tile_y ORDER BY min_zoom ASC, id ASC
-        ) <= 5
-        ORDER BY tile_x, tile_y, min_zoom, id
-    """,
     "mvt_tiles": f"""
         WITH nb AS ({NORMALIZE_BUILDINGS_SQL})
         SELECT tile_x, tile_y, CAST(COUNT(*) AS INT) AS n_features

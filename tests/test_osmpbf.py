@@ -18,6 +18,7 @@ from osmzen_spark.sources.osmpbf import (
     unzigzag,
 )
 
+from conftest import perfbench_gen
 from synthetic import write_osm_xml
 from tests_util_pbf import _encode_varint, _zigzag, encode_pbf
 
@@ -232,12 +233,9 @@ def test_pbf_matches_xml_on_generated_city(spark, tmp_path):
     """PBF and XML of the same generated city parse to identical raw
     tables: ids, tags, way refs and relation members exactly, node
     coordinates on the 1e-7 degree grid both formats carry."""
-    import sys
-
     from osmzen_spark.sources.osmxml import read_osm_xml
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
-    import gen
+    gen = perfbench_gen()
 
     city = gen.City(3, n_buildings=80, n_roads=120, n_pois=60, n_routes=3)
     xml_path = os.path.join(tmp_path, "city.osm")

@@ -11,7 +11,6 @@ written as OSM XML) otherwise. The checks tied to the tile's content
 the file is absent."""
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from osmzen_spark.pipeline.normalize import NormalizeEngine
 from osmzen_spark.sources.osmxml import full_tile, parse_osm_xml, read_osm_xml
 from osmzen_spark.tiling.cells import tile_bound
 
+from conftest import perfbench_gen
 from synthetic import write_osm_xml
 
 FIXTURE = "/root/reference/testdata/tile-16-17896-24450.xml"
@@ -34,8 +34,7 @@ def xml_path(tmp_path_factory):
     written as OSM XML."""
     if os.path.exists(FIXTURE):
         return FIXTURE
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
-    import gen
+    gen = perfbench_gen()
 
     city = gen.City(3, n_buildings=80, n_roads=120, n_pois=60, n_routes=3)
     path = str(tmp_path_factory.mktemp("osmxml") / "city.osm")

@@ -1,10 +1,9 @@
 """ProcessElement preference-order semantics (ref:process.go:28-69) and
-the scale-safety escape hatches: hot-key-bounded dedup and
-broadcast-hint-free post-process joins."""
+the scale-safety escape hatch of hot-key-bounded dedup."""
 
 import pyspark.sql.functions as F
 
-from osmzen_spark.geom.derive import geometry_from_rings, point_geometry
+from osmzen_spark.geom.derive import geometry_from_rings
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
 from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
@@ -45,37 +44,6 @@ def test_process_element_preference_order(spark):
     assert by_id[5]["zen_layer"] == "roads"
     for r in out:
         assert r["label_placement"] is None  # original feature, not the label twin
-
-
-def test_flagship_with_broadcasts_disabled(spark):
-    """The size-gated broadcast escape hatch: the whole pipeline still
-    produces identical results with every post-process broadcast hint
-    dropped (the 10^9-feature configuration, where AQE decides)."""
-    elements = make_elements(
-        spark,
-        [
-            (1, "way", PARKING_GARAGE_TAGS, "Polygon",
-             geometry_from_rings([PARKING_GARAGE_RING], "Polygon")),
-            (2, "way", {"building": "yes", "building:levels": "3", "name": "T"}, "Polygon", SQ),
-            (3, "node", {"shop": "supermarket", "name": "S"}, "Point", point_geometry(1.0, 2.0)),
-        ],
-    )
-    engine = NormalizeEngine()
-    def snap(rows):
-        out = {}
-        for r in rows:
-            d = r.asDict()
-            out[(d["id"], d["zen_layer"], d.get("label_placement"))] = (
-                d["kind"], d["min_zoom"], d.get("name"))
-        return out
-
-    baseline = snap(engine.process_unioned(elements, zoom=20).collect())
-    spark.conf.set("spark.osmzen.broadcastPostJoins", "false")
-    try:
-        gated = snap(engine.process_unioned(elements, zoom=20).collect())
-    finally:
-        spark.conf.unset("spark.osmzen.broadcastPostJoins")
-    assert baseline == gated
 
 
 def test_dedup_hot_key_bounded(spark):

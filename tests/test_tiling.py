@@ -1,13 +1,9 @@
 """Tiling core tests: Morton cells and tile math, checked against a
-pure-Python Morton oracle; PIP, kNN vs brute force."""
-
-import numpy as np
+pure-Python Morton oracle."""
 
 from pyspark.sql import functions as F
 
 from osmzen_spark.tiling.cells import tile_x_col, tile_y_col, with_tile
-from osmzen_spark.tiling.knn import knn_bruteforce, knn_join
-from osmzen_spark.tiling.pip import point_in_polygon_join, ray_cast
 
 
 # ------------------------------------------------ pure-Python Morton oracle
@@ -83,67 +79,6 @@ def test_reference_tile_assignment(spark):
         tile_x_col(F.col("lon"), 16).alias("x"), tile_y_col(F.col("lat"), 16).alias("y")
     ).collect()[0]
     assert (row["x"], row["y"]) == (17896, 24450)
-
-
-def test_ray_cast_unit():
-    # unit square with a hole in the middle
-    xs = np.array([0, 4, 4, 0, 0, 1, 3, 3, 1, 1], dtype=float)
-    ys = np.array([0, 0, 4, 4, 0, 1, 1, 3, 3, 1], dtype=float)
-    # three pairs against the same polygon buffers
-    px = np.array([0.5, 2.0, 5.0])
-    py = np.array([0.5, 2.0, 5.0])
-    xs3 = np.tile(xs, 3)
-    ys3 = np.tile(ys, 3)
-    pt_off = np.array([0, 10, 20, 30])
-    rl = np.array([5, 5] * 3)
-    ring_off = np.array([0, 2, 4, 6])
-    inside = ray_cast(px, py, xs3, ys3, pt_off, rl, ring_off)
-    assert inside.tolist() == [True, False, False]  # in ring, in hole, outside
-
-
-def test_pip_join(spark):
-    pts = spark.createDataFrame(
-        [(1, 0.5, 0.5), (2, 10.0, 10.0), (3, -0.5, 0.5)], "id long, lon double, lat double"
-    )
-    polys = spark.createDataFrame(
-        [
-            (
-                100,
-                {
-                    "xs": [0.0, 1.0, 1.0, 0.0, 0.0],
-                    "ys": [0.0, 0.0, 1.0, 1.0, 0.0],
-                    "ring_lens": [5],
-                    "ring_roles": [0],
-                },
-            )
-        ],
-        "poly_id long, geometry struct<xs:array<double>,ys:array<double>,ring_lens:array<int>,ring_roles:array<int>>",
-    )
-    res = point_in_polygon_join(pts, polys, z=8).select("id", "poly_id").collect()
-    assert [(r["id"], r["poly_id"]) for r in res] == [(1, 100)]
-
-
-def test_knn_matches_bruteforce(spark):
-    import random
-
-    rnd = random.Random(7)
-    pts = spark.createDataFrame(
-        [(i, rnd.uniform(-20, 20), rnd.uniform(-20, 20)) for i in range(300)],
-        "id long, lon double, lat double",
-    )
-    queries = spark.createDataFrame(
-        [(i, rnd.uniform(-15, 15), rnd.uniform(-15, 15)) for i in range(5)],
-        "id long, lon double, lat double",
-    )
-    exact = {
-        (r["q_id"], r["knn_rank"]): r["p_id"]
-        for r in knn_bruteforce(queries, pts, k=3).collect()
-    }
-    approx = {
-        (r["q_id"], r["knn_rank"]): r["p_id"]
-        for r in knn_join(queries, pts, k=3, z=5, ring=2).collect()
-    }
-    assert exact == approx
 
 
 def test_tile_partitioned_sink_prunes_scan(spark, tmp_path):
